@@ -311,9 +311,9 @@ def q_commitlog_append(spark, sf_dir):
     shutil.rmtree(root, ignore_errors=True)
     log = CommittedLog(root)
     # the two sequential appends (even event_ids = version 0, odd =
-    # version 1) fused into ONE job chain (append_batches, round 11,
-    # guide §1.2): one localCheckpoint + one counts agg + one
-    # window+write instead of two of each. Batch order/column make the
+    # version 1) fused into ONE job chain (append_batches): one
+    # window+write instead of two, with each version's counts read from
+    # the staged parquet footers. Batch order/column make the
     # assignment identical — within a partition the window orders by
     # (parity, event_id), so even rows take offsets 0..n_even-1 and odd
     # rows continue from there, exactly what the two appends assigned;

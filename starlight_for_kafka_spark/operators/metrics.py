@@ -18,6 +18,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from starlight_for_kafka_spark.plans.local import local_frame
+
 
 def throughput_metrics(log: DataFrame, bucket: str = "hour") -> DataFrame:
     """BYTES_IN / MESSAGE_IN per (time bucket, partition) — the reference's
@@ -117,8 +119,8 @@ def prom_histogram(
             else df.limit(1).select()
         )
         .crossJoin(
-            df.sparkSession.createDataFrame(
-                [(b,) for b in bs + [float("inf")]], "le double"
+            local_frame(
+                df.sparkSession, [(b,) for b in bs + [float("inf")]], "le double"
             )
         )
     )
@@ -158,8 +160,10 @@ def cumulative_from_sparse(
             if group_cols
             else counts.limit(1).select()
         ).crossJoin(
-            counts.sparkSession.createDataFrame(
-                [(b,) for b in bs + [float("inf")]], "le double"
+            local_frame(
+                counts.sparkSession,
+                [(b,) for b in bs + [float("inf")]],
+                "le double",
             )
         )
     )
@@ -210,7 +214,7 @@ def histogram_quantile(
         .filter(F.col("__total") > 0)
     )
     probes = h.crossJoin(
-        hist.sparkSession.createDataFrame([(float(q),) for q in qs], "q double")
+        local_frame(hist.sparkSession, [(float(q),) for q in qs], "q double")
     ).withColumn("__target", F.col("q") * F.col("__total"))
     chosen = (
         probes.filter(F.col("cum") >= F.col("__target"))

@@ -20,6 +20,8 @@ import json
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from starlight_for_kafka_spark.plans.local import local_frame
+
 SUBJECT_SCHEMA = "subject string, version int, id int, type string, definition string"
 
 MAGIC_BYTE = b"\x00"
@@ -269,7 +271,7 @@ def check_compatibility(
 
 
 def create_registry(spark: SparkSession, rows: list | None = None) -> DataFrame:
-    return spark.createDataFrame(rows or [], SUBJECT_SCHEMA)
+    return local_frame(spark, rows or [], SUBJECT_SCHEMA)
 
 
 # --------------------------------------------------------------------- #
@@ -288,7 +290,7 @@ _VALID_MODES = {
 def create_config(spark: SparkSession, rows: list | None = None) -> DataFrame:
     """The compat-config dimension table: one (subject, compatibility) row
     per configured subject. Subjects without a row resolve to NONE."""
-    return spark.createDataFrame(rows or [], CONFIG_SCHEMA)
+    return local_frame(spark, rows or [], CONFIG_SCHEMA)
 
 
 def set_compatibility(config: DataFrame, subject: str, mode: str) -> DataFrame:
@@ -298,7 +300,7 @@ def set_compatibility(config: DataFrame, subject: str, mode: str) -> DataFrame:
     if mode not in _VALID_MODES:
         raise ValueError(f"unknown compatibility mode: {mode}")
     spark = config.sparkSession
-    new_row = spark.createDataFrame([(subject, mode)], CONFIG_SCHEMA)
+    new_row = local_frame(spark, [(subject, mode)], CONFIG_SCHEMA)
     return config.filter(F.col("subject") != subject).unionByName(new_row)
 
 
@@ -388,8 +390,8 @@ def register_schema(
     # version - breaking delete_version's never-reused contract
     next_version = max((r.version for r in rows), default=0) + 1
     next_id = (registry.agg(F.coalesce(F.max("id"), F.lit(0))).first()[0] or 0) + 1
-    new_row = spark.createDataFrame(
-        [(subject, next_version, next_id, schema_type, checked)], SUBJECT_SCHEMA
+    new_row = local_frame(
+        spark, [(subject, next_version, next_id, schema_type, checked)], SUBJECT_SCHEMA
     )
     return registry.unionByName(new_row)
 

@@ -16,6 +16,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from starlight_for_kafka_spark.functions.vectors import cosine_similarity
+from starlight_for_kafka_spark.plans.local import local_frame
 
 
 def brute_force_top_k(
@@ -118,7 +119,7 @@ def lsh_top_k(
     if n_planes is None:
         n_planes = auto_plane_count(embeddings.count(), target_bucket)
     qb = (
-        spark.createDataFrame([(query_vec,)], f"{vec_col} array<float>")
+        local_frame(spark, [(query_vec,)], f"{vec_col} array<float>")
         .select(hyperplane_bucket(F.col(vec_col), n_planes).alias("b"))
         .first()
         .b
@@ -659,7 +660,7 @@ def ann_recall(
         for r in qrows
     ]
     spark = embeddings.sparkSession
-    qcells = spark.createDataFrame(probe_cells, "qid bigint, __cells array<int>")
+    qcells = local_frame(spark, probe_cells, "qid bigint, __cells array<int>")
     assigned = ivf_assign(x, centroids, id_col, "__x")
     ivf = top_k(
         assigned.join(F.broadcast(queries))
@@ -917,7 +918,7 @@ def pq_recall(
         for j in range(m):
             for c, val in enumerate(lut[j]):
                 lut_rows.append((int(qid), j, c, float(val)))
-    lut_df = spark.createDataFrame(lut_rows, "qid long, j int, c int, lv double")
+    lut_df = local_frame(spark, lut_rows, "qid long, j int, c int, lv double")
 
     queries = x.filter(F.col(id_col).isin(query_ids)).select(
         F.col(id_col).alias("qid"), F.col("x").alias("qv")
@@ -956,9 +957,7 @@ def pq_recall(
     # LEFT join from the query set: a codebook so bad that exact and ADC
     # top-k share nothing must report recall 0, not silently drop the
     # query (same contract as quantization_recall)
-    all_q = spark.createDataFrame(
-        [(int(q),) for q in sorted(qvecs)], "qid long"
-    )
+    all_q = local_frame(spark, [(int(q),) for q in sorted(qvecs)], "qid long")
     return (
         all_q.join(counts, "qid", "left")
         .withColumn("n_hits", F.coalesce("n_hits", F.lit(0)))

@@ -20,6 +20,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from starlight_for_kafka_spark.functions.hashing import md5_hash64, word_shingles
+from starlight_for_kafka_spark.plans.local import local_frame
 
 # tiny per-language stopword markers for the n-gram/stopword heuristic
 _LANG_MARKERS: dict[str, list[str]] = {
@@ -1314,8 +1315,10 @@ def bpe_train(
         vocab = vocab.select(
             "wf", _bpe_merge_fold("syms", left, right, merged).alias("syms")
         ).localCheckpoint(eager=True)
-    return spark.createDataFrame(
-        merges, "rank int, left string, right string, merged string, pair_count long"
+    return local_frame(
+        spark,
+        merges,
+        "rank int, left string, right string, merged string, pair_count long",
     )
 
 
@@ -1451,8 +1454,10 @@ def bpe_train_local(
         # greedy fold leaves no adjacent (left, right) anywhere
         pair_counts.pop((left, right), None)
         pair_words.pop((left, right), None)
-    return spark.createDataFrame(
-        merges, "rank int, left string, right string, merged string, pair_count long"
+    return local_frame(
+        spark,
+        merges,
+        "rank int, left string, right string, merged string, pair_count long",
     )
 
 

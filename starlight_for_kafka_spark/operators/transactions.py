@@ -25,6 +25,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from starlight_for_kafka_spark.plans.local import local_frame
+
 TXN_SIZE = 10  # records per synthetic transaction in the derived fixture
 
 
@@ -765,7 +767,8 @@ class ProducerStateStore:
         spark = txn_log.sparkSession
         min_wm = min(watermarks.values(), default=0)
         known = [int(p) for p in watermarks]
-        wm_df = spark.createDataFrame(
+        wm_df = local_frame(
+            spark,
             [(int(p), int(o)) for p, o in watermarks.items()],
             "partition int, __wm long",
         )

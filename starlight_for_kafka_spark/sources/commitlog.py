@@ -34,9 +34,16 @@ files from lost attempts.
 
 Scale notes: the commit path is O(files-in-batch) driver work plus one
 atomic create — no data-plane cost; offset assignment inside a batch is the
-same one-shuffle ``row_number`` plan as ``LogTable.append``. The manifest
-list grows one tiny file per commit; ``checkpoint`` folds the state into a
-single JSON every N commits the way Delta does (listing stays O(N)).
+same one-shuffle ``row_number`` plan as ``LogTable.append``. An append of a
+small batch runs 3 Spark jobs: the offset window's shuffle map, the
+watermark broadcast and the staged write. The watermark frame is an Arrow
+``LocalRelation`` (``plans.local_frame``), so its broadcast is a JVM-only
+scan with no Python-worker task; the per-partition counts that advance the
+watermarks are the ``num_rows`` of the parquet footers the attempt staged —
+no input pin, no counting job, and a manifest that records exactly what
+its files hold. The manifest list grows one tiny file per commit;
+``checkpoint`` folds the state into a single JSON every N commits the way
+Delta does (listing stays O(N)).
 """
 
 from __future__ import annotations
@@ -46,9 +53,12 @@ import os
 import shutil
 import uuid
 
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
+from ..plans.local import local_frame
 from .logtable import LOG_COLUMNS, assign_dense_offsets
 
 _LOG_DIR = "_log"
@@ -58,6 +68,59 @@ _CHECKPOINT_EVERY = 10
 
 class CommitConflict(Exception):
     """Another writer committed this version first."""
+
+
+def _staged_counts(stage_dir: str) -> dict[int, int]:
+    """Rows per log partition in a ``partitionBy("partition")`` staged
+    tree, summed from the parquet footers (``num_rows``) of every file
+    under ``partition=<p>/`` — driver-side metadata reads, no Spark job.
+    A partition split over several files (``maxRecordsPerFile``) sums
+    them; an empty write stages no partition directory and counts
+    nothing."""
+    counts: dict[int, int] = {}
+    for pdir in os.listdir(stage_dir):
+        if not pdir.startswith("partition="):
+            continue
+        full = os.path.join(stage_dir, pdir)
+        n = sum(
+            pq.read_metadata(os.path.join(full, fn)).num_rows
+            for fn in os.listdir(full)
+            if fn.endswith(".parquet")
+        )
+        counts[int(pdir[len("partition="):])] = n
+    return counts
+
+
+def _staged_batches(stage_dir: str, batch_col: str) -> dict[int, str]:
+    """{batch value: its ``<batch_col>=<b>`` subtree} of a
+    ``partitionBy(batch_col, "partition")`` staged write. The value is
+    read back from the directory name — an integral value is never
+    path-escaped — and a null batch (Spark's default-partition directory)
+    raises before the caller publishes anything."""
+    staged: dict[int, str] = {}
+    for d in os.listdir(stage_dir):
+        full = os.path.join(stage_dir, d)
+        # a batch column may itself start with "_" (``__parity``), so
+        # only non-directories and names without "=" are skipped
+        if "=" not in d or not os.path.isdir(full):
+            continue
+        value = d.rsplit("=", 1)[1]
+        if value == "__HIVE_DEFAULT_PARTITION__":
+            shutil.rmtree(stage_dir, ignore_errors=True)
+            raise ValueError(f"append_batches: null value in {batch_col!r}")
+        staged[int(value)] = full
+    return staged
+
+
+def _watermark_frame(spark: SparkSession, watermarks: dict[int, int]) -> DataFrame:
+    """The (partition, high_watermark) frame ``assign_dense_offsets``
+    broadcasts: a LocalRelation, so its broadcast is a JVM-only scan
+    with no Python-worker task."""
+    return local_frame(
+        spark,
+        [(int(p), int(n)) for p, n in watermarks.items()],
+        "partition int, high_watermark long",
+    )
 
 
 class ManifestBackend:
@@ -262,9 +325,17 @@ class CommittedLog:
         concurrent writers. Returns the committed version.
 
         Loop: snapshot watermarks → assign offsets (one shuffle) → write
-        data files → attempt the atomic manifest create. On conflict the
-        data files are orphaned (invisible to readers), the snapshot is
-        refreshed, and the whole batch re-runs with the new base offsets.
+        data files → advance each partition's watermark by the row count
+        in the parquet footers just staged → attempt the atomic manifest
+        create. On conflict the data files are orphaned (invisible to
+        readers), the snapshot is refreshed, and the whole batch re-runs
+        with the new base offsets — re-evaluating ``records``, which is
+        not pinned. That is safe: each committed version's files and
+        watermarks come from ONE evaluation (its own staged write), so a
+        manifest always records exactly what its files hold. A caller
+        whose input can change between evaluations and who needs the
+        first evaluation committed should pin it first. An append of a
+        small batch runs 3 Spark jobs (see the module's scale notes).
 
         ``txn_id`` makes the append IDEMPOTENT: the manifest records it,
         and a later append carrying an already-committed txn_id no-ops and
@@ -281,24 +352,13 @@ class CommittedLog:
         batch = records
         if order_col is None:
             batch = batch.withColumn("__arrival", F.monotonically_increasing_id())
-        batch = batch.localCheckpoint(eager=True)  # pin inputs across retries
-        # per-partition counts don't depend on assigned offsets: compute
-        # ONCE from the pinned batch (re-running the assignment plan per
-        # attempt would pay the window shuffle twice per retry)
-        counts = {
-            int(r["partition"]): r["cnt"]
-            for r in batch.groupBy("partition").agg(F.count("*").alias("cnt")).collect()
-        }
 
         spark = records.sparkSession
         for attempt in range(max_retries):
             version, watermarks, _files, txns = self._replay()
             if txn_id is not None and txn_id in txns:
                 return txns[txn_id]  # already committed: idempotent no-op
-            hwm = spark.createDataFrame(
-                [(int(p), int(n)) for p, n in watermarks.items()],
-                "partition int, high_watermark long",
-            )
+            hwm = _watermark_frame(spark, watermarks)
             assigned = assign_dense_offsets(batch, hwm, order)
             # stage the attempt, then move files into the ONE consistent
             # data/partition=p/ tree (unique names per attempt) — mixed
@@ -324,9 +384,9 @@ class CommittedLog:
                 .parquet(stage_dir)
             )
             new_marks = dict(watermarks)
-            new_files = self._publish_staged(stage_dir, attempt_tag)
-            for p, cnt in counts.items():
+            for p, cnt in _staged_counts(stage_dir).items():
                 new_marks[p] = watermarks.get(p, 0) + cnt
+            new_files = self._publish_staged(stage_dir, attempt_tag)
             manifest = {
                 "version": version + 1,
                 "writer": writer_id,
@@ -367,11 +427,15 @@ class CommittedLog:
         """Append N sequential batches — the ascending distinct values of
         ``batch_col`` — each as its OWN committed version, exactly as N
         sequential :meth:`append` calls would, but computed in one Spark
-        job chain: one input pin (localCheckpoint), one counts
-        aggregation, one offset-assignment window and one staged write
-        for ALL batches (round-11 optimization, guide §1.2: the
-        per-append preamble and the window+write job were paid once per
-        batch for the same total bytes).
+        job chain: one offset-assignment window and one staged write for
+        ALL batches. The batches and their per-partition counts are read
+        back from the staged ``<batch_col>=<b>/partition=<p>/`` tree's
+        parquet footers, as :meth:`append` reads its own.
+
+        ``batch_col`` must be an integral column (rejected from the
+        schema before any job runs) and must hold no null (rejected after
+        the staged write, before any manifest is published). There is no
+        ``txn_id`` path: an exactly-once sink must use :meth:`append`.
 
         Equivalence to sequential appends: within a partition the window
         orders by (``batch_col``, ``order_col``), so batch b's rows get
@@ -386,33 +450,26 @@ class CommittedLog:
         snapshot taken at stage time, so a conflict on ANY version
         invalidates the remaining batches' files (they stay orphaned and
         invisible, vacuum's job); the loop re-snapshots and re-stages
-        only the uncommitted batches. Returns the last committed version.
+        only the uncommitted batches, re-evaluating ``records`` as
+        :meth:`append` does. Returns the last committed version.
         """
+        dtype = records.schema[batch_col].dataType
+        if not isinstance(dtype, T.IntegralType):
+            raise ValueError(
+                f"append_batches: batch_col {batch_col!r} must be integral,"
+                f" got {dtype.simpleString()}"
+            )
         writer_id = writer_id or uuid.uuid4().hex[:8]
-        batch = records.localCheckpoint(eager=True)  # pin across retries
-        counts: dict[int, dict[int, int]] = {}
-        for r in (
-            batch.groupBy(batch_col, "partition")
-            .agg(F.count("*").alias("cnt"))
-            .collect()
-        ):
-            counts.setdefault(r[batch_col], {})[int(r["partition"])] = r["cnt"]
-        remaining = sorted(counts)
         spark = records.sparkSession
-        version = self._versions()[-1] if self._versions() else -1
+        remaining: list[int] | None = None  # every batch, until staged once
         for attempt in range(max_retries):
-            if not remaining:
-                return version
             version, watermarks, _files, _txns = self._replay()
             sub = (
-                batch
-                if len(remaining) == len(counts)
-                else batch.filter(F.col(batch_col).isin(list(remaining)))
+                records
+                if remaining is None
+                else records.filter(F.col(batch_col).isin(remaining))
             )
-            hwm = spark.createDataFrame(
-                [(int(p), int(n)) for p, n in watermarks.items()],
-                "partition int, high_watermark long",
-            )
+            hwm = _watermark_frame(spark, watermarks)
             # ONE window over (partition) ordered by (batch, order): each
             # batch's block is contiguous, so its offsets are dense and
             # start at the previous batch's end — identical to per-batch
@@ -442,15 +499,14 @@ class CommittedLog:
                 .partitionBy(batch_col, "partition")
                 .parquet(stage_dir)
             )
+            staged = _staged_batches(stage_dir, batch_col)
+            remaining = sorted(staged)
             conflicted = False
             for i, b in enumerate(list(remaining)):
-                sub_stage = os.path.join(stage_dir, f"{batch_col}={b}")
-                new_files = self._publish_staged(
-                    sub_stage, f"{stage_tag}-b{i}"
-                )
                 new_marks = dict(watermarks)
-                for p, cnt in counts[b].items():
+                for p, cnt in _staged_counts(staged[b]).items():
                     new_marks[p] = new_marks.get(p, 0) + cnt
+                new_files = self._publish_staged(staged[b], f"{stage_tag}-b{i}")
                 manifest = {
                     "version": version + 1,
                     "writer": writer_id,
@@ -513,7 +569,7 @@ class CommittedLog:
         if not files:
             from .logtable import KAFKA_RECORD_SCHEMA
 
-            return spark.createDataFrame([], KAFKA_RECORD_SCHEMA)
+            return local_frame(spark, [], KAFKA_RECORD_SCHEMA)
         paths = [os.path.join(self.root, f) for f in files]
         return (
             spark.read.option(

@@ -39,6 +39,8 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from starlight_for_kafka_spark.plans.local import local_frame
+
 KAFKA_RECORD_SCHEMA = T.StructType(
     [
         T.StructField("key", T.BinaryType(), True),
@@ -298,6 +300,11 @@ class LogTable:
         pushed-down partition/offset predicates, so each reads only the
         requested offset ranges, never the log. Rows keep ``ridx`` so
         callers can regroup per-partition responses.
+
+        A Python request list becomes an Arrow ``LocalRelation``
+        (``plans.local_frame``): its broadcast is a JVM-only scan, so
+        none of the request's Spark jobs (8 for a small fetch) starts a
+        Python worker task.
         """
         spark = self.df.sparkSession
         if isinstance(requests, DataFrame):
@@ -324,7 +331,8 @@ class LogTable:
                 raise ValueError(
                     "fetch_multi: duplicate partition(s) in request"
                 )
-            req = spark.createDataFrame(
+            req = local_frame(
+                spark,
                 [(i, int(p), int(o)) for i, (p, o) in enumerate(requests)],
                 "ridx int, partition int, start_offset long",
             )
@@ -514,9 +522,7 @@ class LogTable:
             for r in stats
         ]
         total_segs = sum(int(s) for _, _, s in plan)
-        seg_map = spark.createDataFrame(
-            plan, "partition int, n_rows long, segs long"
-        )
+        seg_map = local_frame(spark, plan, "partition int, n_rows long, segs long")
         rn = F.row_number().over(Window.partitionBy("partition").orderBy("offset"))
         tmp = path.rstrip("/") + ".__compacting__"
         (

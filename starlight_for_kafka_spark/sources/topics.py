@@ -17,6 +17,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from starlight_for_kafka_spark.plans.local import local_frame
 from starlight_for_kafka_spark.sources.logtable import KAFKA_RECORD_SCHEMA
 
 _DDL_COLUMNS = ", ".join(
@@ -105,7 +106,8 @@ def describe_cluster(spark: SparkSession) -> DataFrame:
     controller. A single Spark engine has one "broker" — the driver — with
     its parallelism standing in for the broker count's capacity figure."""
     sc = spark.sparkContext
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         [
             (
                 "spark",
@@ -228,7 +230,7 @@ def api_versions(requests: DataFrame) -> DataFrame:
     Emits (correlation_id, api_key, api_name, handled, error_code).
     """
     spark = requests.sparkSession
-    spec = spark.createDataFrame(HANDLED_APIS, "api_key int, api_name string")
+    spec = local_frame(spark, HANDLED_APIS, "api_key int, api_name string")
     lo, hi = API_VERSIONS_RANGE
     out = requests.join(F.broadcast(spec), "api_key", "left")
     return out.select(

@@ -58,3 +58,24 @@ def log(events):
     lt = LogTable.from_events(events)
     lt.df = lt.df.cache()
     return lt
+
+
+@pytest.fixture
+def jobs_run_by(spark):
+    """``jobs_run_by(fn, group)``: the number of Spark jobs ``fn()``
+    launches, counted through a job group; the caller's job-group
+    properties are restored afterwards."""
+    sc = spark.sparkContext
+    keys = ("spark.jobGroup.id", "spark.job.description", "spark.job.interruptOnCancel")
+
+    def count(fn, group):
+        saved = {k: sc.getLocalProperty(k) for k in keys}
+        sc.setJobGroup(group, group)
+        try:
+            fn()
+        finally:
+            for k, v in saved.items():
+                sc.setLocalProperty(k, v)
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    return count

@@ -431,3 +431,95 @@ def test_append_batches_conflict_restages_only_uncommitted(spark, tmp_path):
     assert m1["watermarks"]["0"] == 4  # batch 0: two rows on top of v0's 2
     assert m3["watermarks"]["0"] == 7  # batch 1 re-staged on top of the 5
     assert interloper_off == 4
+
+
+def test_append_runs_three_jobs(spark, tmp_path, jobs_run_by):
+    """An append of a small batch onto a non-empty log is three jobs: the
+    offset window's shuffle map, the watermark broadcast (a JVM-only scan
+    of a LocalRelation) and the staged write. No input pin, no counting
+    job, no Python-worker job for the watermark frame."""
+    log = CommittedLog(str(tmp_path / "log"))
+    log.append(_batch(spark, [(0, 2), (1, 1)]), order_col="seq")
+    batch = _batch(spark, [(0, 3), (1, 2), (4, 1)])
+    for i in range(2):
+        n = jobs_run_by(lambda: log.append(batch, order_col="seq"), f"append-jobs-{i}")
+        assert n == 3, f"append ran {n} Spark jobs, expected 3"
+    assert log.snapshot()[1] == {0: 8, 1: 5, 4: 2}
+
+
+def test_footer_watermarks_dense_across_many_staged_files(spark, tmp_path):
+    """Watermarks come from the staged parquet footers: a partition split
+    over several staged files (one record per file) must still advance by
+    its full row count, and the offsets stay dense."""
+    key = "spark.sql.files.maxRecordsPerFile"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "1")
+    try:
+        log = CommittedLog(str(tmp_path / "log"))
+        log.append(_batch(spark, [(0, 3), (2, 2)]), order_col="seq")
+        log.append(_batch(spark, [(0, 2), (5, 1)]), order_col="seq")
+    finally:
+        spark.conf.set(key, prev)
+    version, marks, files = log.snapshot()
+    assert version == 1
+    assert marks == {0: 5, 2: 2, 5: 1}
+    assert len(files) == 8  # one staged file per record
+    got = _offsets(log.read(spark))
+    assert {p: [o for o, _ in v] for p, v in got.items()} == {
+        0: [0, 1, 2, 3, 4],
+        2: [0, 1],
+        5: [0],
+    }
+
+
+def test_empty_append_leaves_watermarks_unchanged(spark, tmp_path):
+    log = CommittedLog(str(tmp_path / "log"))
+    log.append(_batch(spark, [(0, 2), (3, 1)]), order_col="seq")
+    v = log.append(_batch(spark, [(0, 1)]).limit(0), order_col="seq")
+    version, marks, files = log.snapshot()
+    assert (v, version) == (1, 1)
+    assert marks == {0: 2, 3: 1}
+    assert len(files) == 2
+
+
+def test_append_batches_rejects_non_integral_batch_col_before_any_job(
+    spark, tmp_path, jobs_run_by
+):
+    log = CommittedLog(str(tmp_path / "log"))
+    bad = _batch(spark, [(0, 2)]).withColumn("par", F.lit("a"))
+
+    def run():
+        with pytest.raises(ValueError, match="must be integral"):
+            log.append_batches(bad, batch_col="par", order_col="seq")
+
+    assert jobs_run_by(run, "append-batches-string-col") == 0
+    assert log._versions() == []
+
+
+def test_append_batches_rejects_null_batch_before_publishing(spark, tmp_path):
+    """A null batch value fails loudly after the staged write and before
+    any manifest lands: the log stays exactly as it was, and the staged
+    attempt is removed."""
+    log = CommittedLog(str(tmp_path / "log"))
+    log.append(_batch(spark, [(0, 2)]), order_col="seq")
+    before = log.snapshot()
+    with_null = _with_parity(_batch(spark, [(0, 2), (1, 2)])).withColumn(
+        "par", F.when(F.col("seq") == 3, None).otherwise(F.col("par"))
+    )
+    with pytest.raises(ValueError, match="null value"):
+        log.append_batches(with_null, batch_col="par", order_col="seq")
+    assert log.snapshot() == before
+    assert os.listdir(os.path.join(log.root, "_staging")) == []
+
+
+def test_append_batches_reads_back_underscore_batch_col(spark, tmp_path):
+    """The staged tree is listed, not rebuilt from Spark's escaping: a
+    batch column named like a hidden file (``__parity``) still yields
+    one version per batch with dense watermarks."""
+    log = CommittedLog(str(tmp_path / "log"))
+    batch = _batch(spark, [(0, 3), (1, 2)]).withColumn(
+        "__parity", (F.col("seq") % 2).cast("int")
+    )
+    assert log.append_batches(batch, batch_col="__parity", order_col="seq") == 1
+    assert log._replay(0)[1] == {0: 2, 1: 1}  # seq 0, 2, 4 are even
+    assert log.snapshot()[1] == {0: 3, 1: 2}
