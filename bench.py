@@ -45,6 +45,62 @@ os.environ.setdefault("SPARK_GRAFT_CPUS", "32")
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
+# headline suite: one row per operator family (heaviest variant), plus
+# every heavy operator, iterative loop and Python kernel, so a
+# regression in any of them moves a recorded row
+SUITE = [
+    "log_fetch",                # FETCH path (partition-pruned scan)
+    "produce_offsets_dense",    # PRODUCE offset assignment (full shuffle)
+    "offsets_for_times",        # LIST_OFFSETS by time
+    "offset_commit_compact",    # compacted offset view (latest-wins)
+    "consumer_lag",             # lag join
+    "txn_read_committed",       # read-committed scan (LSO + anti-join)
+    "txn_idempotent_dedupe",    # idempotence dedupe
+    "keyed_reduce",             # keyed aggregation
+    "tumbling_window_1h",       # windowed aggregation
+    "session_windows",          # sessionization
+    "ktable_latest",            # changelog latest-wins
+    "global_join_inner",        # stream-table broadcast join
+    "q1_pricing_summary",       # TPC-H Q1 style scan+agg
+    "top_revenue_orders",       # 3-way join + top-k
+    "dedup_exact",              # exact dedup
+    "dedup_ngram_jaccard",      # exact Jaccard pairs (prefix-filter join)
+    "dedup_minhash",            # MinHash-LSH near dedup
+    "similarity_top10",         # brute-force cosine top-k
+    "text_stats",               # text quality scan
+    "ktable_fk_join",           # KIP-213 FK join (shuffle join on FK)
+    "commitlog_append",         # optimistic-commit storage rewrite (I/O)
+    "line_dedup",               # per-line dedup + doc reassembly
+    "dsir_weights",             # DSIR importance weights (n-gram LM ratio)
+    "wire_transcode_codecs",    # Kafka RecordBatch v2 snappy/lz4/zstd/gzip
+                                # transcode chain (Arrow-batched kernels)
+    "dedup_minhash_cc",         # MinHash pipeline + connected components
+    "pagerank_event_graph",     # 10 power iterations over the event graph
+    "offsets_wire_roundtrip",   # __consumer_offsets binary encode+decode
+    "producer_state_snapshot",  # snapshot write + bounded tail recovery
+    "multimodal_features",      # real WAV/PPM/BMP/Y4M decode kernels
+    "multimodal_frame_features",  # Y4M per-frame seek decode (payload-bound)
+    "multimodal_chunk_features",  # WAV per-chunk range decode
+    "wire_legacy_ingest",       # v2 -> v1 down-convert -> typed ingest
+    "txn_timeout_abort",        # coordinator timeout-abort sweep
+    "dedup_minhash_capped",     # MinHash-LSH with star-capped pair emission
+    "keyed_running_sum",        # skew-safe per-key running aggregate
+    "dedup_embedding_lsh_auto", # auto-sized hyperplane-LSH near-dup
+    "knn_join_lsh",             # distributed kNN join (multi-probe LSH)
+    "remove_repeated_spans",    # cross-doc shared-passage removal
+    "soft_dedup_weights",       # SoftDeDup cluster reweighting (CC chain)
+    "pq_knn_join",              # IVFADC kNN join over PQ codes
+    "decontaminate_fuzzy",      # MinHash near-dup eval decontamination
+                                # (corpus side map-only, no corpus shuffle)
+    # stored-signature shape: the cold pass pays the one-time signature
+    # write, the median the recurring probe-side cost
+    "decontaminate_fuzzy_stored",
+    "bpe_tokenize",             # production-vocab tokenizer (mapInPandas)
+    "bpe_train_local",          # BPE trainer (word-freq collapse + heap)
+    "kmeans_fit2",              # 2-round Lloyd fit
+    "pq_codes_trained",         # per-subspace PQ training + corpus encode
+]
+
 
 def main() -> None:
     from starlight_for_kafka_spark import get_session
@@ -55,89 +111,6 @@ def main() -> None:
     spark.sparkContext.setLogLevel("ERROR")
 
     queries = entrymod.queries()
-    # headline suite: one per operator family, heaviest variants
-    suite = [
-        "log_fetch",                # FETCH path (partition-pruned scan)
-        "produce_offsets_dense",    # PRODUCE offset assignment (full shuffle)
-        "offsets_for_times",        # LIST_OFFSETS by time
-        "offset_commit_compact",    # compacted offset view (latest-wins)
-        "consumer_lag",             # lag join
-        "txn_read_committed",       # read-committed scan (LSO + anti-join)
-        "txn_idempotent_dedupe",    # idempotence dedupe
-        "keyed_reduce",             # keyed aggregation
-        "tumbling_window_1h",       # windowed aggregation
-        "session_windows",          # sessionization
-        "ktable_latest",            # changelog latest-wins
-        "global_join_inner",        # stream-table broadcast join
-        "q1_pricing_summary",       # TPC-H Q1 style scan+agg
-        "top_revenue_orders",       # 3-way join + top-k
-        "dedup_exact",              # exact dedup
-        "dedup_ngram_jaccard",      # exact Jaccard pairs (prefix-filter join)
-        "dedup_minhash",            # MinHash-LSH near dedup
-        "similarity_top10",         # brute-force cosine top-k
-        "text_stats",               # text quality scan
-        # round-3 additions: the four slowest round-2 ops, promoted so
-        # regressions are driver-visible (VERDICT r2 next-round item 3)
-        "ktable_fk_join",           # KIP-213 FK join (shuffle join on FK)
-        "commitlog_append",         # optimistic-commit storage rewrite (I/O)
-        "line_dedup",               # per-line dedup + doc reassembly
-        "dsir_weights",             # DSIR importance weights (n-gram LM ratio)
-        "wire_transcode_codecs",    # Kafka RecordBatch v2 snappy/lz4/zstd/gzip
-                                    # transcode chain (Arrow-batched kernels) —
-                                    # the codec subsystem was bench-invisible
-        # round-3 additions #3: the two slowest iterative (driver-loop)
-        # ops, previously bench-invisible
-        "dedup_minhash_cc",         # MinHash pipeline + connected components
-        "pagerank_event_graph",     # 10 power iterations over the event graph
-        # round-4 additions: the slowest new round-4 operators (suite
-        # discipline: every new heavy op becomes driver-visible)
-        "offsets_wire_roundtrip",   # __consumer_offsets binary encode+decode
-        "producer_state_snapshot",  # snapshot write + bounded tail recovery
-        "multimodal_features",      # real WAV/PPM/BMP/Y4M decode kernels
-        "multimodal_frame_features",  # Y4M per-frame seek decode (payload-bound)
-        "multimodal_chunk_features",  # WAV per-chunk range decode
-        # round-5 additions (suite discipline: new heavy ops become
-        # driver-visible)
-        "wire_legacy_ingest",       # v2 -> v1 down-convert -> typed ingest
-        "txn_timeout_abort",        # coordinator timeout-abort sweep
-        # round-7 additions: the two most load-bearing 100 TB claims
-        # (pair-emission star cap, running-aggregate skew decomposition)
-        # plus the self-sizing LSH — none had a driver-recorded bench row
-        "dedup_minhash_capped",     # MinHash-LSH with star-capped pair emission
-        "keyed_running_sum",        # skew-safe per-key running aggregate
-        "dedup_embedding_lsh_auto", # auto-sized hyperplane-LSH near-dup
-        # round-7 addition (late): the batch-retrieval primitive — both
-        # sides DataFrames, bucket-keyed equi-join, per-query salted top-k
-        "knn_join_lsh",             # distributed kNN join (multi-probe LSH)
-        # round-7 additions (late, suite discipline — new heavy ops
-        # become driver-visible): the dedup rewrite/reweight pair and the
-        # codes-only IVFADC retrieval join
-        "remove_repeated_spans",    # cross-doc shared-passage removal
-        "soft_dedup_weights",       # SoftDeDup cluster reweighting (CC chain)
-        "pq_knn_join",              # IVFADC kNN join over PQ codes
-        # round-7 addition (final): broadcast-benchmark eval scrub —
-        # corpus side map-only, the zero-corpus-shuffle contract this
-        # row exists to keep driver-visible
-        "decontaminate_fuzzy",      # MinHash near-dup benchmark decontamination
-        # round-8 addition: the stored-signature production shape — the
-        # claimed scale path (signatures at rest, probe never re-signs
-        # the corpus). Cold pass pays the one-time signature write; the
-        # median shows the recurring probe-side cost the claim is about.
-        "decontaminate_fuzzy_stored",
-        # round-8 addition: the production-vocab tokenizer kernel (the
-        # Arrow-batched mapInPandas path) — tokenization-to-count is the
-        # weekly 100 TB pipeline step the bounded-k expression form
-        # can't serve; the row keeps the kernel's cost driver-visible
-        "bpe_tokenize",
-        # round-9 additions (suite discipline): the production BPE
-        # trainer (word-freq collapse + driver-side heap — the 32k-merge
-        # path), and the trained-retrieval pair that closed the
-        # train->encode->probe loop (full 2-round Lloyd fit;
-        # per-subspace PQ training + full-corpus encode)
-        "bpe_train_local",
-        "kmeans_fit2",
-        "pq_codes_trained",
-    ]
 
     # warm the JVM + file listing once
     entrymod.q_list_offsets(spark, SF_DIR).write.mode("overwrite").format("noop").save()
@@ -202,11 +175,11 @@ def main() -> None:
     spin_miter_s = _spin_rate()
 
     runs = max(1, int(os.environ.get("SPARK_GRAFT_BENCH_RUNS", "3")))
-    samples: dict[str, list[float]] = {name: [] for name in suite}
+    samples: dict[str, list[float]] = {name: [] for name in SUITE}
     steal_pct_per_pass: list[float] = []
     for _ in range(runs):
         s0, t0_ticks = _stat_ticks()
-        for name in suite:
+        for name in SUITE:
             t0 = time.perf_counter()
             queries[name](spark, SF_DIR).write.mode("overwrite").format("noop").save()
             samples[name].append(round(time.perf_counter() - t0, 3))
@@ -219,7 +192,7 @@ def main() -> None:
     medians: dict[str, float] = {}
     cold: dict[str, float] = {}
     quietest: dict[str, float] = {}
-    for name in suite:
+    for name in SUITE:
         ts = samples[name]
         cold[name] = ts[0]
         medians[name] = round(statistics.median(ts), 3)

@@ -44,6 +44,14 @@ no input pin, no counting job, and a manifest that records exactly what
 its files hold. The manifest list grows one tiny file per commit;
 ``checkpoint`` folds the state into a single JSON every N commits the way
 Delta does (listing stays O(N)).
+
+Reads take what the replay already knows. ``read`` hands the log schema
+to the parquet reader, so building a snapshot frame runs no Spark job (no
+footer schema inference), and tags that frame with the replayed
+watermarks: ``LogTable.latest_offsets`` / ``high_watermarks`` on it are a
+``LocalRelation`` of the log-end offsets (no job when collected), the
+broker answering LIST_OFFSETS LATEST from metadata instead of
+aggregating the log.
 """
 
 from __future__ import annotations
@@ -59,11 +67,34 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..plans.local import local_frame
-from .logtable import LOG_COLUMNS, assign_dense_offsets
+from .logtable import (
+    KAFKA_RECORD_SCHEMA,
+    LOG_COLUMNS,
+    assign_dense_offsets,
+    tag_log_end_offsets,
+)
 
 _LOG_DIR = "_log"
 _DATA_DIR = "data"
 _CHECKPOINT_EVERY = 10
+
+
+def _nullable(dt: T.DataType) -> T.DataType:
+    """``dt`` with every field and element nullable — the schema a
+    parquet read reports, whatever the writer declared."""
+    if isinstance(dt, T.StructType):
+        return T.StructType(
+            [T.StructField(f.name, _nullable(f.dataType), True) for f in dt.fields]
+        )
+    if isinstance(dt, T.ArrayType):
+        return T.ArrayType(_nullable(dt.elementType), True)
+    return dt
+
+
+# what every read of the log returns: handed to the parquet reader so a
+# snapshot frame needs no schema-inference job, and used as-is for the
+# empty log so both report one schema
+_READ_SCHEMA = _nullable(KAFKA_RECORD_SCHEMA)
 
 
 class CommitConflict(Exception):
@@ -564,18 +595,24 @@ class CommittedLog:
         the log as of that committed version (time travel): manifests are
         append-only and vacuum only deletes UNreferenced files, so every
         historical version stays readable until its files are aged out by
-        an explicit retention pass."""
-        _, _, files, _ = self._replay(at_version)
-        if not files:
-            from .logtable import KAFKA_RECORD_SCHEMA
+        an explicit retention pass.
 
-            return local_frame(spark, [], KAFKA_RECORD_SCHEMA)
-        paths = [os.path.join(self.root, f) for f in files]
-        return (
-            spark.read.option(
-                "basePath", os.path.join(self.root, _DATA_DIR)
-            ).parquet(*paths)
-        ).select(*LOG_COLUMNS)
+        The schema is known, so building the frame runs no Spark job, and
+        the returned frame is tagged with the snapshot's log-end offsets
+        (``tag_log_end_offsets``): ``LogTable`` on it answers
+        ``latest_offsets`` / ``high_watermarks`` from the manifest."""
+        _, watermarks, files, _ = self._replay(at_version)
+        if not files:
+            df = local_frame(spark, [], _READ_SCHEMA)
+        else:
+            paths = [os.path.join(self.root, f) for f in files]
+            df = (
+                spark.read.schema(_READ_SCHEMA)
+                .option("basePath", os.path.join(self.root, _DATA_DIR))
+                .parquet(*paths)
+                .select(*LOG_COLUMNS)
+            )
+        return tag_log_end_offsets(df, watermarks)
 
     def optimize(self, spark: SparkSession, max_retries: int = 10) -> int:
         """Compact the log's committed files into one offset-sorted file

@@ -65,6 +65,20 @@ KAFKA_RECORD_SCHEMA = T.StructType(
 
 LOG_COLUMNS = [f.name for f in KAFKA_RECORD_SCHEMA.fields]
 
+# attribute under which ``CommittedLog.read`` tags the frame it returns
+# with that snapshot's log-end offsets {partition: next offset}
+_LOG_END_OFFSETS = "_log_end_offsets"
+
+
+def tag_log_end_offsets(df: DataFrame, offsets: dict[int, int]) -> DataFrame:
+    """Tag ``df`` itself with the log-end offsets a manifest replay
+    already holds, so ``LogTable(df).latest_offsets()`` and
+    ``high_watermarks()`` read them instead of aggregating the log. Only
+    this object carries the tag: a frame derived from it (``filter``,
+    ``select``, ...) is a new object and keeps the aggregate."""
+    setattr(df, _LOG_END_OFFSETS, dict(offsets))
+    return df
+
 
 def record_size(key_col: str = "key", value_col: str = "value"):
     """Full record byte accounting: key + value bytes (nulls count 0).
@@ -158,12 +172,26 @@ class LogTable:
     # PRODUCE — append with dense offset assignment
     # ------------------------------------------------------------------ #
 
+    def _log_end(self, name: str) -> DataFrame:
+        """(partition, ``name``) = max(offset) + 1 per partition. On a
+        frame tagged by ``tag_log_end_offsets`` these are the snapshot's
+        offsets as a LocalRelation — the broker answers from metadata, no
+        scan — otherwise one aggregate over the log."""
+        offsets = vars(self.df).get(_LOG_END_OFFSETS)
+        if offsets is None:
+            return self.df.groupBy("partition").agg(
+                (F.max("offset") + 1).alias(name)
+            )
+        return local_frame(
+            self.df.sparkSession,
+            sorted(offsets.items()),
+            f"partition int, {name} long",
+        )
+
     def high_watermarks(self) -> DataFrame:
         """Per-partition high watermark = max(offset) + 1 (reference
         MessageMetadataUtils.getHighWatermark, utils/MessageMetadataUtils.java:49)."""
-        return self.df.groupBy("partition").agg(
-            (F.max("offset") + 1).alias("high_watermark")
-        )
+        return self._log_end("high_watermark")
 
     def append(self, records: DataFrame, order_col: str | None = None) -> "LogTable":
         """Append records (no ``offset`` column) assigning dense offsets that
@@ -255,11 +283,15 @@ class LogTable:
             # would funnel through a single-partition global limit)
             out = out.filter(F.col("offset") < start_offset + max_records)
         if max_bytes is not None:
+            # the filter already selects ONE log partition, so the running
+            # sum runs in one Spark partition: coalesce(1) satisfies the
+            # window's clustering and the plan has no exchange
             wo = Window.partitionBy("partition").orderBy("offset")
             w = wo.rowsBetween(Window.unboundedPreceding, Window.currentRow)
             size = record_size()
             out = (
-                out.withColumn("__cum", F.sum(size).over(w))
+                out.coalesce(1)
+                .withColumn("__cum", F.sum(size).over(w))
                 .withColumn("__rn", F.row_number().over(wo))
                 .filter((F.col("__cum") <= max_bytes) | (F.col("__rn") == 1))
                 .drop("__cum", "__rn")
@@ -292,21 +324,25 @@ class LogTable:
         per partition. The per-partition running sums are a
         partition-parallel window; the cross-partition prefix is a
         running sum over the n_partitions-row totals table (control
-        plane) broadcast back. NO global sequential window exists in the
-        plan, and the request list broadcasts — the log never shuffles.
-        The candidate range IS scanned twice (once for the totals table,
-        once for the output pass) — the greedy budget is a global
-        property, so some second look is inherent; both scans carry the
-        pushed-down partition/offset predicates, so each reads only the
-        requested offset ranges, never the log. Rows keep ``ridx`` so
-        callers can regroup per-partition responses.
+        plane) broadcast back, and the same window flags the first
+        requested partition that has candidates. NO global sequential
+        window exists in the plan, and the request list broadcasts — the
+        log never shuffles. The candidate range IS scanned twice (once
+        for the totals table, once for the output pass) — the greedy
+        budget is a global property, so some second look is inherent;
+        both scans carry the pushed-down partition/offset predicates, so
+        each reads only the requested offset ranges, never the log. Rows
+        keep ``ridx`` so callers can regroup per-partition responses.
 
         A Python request list becomes an Arrow ``LocalRelation``
         (``plans.local_frame``): its broadcast is a JVM-only scan, so
-        none of the request's Spark jobs (8 for a small fetch) starts a
-        Python worker task.
+        none of the request's Spark jobs (6 for a small fetch) starts a
+        Python worker task. Its partitions and smallest start offset are
+        also literal predicates on the log, so both scans prune to the
+        requested partition directories.
         """
         spark = self.df.sparkSession
+        log = self.df
         if isinstance(requests, DataFrame):
             req = requests.select(
                 F.col("ridx").cast("int"),
@@ -336,11 +372,16 @@ class LogTable:
                 [(i, int(p), int(o)) for i, (p, o) in enumerate(requests)],
                 "ridx int, partition int, start_offset long",
             )
+            if parts:
+                log = log.filter(
+                    F.col("partition").isin(parts)
+                    & (F.col("offset") >= min(int(o) for _, o in requests))
+                )
         size = record_size()
         wp = Window.partitionBy("partition").orderBy("offset")
         run = wp.rowsBetween(Window.unboundedPreceding, Window.currentRow)
         cand = (
-            self.df.join(F.broadcast(req), "partition")
+            log.join(F.broadcast(req), "partition")
             .filter(F.col("offset") >= F.col("start_offset"))
             .withColumn("__sz", size)
             .withColumn("__pcum", F.sum("__sz").over(run))
@@ -351,33 +392,30 @@ class LogTable:
         # earlier partition that overflows the budget by itself pushes the
         # cumulative past the budget for everything after it, exactly the
         # greedy fill (a dropped row's bytes still count: the response is
-        # a PREFIX of the candidate stream, not a skip-scan)
+        # a PREFIX of the candidate stream, not a skip-scan). The totals
+        # table only holds requests with candidates, so its first row in
+        # ridx order is the partition the first record comes from.
         totals = cand.groupBy("ridx").agg(F.sum("__sz").alias("__ptotal"))
+        wr = Window.orderBy("ridx")
         prior = totals.select(
             "ridx",
             F.coalesce(
                 F.sum("__ptotal").over(
-                    Window.orderBy("ridx").rowsBetween(
-                        Window.unboundedPreceding, -1
-                    )
+                    wr.rowsBetween(Window.unboundedPreceding, -1)
                 ),
                 F.lit(0),
             ).alias("__prior"),
+            (F.row_number().over(wr) == 1).alias("__first"),
         )
-        first_ridx = totals.agg(F.min("ridx").alias("__first_ridx"))
-        out = (
-            cand.join(F.broadcast(prior), "ridx")
-            .crossJoin(F.broadcast(first_ridx))
-            .filter(
-                (F.col("__prior") + F.col("__pcum") <= response_max_bytes)
-                # first record of the response always returns (progress
-                # guarantee): first candidate row of the first requested
-                # partition that has any candidates
-                | ((F.col("ridx") == F.col("__first_ridx")) & (F.col("__prn") == 1))
-            )
+        out = cand.join(F.broadcast(prior), "ridx").filter(
+            (F.col("__prior") + F.col("__pcum") <= response_max_bytes)
+            # first record of the response always returns (progress
+            # guarantee): first candidate row of the first requested
+            # partition that has any candidates
+            | (F.col("__first") & (F.col("__prn") == 1))
         )
         return out.drop(
-            "__sz", "__pcum", "__prn", "__prior", "__first_ridx", "start_offset"
+            "__sz", "__pcum", "__prn", "__prior", "__first", "start_offset"
         )
 
     # ------------------------------------------------------------------ #
@@ -388,8 +426,10 @@ class LogTable:
         return self.df.groupBy("partition").agg(F.min("offset").alias("offset"))
 
     def latest_offsets(self) -> DataFrame:
-        """Log-end offset per partition (next offset to be assigned)."""
-        return self.df.groupBy("partition").agg((F.max("offset") + 1).alias("offset"))
+        """Log-end offset per partition (next offset to be assigned) —
+        from the broker's metadata when the frame is a tagged snapshot
+        (KafkaRequestHandler.java:1279-1623 LIST_OFFSETS LATEST)."""
+        return self._log_end("offset")
 
     def offsets_for_times(self, ts) -> DataFrame:
         """First offset with timestamp >= ts per partition (reference

@@ -6,23 +6,6 @@ import pytest
 
 os.environ.setdefault("SPARK_GRAFT_CPUS", "4")  # small + fast for unit tests
 
-
-def pytest_collection_modifyitems(config, items):
-    """Deselect @pytest.mark.slow tests unless SPARK_GRAFT_FULL_TESTS=1.
-
-    The grading driver's pytest window is shorter than the full suite
-    (VERIFY_r10: the run timed out at ~55% with zero failures), so the
-    multi-minute tests are opt-in: the default `pytest tests/` run stays
-    under its window, and the builder runs the full suite (including
-    slow) once per round with SPARK_GRAFT_FULL_TESTS=1 and records it in
-    OPTIMIZATION_r*.md."""
-    if os.environ.get("SPARK_GRAFT_FULL_TESTS"):
-        return
-    slow = [i for i in items if "slow" in i.keywords]
-    if slow:
-        config.hook.pytest_deselected(items=slow)
-        items[:] = [i for i in items if "slow" not in i.keywords]
-
 from starlight_for_kafka_spark import get_session, load_table  # noqa: E402
 
 SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")

@@ -523,3 +523,77 @@ def test_append_batches_reads_back_underscore_batch_col(spark, tmp_path):
     assert log.append_batches(batch, batch_col="__parity", order_col="seq") == 1
     assert log._replay(0)[1] == {0: 2, 1: 1}  # seq 0, 2, 4 are even
     assert log.snapshot()[1] == {0: 3, 1: 2}
+
+
+def test_read_runs_no_job(spark, tmp_path, jobs_run_by):
+    """The log schema is known, so building a snapshot frame (the live
+    log and a time-travel version) runs no schema-inference job."""
+    log = CommittedLog(str(tmp_path / "log"))
+    for _ in range(3):
+        log.append(_batch(spark, [(0, 2), (1, 1), (5, 2)]), order_col="seq")
+    assert jobs_run_by(lambda: log.read(spark), "read-jobs") == 0
+    assert jobs_run_by(lambda: log.read(spark, at_version=1), "read-jobs-tt") == 0
+
+
+def test_empty_read_schema_matches_non_empty(spark, tmp_path):
+    """An empty log reports the same (all-nullable) schema as a read of
+    committed parquet files, so a caller's plan does not change shape
+    when the first commit lands."""
+    log = CommittedLog(str(tmp_path / "log"))
+    empty = log.read(spark).schema
+    log.append(_batch(spark, [(0, 2), (3, 1)]), order_col="seq")
+    assert log.read(spark).schema == empty
+    # and it is the schema a plain parquet read infers from the files
+    inferred = (
+        spark.read.option("basePath", str(tmp_path / "log" / "data"))
+        .parquet(str(tmp_path / "log" / "data"))
+        .select(*[f.name for f in KAFKA_RECORD_SCHEMA.fields])
+        .schema
+    )
+    assert empty == inferred
+
+
+def _ends(df):
+    return {r[0]: r[1] for r in df.collect()}
+
+
+def test_snapshot_latest_offsets_are_manifest_watermarks(spark, tmp_path, jobs_run_by):
+    """On the frame ``CommittedLog.read`` returns, ``latest_offsets`` and
+    ``high_watermarks`` are the manifest's watermarks — equal to the
+    aggregate over the same data on an empty log, after appends, after
+    optimize and at a time-travel version — and answering them runs no
+    Spark job."""
+    from starlight_for_kafka_spark.sources import LogTable
+
+    log = CommittedLog(str(tmp_path / "log"))
+
+    def check(df):
+        snap = LogTable(df)
+        agg = LogTable(df.select("*"))  # a derived frame: the aggregate
+        assert _ends(snap.latest_offsets()) == _ends(agg.latest_offsets())
+        assert _ends(snap.high_watermarks()) == _ends(agg.high_watermarks())
+        assert snap.latest_offsets().schema == agg.latest_offsets().schema
+        assert snap.high_watermarks().schema == agg.high_watermarks().schema
+        assert jobs_run_by(lambda: snap.latest_offsets().collect(), "ends") == 0
+        return _ends(snap.latest_offsets())
+
+    assert check(log.read(spark)) == {}
+    log.append(_batch(spark, [(0, 2), (1, 1)]), order_col="seq")   # v0
+    log.append(_batch(spark, [(0, 3), (4, 2)]), order_col="seq")   # v1
+    assert check(log.read(spark)) == {0: 5, 1: 1, 4: 2}
+    log.optimize(spark)                                            # v2
+    assert check(log.read(spark)) == {0: 5, 1: 1, 4: 2}
+    assert check(log.read(spark, at_version=0)) == {0: 2, 1: 1}
+    assert check(log.read(spark, at_version=-1)) == {}
+
+
+def test_frame_derived_from_snapshot_aggregates_its_own_rows(spark, tmp_path):
+    """Only the exact frame ``read`` returns carries the snapshot's
+    offsets: a filtered frame answers from its own rows."""
+    from starlight_for_kafka_spark.sources import LogTable
+
+    log = CommittedLog(str(tmp_path / "log"))
+    log.append(_batch(spark, [(0, 2), (3, 4), (6, 1)]), order_col="seq")
+    only3 = LogTable(log.read(spark).filter(F.col("partition") == 3))
+    assert _ends(only3.latest_offsets()) == {3: 4}
+    assert _ends(only3.high_watermarks()) == {3: 4}

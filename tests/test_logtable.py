@@ -257,6 +257,26 @@ def test_fetch_max_bytes_bounds_response(log):
     assert [r.offset for r in tiny] == [0]
 
 
+@pytest.fixture(scope="module")
+def at_rest(tmp_path_factory, spark, log):
+    """The fixture log written partitioned by ``partition`` and read back:
+    the shape fetches see at rest (partition directories to prune)."""
+    path = str(tmp_path_factory.mktemp("at_rest") / "log")
+    log.write(path)
+    return LogTable.read(spark, path)
+
+
+def test_fetch_max_bytes_runs_without_exchange(at_rest, log):
+    """The fetch filter selects one log partition, so the budget's
+    running sum runs in one Spark partition: no shuffle in the plan."""
+    from starlight_for_kafka_spark.plans.inspect import exchange_count
+
+    out = at_rest.fetch(1, 0, max_bytes=100)
+    assert exchange_count(out) == 0
+    got = [r.offset for r in out.collect()]
+    assert got == [r.offset for r in log.fetch(1, 0, max_bytes=100).collect()]
+
+
 def test_compact_segments_reduces_files_preserves_content(tmp_path, spark, log):
     path = str(tmp_path / "fragmented")
     # simulate a microbatch-per-file producer: many tiny files per partition
@@ -463,3 +483,21 @@ def test_fetch_multi_overflowing_partition_blocks_later_ones(spark):
         for r in lt.fetch_multi([(7, 1), (8, 0)], response_max_bytes=1).collect()
     )
     assert got2 == [(0, 7, 1)]
+
+
+def test_fetch_multi_list_request_prunes_partitions(at_rest, log, jobs_run_by):
+    """A Python request list becomes literal ``partition IN (...)`` and
+    ``offset >=`` predicates, so the log scans prune to the requested
+    partition directories; the request prefix window also flags the
+    first partition, so a small fetch runs at most 6 jobs."""
+    from starlight_for_kafka_spark.plans.inspect import partition_filters
+
+    reqs = [(3, 5), (0, 0), (6, 2)]
+    out = at_rest.fetch_multi(reqs, 3000)
+    assert any("partition" in f and " IN (" in f for f in partition_filters(out))
+    rows = []
+    n = jobs_run_by(lambda: rows.extend(out.collect()), "fetch-multi-jobs")
+    assert n <= 6, f"fetch_multi ran {n} Spark jobs, expected at most 6"
+    expect = log.fetch_multi(reqs, 3000).collect()
+    got = sorted((r.ridx, r.partition, r.offset) for r in rows)
+    assert got == sorted((r.ridx, r.partition, r.offset) for r in expect) and got

@@ -29,6 +29,15 @@ def duck():
     return con
 
 
+@pytest.fixture(scope="session")
+def query_schemas(spark):
+    """{name: output schema} of every queries() entry, built once for the
+    plan-only gates below: building a query is not free (many query
+    functions run eager jobs), so each gate reads this instead of
+    building all of them again."""
+    return {name: QUERIES[name](spark, SF_DIR).schema for name in sorted(QUERIES)}
+
+
 def _norm(v):
     if isinstance(v, bool):
         return int(v)
@@ -176,17 +185,18 @@ def _spark_family(dt) -> str:
     return s
 
 
-def test_no_hugeint_or_type_divergent_oracle_columns(spark, duck):
-    """One pass over ALL oracles: DESCRIBE each (no execution), build each
-    Spark plan (analysis only, no execution), and assert per-column engine-
-    type family equality with int-width tolerance. HUGEINT anywhere fails."""
+def test_no_hugeint_or_type_divergent_oracle_columns(query_schemas, duck):
+    """One pass over ALL oracles: DESCRIBE each (no execution), read each
+    entry's Spark output schema (``query_schemas``), and assert per-column
+    engine-type family equality with int-width tolerance. HUGEINT anywhere
+    fails."""
     bad = []
     for name in sorted(ORACLES):
         desc = duck.execute(f"DESCRIBE ({ORACLES[name]})").fetchall()
         ofam = {c.lower(): _duck_family(ty) for c, ty, *_ in desc}
         sfam = {
             f.name.lower(): _spark_family(f.dataType)
-            for f in QUERIES[name](spark, SF_DIR).schema.fields
+            for f in query_schemas[name].fields
         }
         for c, fam in ofam.items():
             if fam == "hugeint":
@@ -196,7 +206,7 @@ def test_no_hugeint_or_type_divergent_oracle_columns(spark, duck):
     assert not bad, "type-fidelity divergences:\n" + "\n".join(bad)
 
 
-def test_no_complex_typed_output_columns(spark):
+def test_no_complex_typed_output_columns(query_schemas):
     """Plan-only GRADEABILITY gate over ALL queries() entries (including
     rows-only ones with no oracle): the driver canonicalizes results with
     ``pandas.sort_values`` over every output column, which factorizes each
@@ -207,7 +217,7 @@ def test_no_complex_typed_output_columns(spark):
     operator APIs are free to keep returning them."""
     bad = []
     for name in sorted(QUERIES):
-        for f in QUERIES[name](spark, SF_DIR).schema.fields:
+        for f in query_schemas[name].fields:
             fam = _spark_family(f.dataType)
             if fam in ("list", "struct", "map"):
                 bad.append(f"{name}.{f.name}: {f.dataType.simpleString()}")
@@ -278,7 +288,7 @@ def test_sweep_type_lane_catches_seeded_decimal_width(spark, duck):
     assert not sweepmod._type_lane(good_sdf, bad_tbl, ["s"])
 
 
-def test_no_implicit_width_decimal_output_columns(spark):
+def test_no_implicit_width_decimal_output_columns(query_schemas):
     """Plan-only gate, the r9-class complement of the complex-type gate:
     any decimal-typed output column in a queries() entry must carry an
     EXPLICITLY PINNED precision of 38 — the only precision DuckDB's
@@ -290,7 +300,7 @@ def test_no_implicit_width_decimal_output_columns(spark):
     raw-decimal output in the inventory)."""
     bad = []
     for name in sorted(QUERIES):
-        for f in QUERIES[name](spark, SF_DIR).schema.fields:
+        for f in query_schemas[name].fields:
             s = f.dataType.simpleString()
             if s.startswith("decimal") and not s.startswith("decimal(38,"):
                 bad.append(f"{name}.{f.name}: {s}")

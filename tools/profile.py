@@ -1,16 +1,16 @@
 #!/usr/bin/env python
-"""Round-10 measurement harness (guide §1: measure first).
+"""Per-query profiler over the bench suite (``bench.SUITE``).
 
-For every bench-suite query: capture .explain("formatted") to
-plans/r10/<name>_<TAG>.txt, run it once against the noop sink with the
+For every suite query: capture .explain("formatted") to
+plans/<TAG>/<name>.txt, run it once against the noop sink with the
 status REST API on, and record wall seconds + per-query stage/shuffle
 telemetry + plan-shape counters (Exchange count, join strategies,
 Python-boundary nodes). ONE run per query — this is a profiling pass,
 not the bench; medians come from bench.py.
 
 Usage:
-  SPARK_GRAFT_PROFILE_TAG=before python tools/profile_r10.py [names...]
-Writes /tmp/profile_r10_<TAG>.json
+  SPARK_GRAFT_PROFILE_TAG=before python tools/profile.py [names...]
+Writes plans/<TAG>/profile.json
 """
 
 from __future__ import annotations
@@ -27,7 +27,11 @@ os.environ.setdefault("SPARK_GRAFT_UI", "true")
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 TAG = os.environ.get("SPARK_GRAFT_PROFILE_TAG", "before")
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+# the repo root REPLACES this script's directory on the path: left there,
+# this file would shadow the standard library's ``profile``, which
+# ``cProfile`` (imported by pyspark) imports
+sys.path[0] = ROOT
 
 
 def plan_shape(plan: str) -> dict:
@@ -54,18 +58,13 @@ def main() -> None:
 
     import bench_scale
     import __spark_entry__ as entrymod
+    from bench import SUITE
 
-    spark = get_session(app="starlight-profile-r10")
+    spark = get_session(app="starlight-profile")
     spark.sparkContext.setLogLevel("ERROR")
 
     queries = entrymod.queries()
-
-    import bench as benchmod
-
-    src = open(os.path.join(os.path.dirname(benchmod.__file__), "bench.py")).read()
-    suite = re.findall(r'^\s+"([a-z0-9_]+)",', src, re.M)
-    if len(sys.argv) > 1:
-        suite = sys.argv[1:]
+    suite = sys.argv[1:] or SUITE
 
     # warm JVM + file listing
     entrymod.q_list_offsets(spark, SF_DIR).write.mode("overwrite").format(
@@ -80,17 +79,13 @@ def main() -> None:
 
     metrics = bench_scale.StageMetrics(spark)
     out: dict[str, dict] = {}
-    plans_dir = os.path.join(
-        os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-        "plans",
-        "r10",
-    )
+    plans_dir = os.path.join(ROOT, "plans", TAG)
     os.makedirs(plans_dir, exist_ok=True)
 
     for name in suite:
         df = queries[name](spark, SF_DIR)
         plan = plan_string(df)
-        with open(os.path.join(plans_dir, f"{name}_{TAG}.txt"), "w") as f:
+        with open(os.path.join(plans_dir, f"{name}.txt"), "w") as f:
             f.write(plan)
         spark.sparkContext.setJobDescription(f"profile:{name}")
         metrics.mark()
@@ -113,7 +108,7 @@ def main() -> None:
             file=sys.stderr,
         )
 
-    path = f"/tmp/profile_r10_{TAG}.json"
+    path = os.path.join(plans_dir, "profile.json")
     with open(path, "w") as f:
         json.dump(out, f, indent=1, sort_keys=True)
     print(path)
