@@ -19,6 +19,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from starlight_for_kafka_spark.functions import offsets_wire as ow
+from starlight_for_kafka_spark.plans.kernels import kernel
+
 COMMIT_COLUMNS = ["group", "topic", "partition", "offset", "metadata", "commit_ts"]
 
 
@@ -931,17 +934,6 @@ def select_group_protocol(
 # ---------------------------------------------------------------------------
 
 
-def _pickle_offsets_wire_by_value() -> None:
-    """Ship functions/offsets_wire.py to executor Python workers by VALUE
-    (same rule as registry._pickle_codec_by_value — executor workers don't
-    have this package on sys.path)."""
-    from pyspark import cloudpickle
-
-    from starlight_for_kafka_spark.functions import offsets_wire
-
-    cloudpickle.register_pickle_by_value(offsets_wire)
-
-
 def encode_offsets_topic(
     commits: DataFrame,
     key_version: int = 1,
@@ -962,12 +954,7 @@ def encode_offsets_topic(
     seam as the RecordBatch v2 wire layer in sources/wire.py). Map-only:
     no shuffle; at 100 TB this parallelizes per input split.
     """
-    _pickle_offsets_wire_by_value()
-    from collections.abc import Iterator
-
     import pandas as pd
-
-    from starlight_for_kafka_spark.functions import offsets_wire as ow
 
     cols = commits.select(
         "group",
@@ -983,7 +970,7 @@ def encode_offsets_topic(
         ).alias("tomb"),
     )
 
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def op(batches):
         for pdf in batches:
             keys, values = [], []
             for r in pdf.itertuples(index=False):
@@ -1010,7 +997,9 @@ def encode_offsets_topic(
                 {"key": keys, "value": values, "append_ts": pdf["commit_ms"]}
             )
 
-    return cols.mapInPandas(op, "key binary, value binary, append_ts long")
+    return cols.mapInPandas(
+        kernel(op, ow), "key binary, value binary, append_ts long"
+    )
 
 
 def decode_offsets_topic(records: DataFrame) -> DataFrame:
@@ -1024,12 +1013,7 @@ def decode_offsets_topic(records: DataFrame) -> DataFrame:
     Map-only Arrow-batched kernel; emits (kind, group, topic, partition,
     offset, metadata, commit_ts, expire_ts, leader_epoch, value_version,
     tombstone)."""
-    _pickle_offsets_wire_by_value()
-    from collections.abc import Iterator
-
     import pandas as pd
-
-    from starlight_for_kafka_spark.functions import offsets_wire as ow
 
     has_append_ts = "append_ts" in records.columns
     schema = (
@@ -1040,7 +1024,7 @@ def decode_offsets_topic(records: DataFrame) -> DataFrame:
     if has_append_ts:
         schema += ", append_ts long"
 
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def op(batches):
         for pdf in batches:
             rows = []
             for r in pdf.itertuples(index=False):
@@ -1071,7 +1055,7 @@ def decode_offsets_topic(records: DataFrame) -> DataFrame:
                 cols_out.append("append_ts")
             yield pd.DataFrame(rows, columns=cols_out)
 
-    return records.mapInPandas(op, schema)
+    return records.mapInPandas(kernel(op, ow), schema)
 
 
 def recover_offsets_from_wire(records: DataFrame) -> DataFrame:
@@ -1131,12 +1115,9 @@ def encode_group_metadata_records(
     applyInPandas per group (the record is per-group by construction);
     group count bounds parallelism exactly as the offsets-topic partition
     count does on the broker."""
-    _pickle_offsets_wire_by_value()
     import pandas as pd
 
-    from starlight_for_kafka_spark.functions import offsets_wire as ow
-
-    def fold(pdf: pd.DataFrame) -> pd.DataFrame:
+    def fold(pdf):
         pdf = pdf.sort_values("member_id")
         first = pdf.iloc[0]
         mems = [
@@ -1163,19 +1144,16 @@ def encode_group_metadata_records(
         )
         return pd.DataFrame({"key": [key], "value": [value]})
 
-    return members.groupBy(group_col).applyInPandas(fold, "key binary, value binary")
+    return members.groupBy(group_col).applyInPandas(
+        kernel(fold, ow), "key binary, value binary"
+    )
 
 
 def decode_group_metadata_records(records: DataFrame) -> DataFrame:
     """Parse GroupMetadataValue records and explode the member array to one
     row per (group, member) — the recovery read the broker performs to
     rebuild group state (doLoadGroupsAndOffsets group-metadata branch)."""
-    _pickle_offsets_wire_by_value()
-    from collections.abc import Iterator
-
     import pandas as pd
-
-    from starlight_for_kafka_spark.functions import offsets_wire as ow
 
     schema = (
         "group string, generation int, protocol_type string, protocol string, "
@@ -1184,7 +1162,7 @@ def decode_group_metadata_records(records: DataFrame) -> DataFrame:
         "session_timeout_ms int, subscription binary, assignment binary"
     )
 
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def op(batches):
         for pdf in batches:
             rows = []
             for r in pdf.itertuples(index=False):
@@ -1211,4 +1189,4 @@ def decode_group_metadata_records(records: DataFrame) -> DataFrame:
                 ],
             )
 
-    return records.mapInPandas(op, schema)
+    return records.mapInPandas(kernel(op, ow), schema)

@@ -27,6 +27,9 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from starlight_for_kafka_spark.functions import media_codec as mc
+from starlight_for_kafka_spark.plans.kernels import kernel
+
 MEDIA_SCHEMA = T.StructType(
     [
         T.StructField("media_id", T.LongType(), False),
@@ -46,17 +49,6 @@ MEDIA_SCHEMA = T.StructType(
         ),
     ]
 )
-
-
-def _pickle_media_codec_by_value() -> None:
-    """Ship functions/media_codec.py to executor Python workers by VALUE
-    (executor workers don't have this package on sys.path — same rule as
-    registry._pickle_codec_by_value)."""
-    from pyspark import cloudpickle
-
-    from starlight_for_kafka_spark.functions import media_codec
-
-    cloudpickle.register_pickle_by_value(media_codec)
 
 
 def _bound_arrow_batch(df: DataFrame, rows_per_batch: int) -> None:
@@ -116,9 +108,6 @@ def synthesize_media(
     metadata-only operators (sample_frames, audio_chunks, pack_multimodal)
     stay pure plan arithmetic over the same numbers a decoder would see.
     """
-    _pickle_media_codec_by_value()
-    from starlight_for_kafka_spark.functions import media_codec as mc
-
     ids = df.select(F.col(id_col).cast("long").alias("media_id"))
     # spread ids across cores before the synth/decode kernels — ONLY when
     # the incoming plan is narrower than the executor slots (a small
@@ -166,7 +155,7 @@ def synthesize_media(
             for lo in range(0, len(out), target_rows_per_batch):
                 yield out.iloc[lo : lo + target_rows_per_batch]
 
-    return ids.mapInPandas(op, MEDIA_SCHEMA)
+    return ids.mapInPandas(kernel(op, mc), MEDIA_SCHEMA)
 
 
 FEATURE_SCHEMA = "media_id long, kind string, features array<double>, n_bytes long"
@@ -189,13 +178,7 @@ def extract_features(
     importable on their own sys.path — the closure-shipping rule for every
     Pandas-UDF operator here.
     """
-    if decode is None:
-        _pickle_media_codec_by_value()
-        from starlight_for_kafka_spark.functions import media_codec as mc
-
-        decode_fn = mc.decode_media
-    else:
-        decode_fn = decode
+    decode_fn = mc.decode_media if decode is None else decode
 
     def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -210,7 +193,7 @@ def extract_features(
 
     conf = media.sparkSession.conf
     conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", str(target_rows_per_batch))
-    return media.mapInPandas(op, FEATURE_SCHEMA)
+    return media.mapInPandas(kernel(op, mc), FEATURE_SCHEMA)
 
 
 def decode_stub(payload: bytes) -> list[float]:
@@ -234,9 +217,6 @@ def resize_images(
     before any payload read (column pruning). Non-image rows are excluded
     up front, so a 100 TB mixed corpus never ships audio/video payloads
     through the resize stage."""
-    _pickle_media_codec_by_value()
-    from starlight_for_kafka_spark.functions import media_codec as mc
-
     images = media.filter(F.col("kind") == "image")
 
     def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -254,7 +234,7 @@ def resize_images(
             )
 
     _bound_arrow_batch(media, target_rows_per_batch)
-    return images.mapInPandas(op, MEDIA_SCHEMA)
+    return images.mapInPandas(kernel(op, mc), MEDIA_SCHEMA)
 
 
 def _frame_ms_list(every_ms: int):
@@ -455,9 +435,6 @@ def frame_features(
     metadata-only kind filter still runs before any payload read, so
     pruned videos never ship payload bytes at all.
     """
-    _pickle_media_codec_by_value()
-    from starlight_for_kafka_spark.functions import media_codec as mc
-
     videos = (
         media.filter(
             # a NULL duration has no sampling grid — the exploded form
@@ -490,7 +467,7 @@ def frame_features(
             )
 
     _bound_arrow_batch(media, target_rows_per_batch)
-    return videos.mapInPandas(op, FRAME_FEATURE_SCHEMA)
+    return videos.mapInPandas(kernel(op, mc), FRAME_FEATURE_SCHEMA)
 
 
 CHUNK_FEATURE_SCHEMA = (
@@ -514,9 +491,6 @@ def chunk_features(
     frame_features, with the same payload-ships-once discipline; output
     rows are identical to the exploded audio_chunks form (pinned by
     test)."""
-    _pickle_media_codec_by_value()
-    from starlight_for_kafka_spark.functions import media_codec as mc
-
     staged = (
         media.filter(
             # NULL duration drops, matching the exploded form (see
@@ -554,7 +528,7 @@ def chunk_features(
             )
 
     _bound_arrow_batch(media, target_rows_per_batch)
-    return staged.mapInPandas(op, CHUNK_FEATURE_SCHEMA)
+    return staged.mapInPandas(kernel(op, mc), CHUNK_FEATURE_SCHEMA)
 
 
 PATCH_SCHEMA = (
@@ -573,9 +547,6 @@ def patchify_images(
     metadata-only so non-image payloads never reach the decoder. Output
     volume is rows x (W/p)(H/p) — plan arithmetic bounds it up front, no
     surprise explosion."""
-    _pickle_media_codec_by_value()
-    from starlight_for_kafka_spark.functions import media_codec as mc
-
     images = media.filter(F.col("kind") == "image")
 
     def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -596,7 +567,9 @@ def patchify_images(
             )
 
     _bound_arrow_batch(media, target_rows_per_batch)
-    return images.select("media_id", "payload").mapInPandas(op, PATCH_SCHEMA)
+    return images.select("media_id", "payload").mapInPandas(
+        kernel(op, mc), PATCH_SCHEMA
+    )
 
 
 def audio_periodicity(
@@ -607,9 +580,6 @@ def audio_periodicity(
     silence scores ~0; a filter gates on ac[k]/ac[0]). Map-only
     Arrow-batched decode; integer-exact, so the oracle replays it
     closed-form."""
-    _pickle_media_codec_by_value()
-    from starlight_for_kafka_spark.functions import media_codec as mc
-
     audio = media.filter(F.col("kind") == "audio")
     lag_list = list(lags)
     schema = "media_id long, n_samples long, " + ", ".join(
@@ -631,7 +601,7 @@ def audio_periodicity(
             )
 
     _bound_arrow_batch(media, target_rows_per_batch)
-    return audio.select("media_id", "payload").mapInPandas(op, schema)
+    return audio.select("media_id", "payload").mapInPandas(kernel(op, mc), schema)
 
 
 MOTION_SCHEMA = (
@@ -646,9 +616,6 @@ def video_motion_profile(
     scene-cut / static-clip curation signal (a frozen video scores ~0
     everywhere; a cut spikes one pair). One decode pass per clip emitting
     nf−1 rows; integer-exact and oracle-replayable."""
-    _pickle_media_codec_by_value()
-    from starlight_for_kafka_spark.functions import media_codec as mc
-
     videos = media.filter(F.col("kind") == "video")
 
     def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -666,4 +633,6 @@ def video_motion_profile(
             )
 
     _bound_arrow_batch(media, target_rows_per_batch)
-    return videos.select("media_id", "payload").mapInPandas(op, MOTION_SCHEMA)
+    return videos.select("media_id", "payload").mapInPandas(
+        kernel(op, mc), MOTION_SCHEMA
+    )

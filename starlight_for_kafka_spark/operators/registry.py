@@ -20,6 +20,8 @@ import json
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from starlight_for_kafka_spark.functions import avro_codec as ac
+from starlight_for_kafka_spark.plans.kernels import kernel
 from starlight_for_kafka_spark.plans.local import local_frame
 
 SUBJECT_SCHEMA = "subject string, version int, id int, type string, definition string"
@@ -468,22 +470,6 @@ def typed_view(log: DataFrame, payload_schema: str) -> DataFrame:
 # --------------------------------------------------------------------- #
 
 
-def _pickle_codec_by_value() -> None:
-    """Ship functions/avro_codec.py to executor Python workers by VALUE.
-
-    Executor workers don't have this package on sys.path (the driver adds
-    it to its own process only), so any closure referencing the module
-    by name would die with ModuleNotFoundError. register_pickle_by_value
-    makes cloudpickle embed the module source in the task closure — the
-    module equivalent of the define-kernels-inside-the-function rule.
-    """
-    from pyspark import cloudpickle
-
-    from starlight_for_kafka_spark.functions import avro_codec
-
-    cloudpickle.register_pickle_by_value(avro_codec)
-
-
 def avro_encode(
     log: DataFrame,
     schemas_by_id: dict[int, str],
@@ -500,11 +486,6 @@ def avro_encode(
     batches — per-record byte encoding is inherently row-at-a-time, same
     as the JVM reference; batches bound executor memory.
     """
-    _pickle_codec_by_value()
-    from starlight_for_kafka_spark.functions import avro_codec as ac
-
-    import pandas as pd
-
     parsed = {sid: ac.parse_schema(s) for sid, s in schemas_by_id.items()}
     keep = [f for f in log.schema.fields if f.name not in (record_col, out_col)]
     out_schema = ", ".join(
@@ -528,7 +509,7 @@ def avro_encode(
             out[out_col] = framed
             yield out
 
-    return log.mapInPandas(op, out_schema)
+    return log.mapInPandas(kernel(op, ac), out_schema)
 
 
 def avro_decode(
@@ -549,10 +530,7 @@ def avro_decode(
     re-expressed as an Arrow-batched operator; with the spark-avro jar
     available, ``from_avro`` replaces the kernel one-for-one.
     """
-    _pickle_codec_by_value()
     from pyspark.sql import types as T
-
-    from starlight_for_kafka_spark.functions import avro_codec as ac
 
     parsed = {sid: ac.parse_schema(s) for sid, s in schemas_by_id.items()}
     reader = ac.parse_schema(reader_schema)
@@ -570,6 +548,8 @@ def avro_decode(
 
     def op(batches):
         import struct as _struct
+
+        import pandas as pd
 
         for pdf in batches:
             sids, typed = [], []
@@ -599,6 +579,4 @@ def avro_decode(
             out[out_col] = pd.Series(typed, dtype="object")
             yield out
 
-    import pandas as pd
-
-    return log.mapInPandas(op, out_schema)
+    return log.mapInPandas(kernel(op, ac), out_schema)

@@ -20,6 +20,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from starlight_for_kafka_spark.functions.hashing import md5_hash64, word_shingles
+from starlight_for_kafka_spark.plans.kernels import kernel
 from starlight_for_kafka_spark.plans.local import local_frame
 
 # tiny per-language stopword markers for the n-gram/stopword heuristic
@@ -1650,7 +1651,7 @@ def bpe_tokenize(
     else:
         schema = f"{id_col} {id_type}, n_words long, token_ids array<long>"
 
-    def kernel(batches):
+    def op(batches):
         import pandas as pd
 
         rk, voc = b_ranks.value
@@ -1729,7 +1730,7 @@ def bpe_tokenize(
     # (measured at sf0.1 with 200 merges: 0.27 s unspread vs 0.82 s
     # spread 32-wide). A wide production scan pays the same per-partition
     # cache duplication inherently; locally the narrow layout is optimal.
-    return df.select(id_col, text_col).mapInPandas(kernel, schema)
+    return df.select(id_col, text_col).mapInPandas(kernel(op), schema)
 
 
 def bpe_vocab(

@@ -1,5 +1,6 @@
 """Physical-plan inspection utilities (see inspect.py)."""
 
+from starlight_for_kafka_spark.plans.kernels import kernel  # noqa: F401
 from starlight_for_kafka_spark.plans.local import local_frame  # noqa: F401
 from starlight_for_kafka_spark.plans.spread import (  # noqa: F401
     spread_if_narrow,

@@ -2,14 +2,16 @@
 
 ``spark.createDataFrame(list_of_tuples, schema)`` ships the rows as a
 pickled Python RDD: every job that reads the frame launches Python-worker
-tasks, and each worker task pays a fixed start-up cost (pyspark's
-``setup_spark_files`` calls ``importlib.invalidate_caches()``, which
-re-reads ``pyspark.zip`` once per zipimporter entry — 0.11-0.17 s per task
-on a 4-vCPU host) before doing microseconds of work. The same rows handed
-over as a ``pyarrow.Table`` become a ``LocalRelation`` in the JVM: no RDD
-and no Python task; collecting it runs no job, and broadcasting it is a
-JVM-only scan. This holds whatever
-``spark.sql.execution.arrow.pyspark.enabled`` is set to.
+tasks to do microseconds of work. Such a task used to start by re-reading
+``pyspark.zip`` once per cached zipimporter entry (pyspark's
+``setup_spark_files`` calls ``importlib.invalidate_caches()``: 0.11-0.17 s
+per task on a 4-vCPU host); since :func:`plans.kernel` drops those entries
+inside the worker, a reused worker pays that rebuild once per process, not
+per task. The task itself (worker round-trip, closure and rows pickled)
+remains. The same rows handed over as a ``pyarrow.Table`` become a
+``LocalRelation`` in the JVM: no RDD and no Python task at all; collecting
+it runs no job, and broadcasting it is a JVM-only scan. This holds
+whatever ``spark.sql.execution.arrow.pyspark.enabled`` is set to.
 
 Every small driver-built frame in this package (watermark maps, request
 lists, bucket grids, lookup tables, registry rows) goes through

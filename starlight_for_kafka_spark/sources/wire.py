@@ -24,6 +24,9 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from starlight_for_kafka_spark.functions import kafka_records as kr
+from starlight_for_kafka_spark.plans.kernels import kernel
+
 WIRE_BATCH_SCHEMA = T.StructType(
     [
         T.StructField("partition", T.IntegerType(), False),
@@ -32,16 +35,6 @@ WIRE_BATCH_SCHEMA = T.StructType(
         T.StructField("batch", T.BinaryType(), False),
     ]
 )
-
-
-def _pickle_codec_by_value() -> None:
-    """Ship functions/kafka_records.py to executor workers by value (see
-    registry._pickle_codec_by_value for the rule)."""
-    from pyspark import cloudpickle
-
-    from starlight_for_kafka_spark.functions import kafka_records
-
-    cloudpickle.register_pickle_by_value(kafka_records)
 
 
 def encode_wire_batches(
@@ -63,12 +56,7 @@ def encode_wire_batches(
     Python/Arrow invocation over 16 batches (one group per batch measured
     slower than the per-partition kernel — per-group overhead dominates).
     The batch boundaries produced are identical in all three shapes."""
-    _pickle_codec_by_value()
     from pyspark.sql import Window
-
-    from starlight_for_kafka_spark.functions import kafka_records as kr
-
-    import pandas as pd
 
     n = max_records_per_batch
     batches_per_group = 16
@@ -98,8 +86,9 @@ def encode_wire_batches(
         F.unix_millis("timestamp"),
     )
 
-    def op(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def op(key, pdf):
         import numpy as np
+        import pandas as pd
 
         pdf = pdf.sort_values("offset")
         part = int(key[0])
@@ -145,15 +134,14 @@ def encode_wire_batches(
             columns=["partition", "base_offset", "record_count", "batch"],
         )
 
-    return staged.groupBy("partition", "__grp").applyInPandas(op, WIRE_BATCH_SCHEMA)
+    return staged.groupBy("partition", "__grp").applyInPandas(
+        kernel(op, kr), WIRE_BATCH_SCHEMA
+    )
 
 
 def decode_wire_batches(batches: DataFrame) -> DataFrame:
     """Decode RecordBatch v2 blobs back to log rows (CRC-verified).
     Map-only — each blob is self-contained."""
-    _pickle_codec_by_value()
-    from starlight_for_kafka_spark.functions import kafka_records as kr
-
     mid_schema = (
         "key binary, value binary, "
         "headers array<struct<key:string,value:binary>>, "
@@ -196,7 +184,7 @@ def decode_wire_batches(batches: DataFrame) -> DataFrame:
     # negative value is a legitimate pre-1970 instant the encoder wrote
     # faithfully and must round-trip, so the test is != -1, not >= 0.
     return (
-        batches.mapInPandas(op, mid_schema)
+        batches.mapInPandas(kernel(op, kr), mid_schema)
         .withColumn(
             "timestamp",
             F.timestamp_millis(F.when(F.col("__ts_ms") != -1, F.col("__ts_ms"))),
@@ -220,9 +208,6 @@ def transcode_batches(
     every batch blob per hop; the fused form crosses the Python boundary
     once, which is the difference between N and 1 scans of the wire table
     at 100 TB."""
-    _pickle_codec_by_value()
-    from starlight_for_kafka_spark.functions import kafka_records as kr
-
     hops = compression if isinstance(compression, (list, tuple)) else [compression]
 
     def op(batch_iter):
@@ -240,7 +225,7 @@ def transcode_batches(
             out["batch"] = blobs
             yield out
 
-    return batches.mapInPandas(op, WIRE_BATCH_SCHEMA)
+    return batches.mapInPandas(kernel(op, kr), WIRE_BATCH_SCHEMA)
 
 
 def ingest_message_sets(message_sets: DataFrame) -> DataFrame:
@@ -257,9 +242,6 @@ def ingest_message_sets(message_sets: DataFrame) -> DataFrame:
     (same timezone discipline as decode_wire_batches). Headers don't
     exist before v2 → empty array. Per-message CRC32 is verified in the
     kernel. Map-only — each blob is self-contained, no shuffle."""
-    _pickle_codec_by_value()
-    from starlight_for_kafka_spark.functions import kafka_records as kr
-
     mid_schema = (
         "key binary, value binary, "
         "headers array<struct<key:string,value:binary>>, "
@@ -296,7 +278,7 @@ def ingest_message_sets(message_sets: DataFrame) -> DataFrame:
             )
 
     return (
-        message_sets.mapInPandas(op, mid_schema)
+        message_sets.mapInPandas(kernel(op, kr), mid_schema)
         .withColumn(
             "timestamp",
             F.timestamp_millis(F.when(F.col("__ts_ms") != -1, F.col("__ts_ms"))),
@@ -316,9 +298,6 @@ def down_convert_batches(
     producers with compression wrote; relative inner offsets in v1; lz4
     uses the KAFKA-3160 legacy framing, broken HC for magic v0).
     Map-only."""
-    _pickle_codec_by_value()
-    from starlight_for_kafka_spark.functions import kafka_records as kr
-
     def op(batch_iter):
         import pandas as pd
 
@@ -337,6 +316,6 @@ def down_convert_batches(
             yield out
 
     return batches.mapInPandas(
-        op,
+        kernel(op, kr),
         "partition int, base_offset long, record_count int, message_set binary",
     )

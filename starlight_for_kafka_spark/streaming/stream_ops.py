@@ -22,6 +22,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from starlight_for_kafka_spark.plans.kernels import kernel
 from starlight_for_kafka_spark.sources.logtable import KAFKA_RECORD_SCHEMA
 
 
@@ -241,7 +242,7 @@ def group_coordinator_stream(membership: DataFrame) -> DataFrame:
         )
 
     return membership.groupBy("group").applyInPandasWithState(
-        update, GROUP_STATE_OUTPUT, GROUP_STATE_SCHEMA, "update", "NoTimeout"
+        kernel(update), GROUP_STATE_OUTPUT, GROUP_STATE_SCHEMA, "update", "NoTimeout"
     )
 
 
@@ -326,7 +327,7 @@ def group_coordinator_rebalance_stream(
         )
 
     return membership.groupBy("group").applyInPandasWithState(
-        update, REBALANCE_OUTPUT, REBALANCE_STATE_SCHEMA, "update", "NoTimeout"
+        kernel(update), REBALANCE_OUTPUT, REBALANCE_STATE_SCHEMA, "update", "NoTimeout"
     )
 
 
@@ -355,7 +356,7 @@ def ema_stream(keyed_values: DataFrame, alpha: float = 0.1) -> DataFrame:
         yield pd.DataFrame({"key": [key[0]], "ema": [ema], "n": [n]})
 
     return keyed_values.groupBy("key").applyInPandasWithState(
-        update, EMA_OUTPUT, EMA_STATE_SCHEMA, "update", "NoTimeout"
+        kernel(update), EMA_OUTPUT, EMA_STATE_SCHEMA, "update", "NoTimeout"
     )
 
 
@@ -511,7 +512,7 @@ def txn_coordinator_stream(txn_events: DataFrame) -> DataFrame:
         )
 
     return txn_events.groupBy("transactional_id").applyInPandasWithState(
-        update, TXN_STATE_OUTPUT, TXN_STATE_SCHEMA, "update", "NoTimeout"
+        kernel(update), TXN_STATE_OUTPUT, TXN_STATE_SCHEMA, "update", "NoTimeout"
     )
 
 
@@ -661,7 +662,7 @@ def txn_coordinator_timeout_stream(
         txn_events.withWatermark(ts_col, watermark)
         .groupBy("transactional_id")
         .applyInPandasWithState(
-            update,
+            kernel(update),
             TXN_STATE_OUTPUT,
             TXN_TIMEOUT_STATE_SCHEMA,
             "update",
@@ -838,7 +839,7 @@ def offsets_wire_recovery_stream(records: DataFrame) -> DataFrame:
         )
 
     return decoded.groupBy("group", "topic", "partition").applyInPandasWithState(
-        update, OFFSETS_WIRE_OUTPUT, OFFSETS_WIRE_STATE, "update", "NoTimeout"
+        kernel(update), OFFSETS_WIRE_OUTPUT, OFFSETS_WIRE_STATE, "update", "NoTimeout"
     )
 
 
