@@ -47,6 +47,32 @@ def get_session(
     parity), Arrow enabled (fast Pandas-UDF path). On a real cluster the
     master/shuffle settings come from spark-submit; these defaults target
     local[N] testing.
+
+    Two static settings keep a request's driver work off the per-request
+    path (a log request is a small query, so planning is much of its
+    wall time):
+
+    - ``spark.sql.codegen.cache.maxEntries=1000``: Spark's generated-code
+      cache holds 100 classes by default, and one pass of the broker's
+      request mix (``perfbench`` ``log_serve``) needs about 150 distinct
+      classes, so the LRU evicted every plan before its next use and each
+      request recompiled its whole plan (~10 ms per class on a 4-vCPU
+      host): 137 compiles per steady-state pass, 23 with this cache. A
+      repeated read-committed request compiles 4 classes instead of 47,
+      and a repeat with the same literals compiles none; what still
+      compiles comes from per-request literals (partition and offset
+      values are inlined into the generated source).
+    - ``spark.python.sql.dataFrameDebugging.enabled=false``: PySpark wraps
+      every ``Column`` method and ``functions.*`` call to record its
+      Python call site in the JVM, about 6 extra Py4J round trips per call
+      plus a walk of the Python stack. Without it a read-committed request
+      (build plus ``toArrow``) makes 313 round trips instead of 873, and
+      a tail fetch 41 instead of 121 (``tools/request_probe.py``). What is
+      lost is the Python file:line "DataFrame context" in runtime error
+      messages (the JVM stack and the failing expression are still
+      reported); a caller who wants it builds its own session.
+
+    A plain ``SparkSession.builder`` session keeps Spark's defaults.
     """
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     if master is None:
@@ -70,6 +96,9 @@ def get_session(
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
+        # static: see the docstring for the numbers behind both
+        .config("spark.sql.codegen.cache.maxEntries", "1000")
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         # testdata timestamps are parquet timestamp[us] with
         # isAdjustedToUTC=false; read them as TIMESTAMP (session TZ is UTC)

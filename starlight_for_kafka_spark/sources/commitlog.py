@@ -59,6 +59,7 @@ from __future__ import annotations
 import json
 import os
 import shutil
+import threading
 import uuid
 
 import pyarrow.parquet as pq
@@ -95,6 +96,34 @@ def _nullable(dt: T.DataType) -> T.DataType:
 # snapshot frame needs no schema-inference job, and used as-is for the
 # empty log so both report one schema
 _READ_SCHEMA = _nullable(KAFKA_RECORD_SCHEMA)
+
+# above this many paths Spark lists a read's files with a Spark job
+_LISTING_THRESHOLD = "spark.sql.sources.parallelPartitionDiscovery.threshold"
+# concurrent reads must not save each other's raised threshold as the
+# value to restore
+_LISTING_LOCK = threading.Lock()
+
+
+def _list_on_driver(spark: SparkSession, n_paths: int, build):
+    """``build()`` with Spark's file listing kept on the driver for
+    ``n_paths`` paths. A snapshot names its files, so listing them is a
+    stat per file; above the session's parallel-discovery threshold
+    (32 by default) Spark would run a listing job instead (~0.5 s on a
+    local session). The threshold is raised only for this call and
+    restored (unset if it was unset) before returning."""
+    conf = spark.conf
+    with _LISTING_LOCK:
+        saved = conf.get(_LISTING_THRESHOLD, None)  # None: not set explicitly
+        if n_paths <= int(saved or conf.get(_LISTING_THRESHOLD)):
+            return build()
+        conf.set(_LISTING_THRESHOLD, str(n_paths))
+        try:
+            return build()
+        finally:
+            if saved is None:
+                conf.unset(_LISTING_THRESHOLD)
+            else:
+                conf.set(_LISTING_THRESHOLD, saved)
 
 
 class CommitConflict(Exception):
@@ -597,7 +626,8 @@ class CommittedLog:
         historical version stays readable until its files are aged out by
         an explicit retention pass.
 
-        The schema is known, so building the frame runs no Spark job, and
+        The schema is known and the files are listed on the driver
+        however many there are, so building the frame runs no Spark job, and
         the returned frame is tagged with the snapshot's log-end offsets
         (``tag_log_end_offsets``): ``LogTable`` on it answers
         ``latest_offsets`` / ``high_watermarks`` from the manifest."""
@@ -606,12 +636,12 @@ class CommittedLog:
             df = local_frame(spark, [], _READ_SCHEMA)
         else:
             paths = [os.path.join(self.root, f) for f in files]
-            df = (
-                spark.read.schema(_READ_SCHEMA)
-                .option("basePath", os.path.join(self.root, _DATA_DIR))
-                .parquet(*paths)
-                .select(*LOG_COLUMNS)
+            reader = spark.read.schema(_READ_SCHEMA).option(
+                "basePath", os.path.join(self.root, _DATA_DIR)
             )
+            df = _list_on_driver(
+                spark, len(paths), lambda: reader.parquet(*paths)
+            ).select(*LOG_COLUMNS)
         return tag_log_end_offsets(df, watermarks)
 
     def optimize(self, spark: SparkSession, max_retries: int = 10) -> int:

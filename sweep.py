@@ -6,8 +6,9 @@ driver and judge use.
 
 Three comparison lanes per entry:
 
-1. **Value lane** — sorted-row-set equality on Python values (bool→int,
-   Decimal→float, NaN→"NaN", -0.0 kept distinct from 0.0).
+1. **Value lane** — sorted-row-set equality on Python values, exact:
+   the rules live in ``oracle_rows.py``, which the test suite's oracle
+   parity test shares.
 2. **Type lane** — the oracle side is fetched through Arrow
    (``rel.arrow()``), which is how the driver materializes DuckDB
    results.  DuckDB surfaces HUGEINT columns as float64 through this
@@ -36,9 +37,6 @@ entries. Exit code 0 iff every compared entry is exact in both lanes.
 
 from __future__ import annotations
 
-import datetime
-import decimal
-import math
 import os
 import sys
 import time
@@ -50,41 +48,6 @@ TABLES = [
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings",
 ]
-
-
-def _norm(v):
-    if isinstance(v, bool):
-        return int(v)
-    if isinstance(v, decimal.Decimal):
-        # EXACT compare (round-10): float(v) loses digits past ~15 — a
-        # decimal(38,6) pair differing only at digit 16+ would
-        # value-pass here yet hash-red in the driver (which hashes the
-        # decimal bytes). Cross-family decimal-vs-float never reaches
-        # this compare (the type lane rejects it), so both sides are
-        # Decimal and numeric equality is well-defined; width parity is
-        # the type lane's job.
-        return v
-    if isinstance(v, float):
-        if math.isnan(v):
-            return "NaN"
-        # the driver hashes bytes, where -0.0 and 0.0 differ — keep them
-        # distinct here too so a sign divergence is visible pre-driver
-        if v == 0.0 and math.copysign(1.0, v) < 0.0:
-            return "-0.0"
-    if isinstance(v, datetime.datetime):
-        return v.isoformat()
-    if isinstance(v, (bytes, bytearray)):
-        return bytes(v).hex()
-    if isinstance(v, list):
-        return tuple(_norm(x) for x in v)
-    return v
-
-
-def _skey(row):
-    # None-safe sort key: rows only compare values when the None-flags
-    # tie, so a nullable column under tied leading columns can't raise
-    # TypeError (None replaced by a never-compared sentinel).
-    return tuple((v is None, 0 if v is None else v) for v in row)
 
 
 # ---------------------------------------------------------------- type lane
@@ -211,6 +174,7 @@ def main() -> int:
     spark.sparkContext.setLogLevel("ERROR")
 
     import __spark_entry__ as entrymod
+    import oracle_rows
 
     con = duckdb.connect()
     for t in TABLES:
@@ -231,22 +195,12 @@ def main() -> int:
                 continue
             odf = con.sql(os_[name])
             ocols = [c.lower() for c in odf.columns]
-            scols = {c.lower(): c for c in sdf.columns}
             col_ok = [c.lower() for c in sdf.columns] == ocols
             atable = odf.arrow()  # the driver's materialization path
             type_div = _type_lane(sdf, atable, ocols)
             canon_div = _canon_lane(sdf, atable)
-            srows = sorted(
-                (tuple(_norm(v) for v in r)
-                 for r in sdf.select(*[scols[c] for c in ocols]).collect()),
-                key=_skey,
-            )
-            anames = atable.schema.names
-            orows = sorted(
-                (tuple(_norm(d[c2]) for c2 in anames)
-                 for d in atable.to_pylist()),
-                key=_skey,
-            )
+            srows = oracle_rows.spark_rows(sdf, ocols)
+            orows = oracle_rows.arrow_rows(atable)
             ok = col_ok and srows == orows and not type_div and not canon_div
         except Exception as ex:  # noqa: BLE001 — report and keep sweeping
             bad += 1

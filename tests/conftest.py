@@ -62,3 +62,48 @@ def jobs_run_by(spark):
         return len(sc.statusTracker().getJobIdsForGroup(group))
 
     return count
+
+
+@pytest.fixture
+def codegen_compiles_by(spark):
+    """``codegen_compiles_by(fn)``: the number of classes Spark's code
+    generator compiles while ``fn()`` runs (the JVM-wide
+    ``CodegenMetrics`` compile-time histogram count), so a test run
+    alone on its session reads exactly its own compiles."""
+    metrics = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+
+    def count(fn):
+        before = metrics.METRIC_COMPILATION_TIME().getCount()
+        fn()
+        return metrics.METRIC_COMPILATION_TIME().getCount() - before
+
+    return count
+
+
+@pytest.fixture
+def py4j_calls_by():
+    """``py4j_calls_by(fn)``: the number of Py4J commands (driver ->
+    JVM round trips) ``fn()`` sends. Releases of garbage-collected
+    Python proxies are not counted: py4j's finalizer thread sends them
+    whenever Python's collector happens to run."""
+    from py4j.clientserver import ClientServerConnection
+    from py4j.protocol import MEMORY_COMMAND_NAME, MEMORY_DEL_SUBCOMMAND_NAME
+
+    release = MEMORY_COMMAND_NAME + MEMORY_DEL_SUBCOMMAND_NAME
+
+    def count(fn):
+        real = ClientServerConnection.send_command
+        calls = [0]
+
+        def send(self, command):
+            calls[0] += not command.startswith(release)
+            return real(self, command)
+
+        ClientServerConnection.send_command = send
+        try:
+            fn()
+        finally:
+            ClientServerConnection.send_command = real
+        return calls[0]
+
+    return count

@@ -11,6 +11,8 @@ from __future__ import annotations
 
 import json
 import os
+import sys
+from concurrent.futures import ThreadPoolExecutor
 from unittest import mock
 
 import pytest
@@ -526,13 +528,52 @@ def test_append_batches_reads_back_underscore_batch_col(spark, tmp_path):
 
 
 def test_read_runs_no_job(spark, tmp_path, jobs_run_by):
-    """The log schema is known, so building a snapshot frame (the live
-    log and a time-travel version) runs no schema-inference job."""
+    """The log schema is known and a snapshot names its files, so building
+    a snapshot frame (the live log and a time-travel version) runs no
+    schema-inference job and no file-listing job, also with more live
+    files than Spark's parallel-listing threshold (32 paths), and leaves
+    that threshold as it found it."""
     log = CommittedLog(str(tmp_path / "log"))
     for _ in range(3):
         log.append(_batch(spark, [(0, 2), (1, 1), (5, 2)]), order_col="seq")
     assert jobs_run_by(lambda: log.read(spark), "read-jobs") == 0
     assert jobs_run_by(lambda: log.read(spark, at_version=1), "read-jobs-tt") == 0
+
+    # 14 more single-record batches in each of 3 partitions: 51 live files
+    more = _batch(spark, [(p, 1) for _ in range(14) for p in (0, 1, 5)])
+    log.append_batches(
+        more.withColumn("b", F.floor(F.col("seq") / 3)), batch_col="b", order_col="seq"
+    )
+    assert len(log.snapshot()[2]) == 51
+    key = "spark.sql.sources.parallelPartitionDiscovery.threshold"
+    assert spark.conf.get(key, None) is None
+    assert jobs_run_by(lambda: log.read(spark), "read-jobs-many") == 0
+    assert spark.conf.get(key, None) is None  # still unset
+    spark.conf.set(key, "40")
+    try:
+        assert jobs_run_by(lambda: log.read(spark), "read-jobs-set") == 0
+        assert spark.conf.get(key) == "40"
+    finally:
+        spark.conf.unset(key)
+    assert log.read(spark).count() == 15 + 42
+
+    # concurrent reads of versions with 42, 45, 48 and 51 files restore
+    # the threshold too (none saves another's raised value as the one to
+    # restore)
+    last = log.snapshot()[0]
+    switch = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
+    try:
+        with ThreadPoolExecutor(8) as pool:
+            frames = list(pool.map(
+                lambda v: log.read(spark, at_version=v),
+                [last - 3, last - 2, last - 1, last] * 4,
+                timeout=120,
+            ))
+    finally:
+        sys.setswitchinterval(switch)
+    assert len(frames) == 16
+    assert spark.conf.get(key, None) is None
 
 
 def test_empty_read_schema_matches_non_empty(spark, tmp_path):

@@ -4,13 +4,11 @@ at sf0.01 — this catches parity bugs before it does)."""
 
 from __future__ import annotations
 
-import datetime
-import math
-
 import duckdb
 import pytest
 
 import __spark_entry__ as entrymod
+import oracle_rows
 from tests.conftest import SF_DIR
 
 TABLES = [
@@ -38,31 +36,6 @@ def query_schemas(spark):
     return {name: QUERIES[name](spark, SF_DIR).schema for name in sorted(QUERIES)}
 
 
-def _norm(v):
-    if isinstance(v, bool):
-        return int(v)
-    if isinstance(v, float):
-        if math.isnan(v):
-            return "NaN"
-        return v
-    if isinstance(v, datetime.datetime):
-        return v.isoformat()
-    if isinstance(v, (bytes, bytearray)):
-        return bytes(v).hex()
-    try:
-        import decimal
-
-        if isinstance(v, decimal.Decimal):
-            return float(v)
-    except ImportError:
-        pass
-    return v
-
-
-def _rowset(rows):
-    return sorted(tuple(_norm(v) for v in r) for r in rows)
-
-
 ORACLES = entrymod.oracle_sql()
 QUERIES = entrymod.queries()
 
@@ -81,16 +54,11 @@ def test_query_matches_oracle(name, spark, duck):
     assert [c.lower() for c in sdf.columns] == ocols, (
         f"{name}: column ORDER {[c.lower() for c in sdf.columns]} vs oracle {ocols}"
     )
-    spark_rows = _rowset(
-        tuple(r) for r in sdf.select(*[scols[c] for c in ocols]).collect()
-    )
-    oracle_rows = _rowset(odf.fetchall())
-    assert len(spark_rows) == len(oracle_rows), (
-        f"{name}: row count {len(spark_rows)} vs oracle {len(oracle_rows)}"
-    )
-    mismatches = [
-        (i, a, b) for i, (a, b) in enumerate(zip(spark_rows, oracle_rows)) if a != b
-    ]
+    # the sweep's exact value lane, oracle read through Arrow like the driver
+    got = oracle_rows.spark_rows(sdf, ocols)
+    want = oracle_rows.arrow_rows(odf.arrow())
+    assert len(got) == len(want), f"{name}: row count {len(got)} vs oracle {len(want)}"
+    mismatches = [(i, a, b) for i, (a, b) in enumerate(zip(got, want)) if a != b]
     assert not mismatches, f"{name}: first mismatches: {mismatches[:3]}"
 
 
