@@ -3183,7 +3183,7 @@ def q_metadata_topics(spark, sf_dir):
     )
 
 
-def q6_discounted_revenue(spark, sf_dir):
+def q_q6_discounted_revenue(spark, sf_dir):
     """TPC-H Q6 shape: multi-predicate scan (every predicate must reach the
     parquet reader) + single aggregate."""
     li = load_table(spark, sf_dir, "lineitem")
@@ -4304,281 +4304,19 @@ def q_api_versions(spark, sf_dir):
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    qmap = {
-        # The three rows at the head are the VERDICT r9 explicit
-        # driver-confirmation targets (tasks 1 and 3): keyed_running_sum
-        # was the only driver-red row in CORRECTNESS_r09 (decimal-width
-        # divergence, fixed by the decimal(38,6) cast) and the two
-        # multimodal rows were r7-red, fixed in r8, and never
-        # driver-re-sampled since. The judge's done-criteria require all
-        # three in CORRECTNESS_r10, and the driver grades the first ~50
-        # entries — everything else keeps the stable semantic grouping
-        # (per ADVICE: no sample-aware rotation; coverage is tracked in
-        # COVERAGE.json, outside this file).
-        "keyed_running_sum": q_keyed_running_sum,
-        "multimodal_frame_features": q_multimodal_frame_features,
-        "multimodal_chunk_features": q_multimodal_chunk_features,
-        "decontaminate_fuzzy": q_decontaminate_fuzzy,
-        "decontaminate_fuzzy_stored": q_decontaminate_fuzzy_stored,
-        "contamination_pairs": q_contamination_pairs,
-        "filter_funnel": q_filter_funnel,
-        "bpe_train": q_bpe_train,
-        "bpe_train_local": q_bpe_train_local,
-        "corpus_card": q_corpus_card,
-        "bpe_apply": q_bpe_apply,
-        "bpe_tokenize": q_bpe_tokenize,
-        "bpe_tokenize_tokens": q_bpe_tokenize_tokens,
-        "bpe_tokenize_ids": q_bpe_tokenize_ids,
-        "bpe_vocab": q_bpe_vocab,
-        "pack_bpe_sequences": q_pack_bpe_sequences,
-        "filter_funnel_weighted": q_filter_funnel_weighted,
-        "snapshot_delta": q_snapshot_delta,
-        "threshold_sweep": q_threshold_sweep,
-        "dedup_minhash_by_lang": q_dedup_minhash_by_lang,
-        "sql_surface_q2": q_sql_surface_q2,
-        "sql_surface_q3": q_sql_surface_q3,
-        "sql_surface_q4": q_sql_surface_q4,
-        "sql_surface_q5": q_sql_surface_q5,
-        "sql_surface_q7": q_sql_surface_q7,
-        "sql_surface_q8": q_sql_surface_q8,
-        "sql_surface_q9": q_sql_surface_q9,
-        "sql_surface_q10": q_sql_surface_q10,
-        "sql_surface_q11": q_sql_surface_q11,
-        "sql_surface_q12": q_sql_surface_q12,
-        "sql_surface_q13": q_sql_surface_q13,
-        "sql_surface_q14": q_sql_surface_q14,
-        "sql_surface_q15": q_sql_surface_q15,
-        "sql_surface_q16": q_sql_surface_q16,
-        "sql_surface_q17": q_sql_surface_q17,
-        "sql_surface_q18": q_sql_surface_q18,
-        "sql_surface_q19": q_sql_surface_q19,
-        "sql_surface_q20": q_sql_surface_q20,
-        "sql_surface_q21": q_sql_surface_q21,
-        "sql_surface_q22": q_sql_surface_q22,
-        "q6_discounted_revenue": q6_discounted_revenue,
-        "sql_surface_rollup": q_sql_surface_rollup,
-        "sql_surface_cube": q_sql_surface_cube,
-        "wire_roundtrip": q_wire_roundtrip,
-        "wire_legacy_ingest": q_wire_legacy_ingest,
-        "wire_transcode_codecs": q_wire_transcode_codecs,
-        "headers_projection": q_headers_projection,
-        "registry_subjects": q_registry_subjects,
-        "registry_compat": q_registry_compat,
-        "registry_compat_full": q_registry_compat_full,
-        "registry_subject_config": q_registry_subject_config,
-        "registry_references": q_registry_references,
-        "registry_wire": q_registry_wire,
-        "registry_delete": q_registry_delete,
-        "typed_view": q_typed_view,
-        "typed_view_avro": q_typed_view_avro,
-        "offsets_wire_roundtrip": q_offsets_wire_roundtrip,
-        "group_metadata_wire": q_group_metadata_wire,
-        "multimodal_frames": q_multimodal_frames,
-        "multimodal_resize": q_multimodal_resize,
-        "multimodal_patchify": q_multimodal_patchify,
-        "pack_multimodal": q_pack_multimodal,
-        "hll_cardinality": q_hll_cardinality,
-        "hll_dau": q_hll_dau,
-        "cm_heavy_hitters": q_cm_heavy_hitters,
-        "kmv_overlap": q_kmv_overlap,
-        "histogram_quantiles": q_histogram_quantiles,
-        "semantic_dedup_capped": q_semantic_dedup_capped,
-        "simhash_near_dups_capped": q_simhash_near_dups_capped,
-        "dedup_minhash_incremental": q_dedup_minhash_incremental,
-        "dedup_minhash_incremental_star": q_dedup_minhash_incremental_star,
-        "dedup_lines_in_doc": q_dedup_lines_in_doc,
-        "repeated_spans": q_repeated_spans,
-        "hard_negatives": q_hard_negatives,
-        "similarity_ivf_cells": q_similarity_ivf_cells,
-        "similarity_ivf_topk": q_similarity_ivf_topk,
-        "embedding_centroids": q_embedding_centroids,
-        "kmeans_step": q_kmeans_step,
-        "kmeans_fit2": q_kmeans_fit2,
-        "pq_codes_trained": q_pq_codes_trained,
-        "similarity_lsh_top5": q_similarity_lsh_top5,
-        "multimodal_features": q_multimodal_features,
-        "produce_validation": q_produce_validation,
-        "offset_out_of_range": q_offset_out_of_range,
-        "offset_expire": q_offset_expire,
-        "delete_group": q_delete_group,
-        "table_table_join": q_table_table_join,
-        "ktable_fk_join": q_ktable_fk_join,
-        "suppress_final": q_suppress_final,
-        "stream_branch": q_stream_branch,
-        "sliding_window_2h1h": q_sliding_window_2h1h,
-        "log_integrity": q_log_integrity,
-        "dedup_simhash": q_dedup_simhash,
-        "simhash_near_dups": q_simhash_near_dups,
-        "dedup_embedding": q_dedup_embedding,
-        "dedup_embedding_lsh": q_dedup_embedding_lsh,
-        "dedup_embedding_lsh_auto": q_dedup_embedding_lsh_auto,
-        "audio_periodicity": q_audio_periodicity,
-        "video_motion": q_video_motion,
-        "audio_chunks": q_audio_chunks,
-        "caption_pairs": q_caption_pairs,
-        "group_state_recovery": q_group_state_recovery,
-        "producer_state_snapshot": q_producer_state_snapshot,
-        "group_rebalance_timeline": q_group_rebalance_timeline,
-        "group_state_static": q_group_state_static,
-        "group_members": q_group_members,
-        "assign_range": q_assign_range,
-        "offset_reset": q_offset_reset,
-        "offset_commit_tombstones": q_offset_commit_tombstones,
-        "log_compact_tombstone_window": q_log_compact_tombstone_window,
-        "connected_components_chain": q_connected_components_chain,
-        "fetch_max_bytes": q_fetch_max_bytes,
-        "fetch_response_budget": q_fetch_response_budget,
-        "txn_purge_aborted": q_txn_purge_aborted,
-        "list_offsets_max_ts": q_list_offsets_max_ts,
-        "describe_log": q_describe_log,
-        "heavy_hitters": q_heavy_hitters,
-        "txn_sequence_gaps": q_txn_sequence_gaps,
-        "assign_roundrobin": q_assign_roundrobin,
-        "assign_sticky": q_assign_sticky,
-        "assign_cooperative": q_assign_cooperative,
-        "retention_bytes": q_retention_bytes,
-        "throughput_metrics": q_throughput_metrics,
-        "stream_table_join": q_stream_table_join,
-        "asof_forward": q_asof_forward,
-        "ts_similarity": q_ts_similarity,
-        "active_users": q_active_users,
-        "bpe_token_count": q_bpe_token_count,
-        "bm25_search": q_bm25_search,
-        "gopher_quality": q_gopher_quality,
-        "bpe_merge_pairs": q_bpe_merge_pairs,
-        "pagerank_event_graph": q_pagerank_event_graph,
-        "weighted_sample": q_weighted_sample,
-        "cluster_balanced_sample": q_cluster_balanced_sample,
-        "cluster_representatives": q_cluster_representatives,
-        "weighted_sample_per_lang": q_weighted_sample_per_lang,
-        "bloom_decontaminate": q_bloom_decontaminate,
-        "embedding_covariance": q_embedding_covariance,
-        "random_projection": q_random_projection,
-        "interleave_sources": q_interleave_sources,
-        "epoch_resample": q_epoch_resample,
-        "hybrid_search": q_hybrid_search,
-        "cogroup": q_cogroup,
-        "migrate_offsets": q_migrate_offsets,
-        "log_compact": q_log_compact,
-        "top_docs_per_lang": q_top_docs_per_lang,
-        "dedup_incremental": q_dedup_incremental,
-        "curate_training_set": q_curate_training_set,
-        "asof_attribution": q_asof_attribution,
-        "stream_stream_join": q_stream_stream_join,
-        "sample_stratified": q_sample_stratified,
-        "decontaminate": q_decontaminate,
-        "quantile_filter": q_quantile_filter,
-        "quantile_filter_approx": q_quantile_filter_approx,
-        "ann_recall": q_ann_recall,
-        "pq_encode": q_pq_encode,
-        "binarize_embeddings": q_binarize_embeddings,
-        "binary_recall": q_binary_recall,
-        "pq_adc_topk": q_pq_adc_topk,
-        "pq_recall": q_pq_recall,
-        "cap_per_source": q_cap_per_source,
-        "corpus_stats": q_corpus_stats,
-        "scrub_pii": q_scrub_pii,
-        "repetition_score": q_repetition_score,
-        "chunk_documents": q_chunk_documents,
-        "tfidf_terms": q_tfidf_terms,
-        "quantization_recall": q_quantization_recall,
-        "unigram_logprob": q_unigram_logprob,
-        "bigram_logprob": q_bigram_logprob,
-        "line_dedup": q_line_dedup,
-        "quality_classifier": q_quality_classifier,
-        "corpus_drift": q_corpus_drift,
-        "ccnet_bucket": q_ccnet_bucket,
-        "dsir_weights": q_dsir_weights,
-        "winnow_fingerprints": q_winnow_fingerprints,
-        "mixture_weights": q_mixture_weights,
-        "quantize_embeddings": q_quantize_embeddings,
-        "source_overlap": q_source_overlap,
-        "pack_sequences": q_pack_sequences,
-        "packing_stats": q_packing_stats,
-        "token_length_histogram": q_token_length_histogram,
-        "keyed_count_salted": q_keyed_count_salted,
-        "init_producer_ids": q_init_producer_ids,
-        "txn_markers": q_txn_markers,
-        "txn_fencing": q_txn_fencing,
-        "metadata_topics": q_metadata_topics,
-        "salted_join_revenue": q_salted_join_revenue,
-        "moving_avg_per_user": q_moving_avg_per_user,
-        "funnel_steps": q_funnel_steps,
-        "event_transitions": q_event_transitions,
-        "ts_anomaly": q_ts_anomaly,
-        "grouped_top_k": q_grouped_top_k,
-        "keyed_running_max": q_keyed_running_max,
-        "cohort_retention": q_cohort_retention,
-        "dup_ngram_fraction": q_dup_ngram_fraction,
-        "semantic_dedup": q_semantic_dedup,
-        "assign_split": q_assign_split,
-        "shuffle_rank": q_shuffle_rank,
-        "log_fetch": q_log_fetch,
-        "produce_offsets_dense": q_produce_offsets_dense,
-        "commitlog_append": q_commitlog_append,
-        "list_offsets": q_list_offsets,
-        "offsets_for_times": q_offsets_for_times,
-        "truncate_before": q_truncate_before,
-        "log_retention": q_log_retention,
-        "offset_commit_compact": q_offset_commit_compact,
-        "offset_fetch_g1": q_offset_fetch_g1,
-        "offset_fetch_stable": q_offset_fetch_stable,
-        "describe_groups": q_describe_groups,
-        "describe_group_full": q_describe_group_full,
-        "consumer_lag": q_consumer_lag,
-        "find_coordinator": q_find_coordinator,
-        "txn_read_committed": q_txn_read_committed,
-        "txn_aborted_index": q_txn_aborted_index,
-        "txn_state_machine": q_txn_state_machine,
-        "txn_last_stable_offsets": q_txn_last_stable_offsets,
-        "txn_idempotent_dedupe": q_txn_idempotent_dedupe,
-        "txn_describe_producers": q_txn_describe_producers,
-        "txn_list_transactions": q_txn_list_transactions,
-        "txn_describe_transactions": q_txn_describe_transactions,
-        "txn_timeout_abort": q_txn_timeout_abort,
-        "txn_id_expiry": q_txn_id_expiry,
-        "keyed_count": q_keyed_count,
-        "keyed_reduce": q_keyed_reduce,
-        "tumbling_window_1h": q_tumbling_window_1h,
-        "session_windows": q_session_windows,
-        "session_reduce": q_session_reduce,
-        "ktable_latest": q_ktable_latest,
-        "table_aggregate": q_table_aggregate,
-        "global_join_inner": q_global_join_inner,
-        "global_join_left": q_global_join_left,
-        "q1_pricing_summary": q_q1_pricing_summary,
-        "top_revenue_orders": q_top_revenue_orders,
-        "dedup_exact": q_dedup_exact,
-        "dedup_ngram_jaccard": q_dedup_ngram_jaccard,
-        "dedup_minhash": q_dedup_minhash,
-        "dedup_minhash_capped": q_dedup_minhash_capped,
-        "minhash_jaccard_estimate": q_minhash_jaccard_estimate,
-        "zorder_events": q_zorder_events,
-        "group_select_protocol": q_group_select_protocol,
-        "dedup_minhash_cc": q_dedup_minhash_cc,
-        "dedup_cluster_stats": q_dedup_cluster_stats,
-        "split_leakage_safe": q_split_leakage_safe,
-        "dedup_stats": q_dedup_stats,
-        "text_stats": q_text_stats,
-        "text_fingerprint": q_text_fingerprint,
-        "text_language_id": q_text_language_id,
-        "similarity_top10": q_similarity_top10,
-        "knn_join_brute": q_knn_join_brute,
-        "knn_join_lsh": q_knn_join_lsh,
-        "knn_join_ivf": q_knn_join_ivf,
-        "remove_repeated_spans": q_remove_repeated_spans,
-        "soft_dedup_weights": q_soft_dedup_weights,
-        "api_versions": q_api_versions,
-        "pq_knn_join": q_pq_knn_join,
-        "pq_knn_join_stored": q_pq_knn_join_stored,
-        "knn_join_l2": q_knn_join_l2,
-        "minhash_recall": q_minhash_recall,
+    """Every ``q_<name>`` function of this module, keyed by ``<name>``.
+
+    Stable, name-sorted order (the naming convention groups families —
+    sql_surface_*, dedup_*, txn_*, registry_*, knn_* — so sorting is also
+    a semantic grouping). No coverage-aware reordering: coverage telemetry
+    lives outside this file (COVERAGE.json).
+    """
+    found = {
+        name[2:]: fn
+        for name, fn in globals().items()
+        if name.startswith("q_") and callable(fn)
     }
-    # Stable, name-sorted order (the naming convention groups families —
-    # sql_surface_*, dedup_*, txn_*, registry_*, knn_* — so sorting is
-    # also a semantic grouping). No coverage-aware reordering: coverage
-    # telemetry lives outside this file (COVERAGE.json).
-    return {n: qmap[n] for n in sorted(qmap)}
+    return {n: found[n] for n in sorted(found)}
 
 
 # ===================================================================== #

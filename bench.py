@@ -119,27 +119,6 @@ def main() -> None:
         release_session_storage,
     )
 
-    from starlight_for_kafka_spark.operators.multimodal import (
-        restore_arrow_batch_cap,
-    )
-
-    def release_leaked_state() -> None:
-        # single-checkpoint operators pin RDDs that outlive their query;
-        # across runs x queries those accumulate into old-gen GC pressure
-        # that inflates LATER queries' times — exactly the cross-round
-        # noise the median protocol is meant to kill (see
-        # plans/checkpoints.py for the measured numbers)
-        release_session_storage(spark)
-        # the payload kernels MIN-ratchet the session-global Arrow
-        # rows-per-batch cap to 256 at plan-build; left in force it makes
-        # every LATER Arrow hop (wire codecs, offsets codec, producer
-        # snapshots) pay ~40x batch overhead — measured as the
-        # offsets_wire_roundtrip 1.30s -> 1.78s "regression" when the
-        # media rows joined the suite. Restore between queries; a payload
-        # query re-ratchets itself inside its own timed region, which is
-        # exactly what a fresh session running that query would pay.
-        restore_arrow_batch_cap(spark)
-
     # INTERLEAVED passes, not back-to-back runs: this host has bursty
     # ambient co-tenant load (observed 30%+ swings between whole bench
     # invocations); a burst during one query's three consecutive runs
@@ -183,7 +162,12 @@ def main() -> None:
             t0 = time.perf_counter()
             queries[name](spark, SF_DIR).write.mode("overwrite").format("noop").save()
             samples[name].append(round(time.perf_counter() - t0, 3))
-            release_leaked_state()
+            # single-checkpoint operators pin RDDs that outlive their
+            # query; across runs x queries those accumulate into old-gen
+            # GC pressure that inflates LATER queries' times — exactly the
+            # cross-round noise the median protocol is meant to kill (see
+            # plans/checkpoints.py for the measured numbers)
+            release_session_storage(spark)
         s1, t1_ticks = _stat_ticks()
         dt = t1_ticks - t0_ticks
         steal_pct_per_pass.append(

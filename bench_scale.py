@@ -1274,14 +1274,6 @@ def main() -> None:
         # residue vs 3.3s after a System.gc, identical plans — see
         # plans/checkpoints.py)
         release_session_storage(spark)
-        # lift the payload kernels' session-global Arrow rows-per-batch
-        # ratchet so non-payload rows don't inherit 256-row batches (a
-        # payload row re-ratchets itself at plan build; see bench.py)
-        from starlight_for_kafka_spark.operators.multimodal import (
-            restore_arrow_batch_cap,
-        )
-
-        restore_arrow_batch_cap(spark)
         shuffle[name] = metrics.delta()
         print(
             f"  {name}: {timings[name]}s "

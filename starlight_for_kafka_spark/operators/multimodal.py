@@ -11,11 +11,16 @@ container, so formats beyond those four raise ValueError at the same seam
 (swap in a richer ``decode`` callable when the libs exist); a deterministic
 byte-sampling ``decode_stub`` is retained for plumbing-only tests.
 
-Scale notes: media rows are large (MBs); the operators repartition by an
-explicit ``target_rows_per_batch`` so a 100 TB corpus maps to bounded-memory
-Arrow batches, and metadata-only predicates (width/duration filters) are
-evaluated BEFORE decode so parquet column pruning skips payload bytes
-entirely for filtered rows.
+Scale notes: media rows are large (MBs), so Arrow batches are bounded by
+bytes, not rows: ``get_session`` sets the static
+``spark.sql.execution.arrow.maxBytesPerBatch`` to ``ARROW_BATCH_BYTES``,
+which splits every JVM->Python batch of these kernels at 8 MiB (plus one
+row) whatever the payload size, and no operator here writes a session conf.
+The one kernel whose OUTPUT is payload-sized (``synthesize_media``, which
+turns bare ids into payloads) cuts its own output at the same constant.
+Metadata-only predicates (width/duration filters) are evaluated BEFORE
+decode so parquet column pruning skips payload bytes entirely for filtered
+rows.
 """
 
 from __future__ import annotations
@@ -29,6 +34,7 @@ from pyspark.sql import types as T
 
 from starlight_for_kafka_spark.functions import media_codec as mc
 from starlight_for_kafka_spark.plans.kernels import kernel
+from starlight_for_kafka_spark.session import ARROW_BATCH_BYTES
 
 MEDIA_SCHEMA = T.StructType(
     [
@@ -51,50 +57,7 @@ MEDIA_SCHEMA = T.StructType(
 )
 
 
-def _bound_arrow_batch(df: DataFrame, rows_per_batch: int) -> None:
-    """Cap Arrow batch ROW count for payload-carrying kernels. Spark sizes
-    Arrow batches by rows (spark.sql.execution.arrow.maxRecordsPerBatch,
-    default 10 000), not bytes — with multi-KB binary payloads, a default
-    batch is 10k × payload bytes of DIRECT memory PER CORE, which blows
-    the executor's direct-memory ceiling long before the heap (measured:
-    166k synthetic clips on local[32] fail allocating a ~280 MB Arrow
-    buffer against the 8 GB direct limit at the default; 256-row batches
-    sail through). Size rows_per_batch so rows × payload × cores stays
-    well under spark.executor.memoryOverhead / direct-memory headroom.
-
-    SESSION-WIDE AND STICKY: Spark reads this conf at EXECUTION time, not
-    plan-build time, and it applies to every later Arrow exchange in the
-    session (toPandas, other mapInPandas) until changed. To keep build
-    order irrelevant, this is a monotonic MIN-ratchet: it only ever
-    LOWERS the session cap (two payload operators built before either
-    executes both get the smaller — safe — bound; a larger target can
-    never override a smaller one already in force). The residual small
-    cap for later non-payload exchanges costs batches, never
-    correctness; call ``restore_arrow_batch_cap`` to lift it."""
-    conf = df.sparkSession.conf
-    current = int(
-        conf.get("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
-    )
-    if rows_per_batch < current:
-        conf.set(
-            "spark.sql.execution.arrow.maxRecordsPerBatch", str(rows_per_batch)
-        )
-
-
-def restore_arrow_batch_cap(spark, rows_per_batch: int = 10000) -> None:
-    """Lift the session-wide Arrow rows-per-batch cap that
-    :func:`_bound_arrow_batch` ratchets down, AFTER the payload-carrying
-    plans have executed (the conf is read at execution, so restoring
-    before an action on a payload plan re-exposes the direct-memory
-    blowup the ratchet prevents)."""
-    spark.conf.set(
-        "spark.sql.execution.arrow.maxRecordsPerBatch", str(rows_per_batch)
-    )
-
-
-def synthesize_media(
-    df: DataFrame, id_col: str = "doc_id", target_rows_per_batch: int = 256
-) -> DataFrame:
+def synthesize_media(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     """Build a deterministic media table keyed by document id: REAL
     encoded payloads — WAV (16-bit PCM), PPM/BMP (alternating, so both
     image containers are exercised), YUV4MPEG2 (4:4:4 planar video) —
@@ -107,6 +70,11 @@ def synthesize_media(
     count / frame count, dimensions from the image constants), so the
     metadata-only operators (sample_frames, audio_chunks, pack_multimodal)
     stay pure plan arithmetic over the same numbers a decoder would see.
+
+    The input is bare ids, which no Arrow byte bound splits, so the kernel
+    yields each time its accumulated payload bytes reach
+    ``ARROW_BATCH_BYTES`` instead of building one frame per input batch
+    (up to 10 000 payloads).
     """
     ids = df.select(F.col(id_col).cast("long").alias("media_id"))
     # spread ids across cores before the synth/decode kernels — ONLY when
@@ -120,11 +88,11 @@ def synthesize_media(
     n_part = df.sparkSession.sparkContext.defaultParallelism
     if ids.rdd.getNumPartitions() < n_part:
         ids = ids.repartition(n_part, "media_id")
-    _bound_arrow_batch(df, target_rows_per_batch)
+    columns = ["media_id", "kind", "payload", "meta"]
 
     def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        rows, n_bytes = [], 0
         for pdf in batches:
-            rows = []
             for mid in pdf["media_id"]:
                 mid = int(mid)
                 k = mid % 3
@@ -146,14 +114,14 @@ def synthesize_media(
                         width=mc.VID_W, height=mc.VID_H, duration_ms=dur, codec="y4m"
                     )
                     rows.append((mid, "video", payload, meta))
-            out = pd.DataFrame(
-                rows, columns=["media_id", "kind", "payload", "meta"]
-            )
-            # bound the Python->JVM direction in-kernel too: the session
-            # conf only governs the JVM->Python input batches. Inline (no
-            # module-level helper): the closure must pickle by value.
-            for lo in range(0, len(out), target_rows_per_batch):
-                yield out.iloc[lo : lo + target_rows_per_batch]
+                # the session bound only splits JVM->Python batches; the
+                # Python->JVM direction is cut here, at the same size
+                n_bytes += len(payload)
+                if n_bytes >= ARROW_BATCH_BYTES:
+                    yield pd.DataFrame(rows, columns=columns)
+                    rows, n_bytes = [], 0
+        if rows:
+            yield pd.DataFrame(rows, columns=columns)
 
     return ids.mapInPandas(kernel(op, mc), MEDIA_SCHEMA)
 
@@ -161,13 +129,13 @@ def synthesize_media(
 FEATURE_SCHEMA = "media_id long, kind string, features array<double>, n_bytes long"
 
 
-def extract_features(
-    media: DataFrame, target_rows_per_batch: int = 256, decode=None
-) -> DataFrame:
+def extract_features(media: DataFrame, decode=None) -> DataFrame:
     """Decode + feature-extract via mapInPandas (Arrow batches).
 
-    The iterator form processes one bounded Arrow batch at a time, so
-    executor memory is ~batch_size × row_size regardless of corpus size.
+    The iterator form processes one Arrow batch at a time, and the session
+    byte bound (``ARROW_BATCH_BYTES``) caps each batch at 8 MiB plus one
+    row, so executor memory stays bounded regardless of corpus size or
+    payload size.
 
     The default kernel is the REAL media_codec parser (WAV/PPM/BMP/Y4M by
     magic bytes — see functions/media_codec.py for the 8-double feature
@@ -191,8 +159,6 @@ def extract_features(
                 }
             )
 
-    conf = media.sparkSession.conf
-    conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", str(target_rows_per_batch))
     return media.mapInPandas(kernel(op, mc), FEATURE_SCHEMA)
 
 
@@ -206,9 +172,7 @@ def decode_stub(payload: bytes) -> list[float]:
     return [float(payload[i * n // 8] if n else 0) for i in range(8)]
 
 
-def resize_images(
-    media: DataFrame, width: int, height: int, target_rows_per_batch: int = 256
-) -> DataFrame:
+def resize_images(media: DataFrame, width: int, height: int) -> DataFrame:
     """REAL nearest-neighbor resize: each image payload (PPM or BMP) is
     decoded, resampled on the integer grid src=(r*H//h, c*W//w), and
     re-encoded as PPM — bit-deterministic, so the oracle can replay the
@@ -233,7 +197,6 @@ def resize_images(
                 rows, columns=["media_id", "kind", "payload", "meta"]
             )
 
-    _bound_arrow_batch(media, target_rows_per_batch)
     return images.mapInPandas(kernel(op, mc), MEDIA_SCHEMA)
 
 
@@ -418,9 +381,7 @@ FRAME_FEATURE_SCHEMA = (
 )
 
 
-def frame_features(
-    media: DataFrame, every_ms: int = 500, target_rows_per_batch: int = 256
-) -> DataFrame:
+def frame_features(media: DataFrame, every_ms: int = 500) -> DataFrame:
     """Per-sampled-frame features: the sampled frame timestamps are plan
     arithmetic over metadata (same sequence as sample_frames), collected
     into ONE array column per video so each payload crosses the Arrow
@@ -466,7 +427,6 @@ def frame_features(
                 ],
             )
 
-    _bound_arrow_batch(media, target_rows_per_batch)
     return videos.mapInPandas(kernel(op, mc), FRAME_FEATURE_SCHEMA)
 
 
@@ -480,7 +440,6 @@ def chunk_features(
     media: DataFrame,
     chunk_ms: int = 5000,
     overlap_ms: int = 1000,
-    target_rows_per_batch: int = 256,
 ) -> DataFrame:
     """Per-chunk audio features: the overlapping chunk spans are plan
     arithmetic over metadata (same arithmetic as audio_chunks), collected
@@ -527,7 +486,6 @@ def chunk_features(
                 ],
             )
 
-    _bound_arrow_batch(media, target_rows_per_batch)
     return staged.mapInPandas(kernel(op, mc), CHUNK_FEATURE_SCHEMA)
 
 
@@ -537,9 +495,7 @@ PATCH_SCHEMA = (
 )
 
 
-def patchify_images(
-    media: DataFrame, patch: int = 6, target_rows_per_batch: int = 256
-) -> DataFrame:
+def patchify_images(media: DataFrame, patch: int = 6) -> DataFrame:
     """ViT-style patch grid: each image decodes ONCE and emits one row per
     non-overlapping patch (edge patches clipped) with per-channel sums —
     the vision-token analog of text tokenization, and the feed for a
@@ -566,15 +522,12 @@ def patchify_images(
                 ],
             )
 
-    _bound_arrow_batch(media, target_rows_per_batch)
     return images.select("media_id", "payload").mapInPandas(
         kernel(op, mc), PATCH_SCHEMA
     )
 
 
-def audio_periodicity(
-    media: DataFrame, lags: tuple = (1, 241), target_rows_per_batch: int = 256
-) -> DataFrame:
+def audio_periodicity(media: DataFrame, lags: tuple = (1, 241)) -> DataFrame:
     """Integer autocorrelation per clip at fixed lags — the
     periodicity/silence curation signal (pure tones spike at their period,
     silence scores ~0; a filter gates on ac[k]/ac[0]). Map-only
@@ -600,7 +553,6 @@ def audio_periodicity(
                 columns=["media_id", "n_samples"] + [f"ac_{k}" for k in lag_list],
             )
 
-    _bound_arrow_batch(media, target_rows_per_batch)
     return audio.select("media_id", "payload").mapInPandas(kernel(op, mc), schema)
 
 
@@ -609,9 +561,7 @@ MOTION_SCHEMA = (
 )
 
 
-def video_motion_profile(
-    media: DataFrame, target_rows_per_batch: int = 256
-) -> DataFrame:
+def video_motion_profile(media: DataFrame) -> DataFrame:
     """Per consecutive-frame-pair motion energy (sum |Δplane|) — the
     scene-cut / static-clip curation signal (a frozen video scores ~0
     everywhere; a cut spikes one pair). One decode pass per clip emitting
@@ -632,7 +582,6 @@ def video_motion_profile(
                 columns=["media_id", "frame_idx", "motion_y", "motion_u", "motion_v"],
             )
 
-    _bound_arrow_batch(media, target_rows_per_batch)
     return videos.select("media_id", "payload").mapInPandas(
         kernel(op, mc), MOTION_SCHEMA
     )

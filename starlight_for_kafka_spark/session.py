@@ -15,6 +15,10 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+# Byte bound on every Arrow batch the engine session ships to a Python
+# kernel (``spark.sql.execution.arrow.maxBytesPerBatch``); see get_session.
+ARROW_BATCH_BYTES = 8 << 20
+
 # Timestamp-typed (nanos at rest) columns per testdata table.
 _NANO_TS_COLS: dict[str, list[str]] = {
     "events": ["ts"],
@@ -48,7 +52,24 @@ def get_session(
     master/shuffle settings come from spark-submit; these defaults target
     local[N] testing.
 
-    Two static settings keep a request's driver work off the per-request
+    Three static settings. The first bounds the memory of the Python
+    kernels:
+
+    - ``spark.sql.execution.arrow.maxBytesPerBatch=8 MiB``
+      (``ARROW_BATCH_BYTES``): Spark cuts the Arrow batches it sends to a
+      ``mapInPandas`` kernel at 10 000 rows by default, whatever their
+      size. With multi-KB media payloads a
+      10 000-row batch is hundreds of MB of direct memory per core: 166k
+      synthetic clips on local[32] failed allocating a ~280 MB Arrow
+      buffer against the 8 GB direct-memory limit. With the byte bound a
+      batch closes once it reaches 8 MiB, so it holds at most 8 MiB plus
+      one row, and only batches that really are large are split (a
+      ``perfbench`` ``wire_convert`` pass ships 7.68 MB in all, none of
+      it split). Operators write no session conf for this; a plain
+      ``SparkSession.builder`` session that runs the media operators over
+      large payloads must set the bound itself.
+
+    The other two keep a request's driver work off the per-request
     path (a log request is a small query, so planning is much of its
     wall time):
 
@@ -96,7 +117,8 @@ def get_session(
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        # static: see the docstring for the numbers behind both
+        # static: see the docstring for the numbers behind all three
+        .config("spark.sql.execution.arrow.maxBytesPerBatch", str(ARROW_BATCH_BYTES))
         .config("spark.sql.codegen.cache.maxEntries", "1000")
         .config("spark.python.sql.dataFrameDebugging.enabled", "false")
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")

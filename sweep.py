@@ -32,7 +32,8 @@ accident; from /tmp it fails loudly if a kernel isn't pickled by value.
     cd /tmp && python /root/repo/sweep.py [sf_dir] [name ...]
 
 Defaults to /root/testdata/sf0.01 (the driver's grading scale) and all
-entries. Exit code 0 iff every compared entry is exact in both lanes.
+entries. Exit code 0 iff every entry has an oracle and is exact in every
+lane; an entry without an oracle counts as bad.
 """
 
 from __future__ import annotations
@@ -187,12 +188,12 @@ def main() -> int:
     t0 = time.time()
     bad = 0
     for name in todo:
+        if name not in os_:
+            bad += 1
+            print(f"{name} NO ORACLE", flush=True)
+            continue
         try:
             sdf = qs[name](spark, sf)
-            if name not in os_:
-                # rows-only entry (non-SQL-expressible): just run it
-                sdf.collect()
-                continue
             odf = con.sql(os_[name])
             ocols = [c.lower() for c in odf.columns]
             col_ok = [c.lower() for c in sdf.columns] == ocols

@@ -237,22 +237,3 @@ def test_video_motion_static_clip_scores_zero():
     v, _ = mc.synth_video(2)
     assert all(m["motion_y"] > 0 for m in mc.video_motion(v))
 
-
-def test_bound_arrow_batch_is_min_ratchet(spark):
-    """The Arrow rows-per-batch cap is session-global and read at
-    EXECUTION time — two payload operators built before either executes
-    must both get the smaller bound regardless of build order, so the
-    cap only ever ratchets DOWN; restore_arrow_batch_cap lifts it."""
-    from starlight_for_kafka_spark.operators import multimodal as mm
-
-    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
-    df = spark.range(1)
-    mm.restore_arrow_batch_cap(spark, 10000)
-    mm._bound_arrow_batch(df, 256)
-    assert spark.conf.get(key) == "256"
-    mm._bound_arrow_batch(df, 4096)  # larger target can't raise the cap
-    assert spark.conf.get(key) == "256"
-    mm._bound_arrow_batch(df, 64)
-    assert spark.conf.get(key) == "64"
-    mm.restore_arrow_batch_cap(spark)
-    assert spark.conf.get(key) == "10000"

@@ -4,6 +4,10 @@ at sf0.01 — this catches parity bugs before it does)."""
 
 from __future__ import annotations
 
+import ast
+import pathlib
+from collections import Counter
+
 import duckdb
 import pytest
 
@@ -62,12 +66,33 @@ def test_query_matches_oracle(name, spark, duck):
     assert not mismatches, f"{name}: first mismatches: {mismatches[:3]}"
 
 
-def test_every_query_has_oracle_or_is_flagged():
-    # every declared query carries a deterministic DuckDB oracle — the
-    # former rows-only trio (LSH bucketing, stubbed media decode) gained
-    # exact oracles in round 2 (md5-replayable hyperplanes; byte-sampling
-    # stub recomputed from the ASCII text)
-    assert set(QUERIES) - set(ORACLES) == set()
+def test_every_query_has_an_oracle_and_every_oracle_a_query():
+    # every declared query carries a deterministic DuckDB oracle, and an
+    # oracle whose query is gone (or misnamed) is never compared at all
+    assert set(QUERIES) == set(ORACLES)
+
+
+def _declared_twice(source: str) -> list[str]:
+    """Names declared twice in ``source``: a ``def q_*`` defined again (the
+    later one silently replaces the earlier in ``queries()``) or a key
+    repeated in a dict literal of ``oracle_sql()`` (the later oracle
+    silently wins)."""
+    top = [n for n in ast.parse(source).body if isinstance(n, ast.FunctionDef)]
+    counts = [Counter(n.name for n in top if n.name.startswith("q_"))]
+    for fn in top:
+        if fn.name == "oracle_sql":
+            counts += [
+                Counter(k.value for k in d.keys if isinstance(k, ast.Constant))
+                for d in ast.walk(fn)
+                if isinstance(d, ast.Dict)
+            ]
+    return sorted(name for c in counts for name, n in c.items() if n > 1)
+
+
+def test_no_query_or_oracle_is_declared_twice():
+    assert _declared_twice(pathlib.Path(entrymod.__file__).read_text()) == []
+    assert _declared_twice("def q_a(): pass\ndef q_a(): pass\n") == ["q_a"]
+    assert _declared_twice('def oracle_sql():\n    return {"a": "x", "a": "y"}\n') == ["a"]
 
 
 def test_entry_smoke(spark):

@@ -73,9 +73,6 @@ def main() -> None:
 
     from starlight_for_kafka_spark.plans.checkpoints import release_session_storage
     from starlight_for_kafka_spark.plans.inspect import plan_string
-    from starlight_for_kafka_spark.operators.multimodal import (
-        restore_arrow_batch_cap,
-    )
 
     metrics = bench_scale.StageMetrics(spark)
     out: dict[str, dict] = {}
@@ -95,7 +92,6 @@ def main() -> None:
         d = metrics.delta()
         spark.sparkContext.setJobDescription(None)
         release_session_storage(spark)
-        restore_arrow_batch_cap(spark)
         out[name] = {
             "wall_s": wall,
             **d,
