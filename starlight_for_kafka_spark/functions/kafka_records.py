@@ -541,62 +541,6 @@ def _assemble_v2(
     return bytes(out)
 
 
-def encode_batches_v2_many(
-    chunks: list[tuple[int, list[dict]]],
-    compression: str | None = None,
-    producer_id: int = -1,
-    producer_epoch: int = -1,
-    base_sequence: int = -1,
-    partition_leader_epoch: int = 0,
-    attributes: int = 0,
-) -> list[bytes]:
-    """:func:`encode_batch_v2` over many (base_offset, records) chunks,
-    byte-identical outputs (pinned by test). Delegates to the columnar
-    encoder (:func:`encode_batches_v2_columnar`): all varints vectorize
-    across the chunk and all CRCs run as ONE :func:`crc32c_many` call.
-
-    Requires each chunk's base_offset to equal its first record's offset
-    (every caller chunks that way); falls back to the per-record path for
-    the general case."""
-    import numpy as np
-
-    if not chunks:
-        return []
-    if any(
-        not recs or base != recs[0]["offset"] for base, recs in chunks
-    ):
-        parts = [
-            _encode_v2_crc_part(
-                base, recs, producer_id, producer_epoch, base_sequence,
-                attributes, compression,
-            )
-            for base, recs in chunks
-        ]
-        return [
-            _assemble_v2(base, partition_leader_epoch, crc, part)
-            for (base, _), crc, part in zip(chunks, crc32c_many(parts), parts)
-        ]
-    all_recs = [r for _, recs in chunks for r in recs]
-    sizes = [len(recs) for _, recs in chunks]
-    has_headers = any(r.get("headers") for r in all_recs)
-    return encode_batches_v2_columnar(
-        np.fromiter((r["offset"] for r in all_recs), np.int64, len(all_recs)),
-        np.fromiter(
-            (r["timestamp_ms"] for r in all_recs), np.int64, len(all_recs)
-        ),
-        [r.get("key") for r in all_recs],
-        [r.get("value") for r in all_recs],
-        [r.get("headers") for r in all_recs] if has_headers else None,
-        np.concatenate(([0], np.cumsum(sizes)[:-1])),
-        compression=compression,
-        producer_id=producer_id,
-        producer_epoch=producer_epoch,
-        base_sequence=base_sequence,
-        partition_leader_epoch=partition_leader_epoch,
-        attributes=attributes,
-    )
-
-
 # ---------------------------------------------------------------------- #
 # columnar (numpy-vectorized) v2 record codec
 #
@@ -706,7 +650,7 @@ def encode_batches_v2_columnar(
     ``(key, value)`` tuples (or ``None`` for the whole argument when no
     record has headers). ``batch_starts`` are the record indices where
     each batch begins (each batch's base offset is its first record's
-    offset, matching the chunking in :func:`encode_batches_v2_many`).
+    offset).
     Byte-identical to per-record encoding (pinned by tests)."""
     import numpy as np
 
@@ -1085,19 +1029,6 @@ def decode_batch_v2(buf: bytes, verify_crc: bool = True) -> dict:
         "base_sequence": base_sequence,
         "records": records,
     }
-
-
-def decode_batches_v2(buf: bytes) -> list[dict]:
-    """Decode a sequence of concatenated v2 batches (a fetch response's
-    records blob)."""
-    out = []
-    pos = 0
-    while pos < len(buf):
-        batch_length = struct.unpack_from(">i", buf, pos + 8)[0]
-        total = 12 + batch_length
-        out.append(decode_batch_v2(buf[pos : pos + total]))
-        pos += total
-    return out
 
 
 def transcode(batch_bytes: bytes, compression: str | None = None) -> bytes:

@@ -26,6 +26,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from starlight_for_kafka_spark.plans.local import local_frame
+from starlight_for_kafka_spark.sources.commitlog import PosixManifestBackend
 
 TXN_SIZE = 10  # records per synthetic transaction in the derived fixture
 
@@ -655,8 +656,9 @@ class ProducerStateStore:
     max last_offset / max txn_status), so a transaction spanning the
     snapshot boundary merges correctly from its two partial rows.
 
-    Layout (same discipline as CommittedLog, one dir per snapshot plus an
-    atomically-linked manifest so readers never see a half-written one)::
+    Layout (same discipline as CommittedLog, one dir per snapshot plus a
+    manifest published through the same ``PosixManifestBackend``
+    PUT-if-absent, so readers never see a half-written one)::
 
         <root>/snap-<n>/*.parquet      summary rows
         <root>/_manifests/<n>.json     {"watermarks": {"<partition>": next_offset}}
@@ -673,15 +675,10 @@ class ProducerStateStore:
         import os
 
         self.root = root
-        os.makedirs(os.path.join(root, "_manifests"), exist_ok=True)
+        self.backend = PosixManifestBackend(os.path.join(root, "_manifests"))
 
     def _snapshot_ids(self) -> list[int]:
-        import os
-
-        d = os.path.join(self.root, "_manifests")
-        return sorted(
-            int(f[:-5]) for f in os.listdir(d) if f.endswith(".json")
-        )
+        return sorted(int(k[: -len(".json")]) for k in self.backend.list_keys())
 
     def latest(self) -> tuple[int, dict[int, int]] | None:
         """(snapshot_id, {partition: next_offset}) of the newest committed
@@ -694,20 +691,19 @@ class ProducerStateStore:
 
     def _manifest(self) -> tuple[int, dict] | None:
         import json
-        import os
 
         ids = self._snapshot_ids()
         if not ids:
             return None
-        with open(os.path.join(self.root, "_manifests", f"{ids[-1]}.json")) as f:
-            return ids[-1], json.load(f)
+        return ids[-1], json.loads(self.backend.get(f"{ids[-1]}.json"))
 
     def take_snapshot(self, txn_log: DataFrame) -> int:
         """Persist txn_summary(txn_log) plus the per-partition high
         watermarks it covers. Watermark collection is control-plane
         (num-partitions rows); the summary write is one aggregation pass.
-        The manifest is hard-linked into place (atomic, PUT-if-absent) so
-        a racing snapshotter loses cleanly and retries with the next id."""
+        The manifest is published with the backend's PUT-if-absent
+        (durable and atomic), so a racing snapshotter loses cleanly and
+        retries with the next id."""
         import json
         import os
         import uuid
@@ -741,20 +737,12 @@ class ProducerStateStore:
                 "watermarks": {str(p): o for p, o in wm.items()},
                 "data_dir": data_dir,
             }
-        )
+        ).encode()
         snap_id = (self._snapshot_ids() or [0])[-1] + 1
-        while True:
-            tmp = os.path.join(self.root, "_manifests", f".tmp-{data_dir}")
-            final = os.path.join(self.root, "_manifests", f"{snap_id}.json")
-            with open(tmp, "w") as f:
-                f.write(payload)
-            try:
-                os.link(tmp, final)  # atomic create: exactly one winner
-                os.unlink(tmp)
-                return snap_id
-            except FileExistsError:
-                os.unlink(tmp)
-                snap_id += 1  # lost the race: same data, next manifest id
+        # lost the race: same data, next manifest id
+        while not self.backend.put_if_absent(f"{snap_id}.json", payload):
+            snap_id += 1
+        return snap_id
 
     def snapshot_tail(self, txn_log: DataFrame, watermarks: dict[int, int]) -> DataFrame:
         """The records NOT covered by the snapshot: a literal prefilter

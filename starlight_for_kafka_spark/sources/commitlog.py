@@ -63,7 +63,7 @@ import threading
 import uuid
 
 import pyarrow.parquet as pq
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -151,12 +151,15 @@ def _staged_counts(stage_dir: str) -> dict[int, int]:
     return counts
 
 
-def _staged_batches(stage_dir: str, batch_col: str) -> dict[int, str]:
+def _staged_batches(stage_dir: str, batch_col: str | None) -> dict[int, str]:
     """{batch value: its ``<batch_col>=<b>`` subtree} of a
     ``partitionBy(batch_col, "partition")`` staged write. The value is
     read back from the directory name — an integral value is never
     path-escaped — and a null batch (Spark's default-partition directory)
-    raises before the caller publishes anything."""
+    raises before the caller publishes anything. Without ``batch_col``
+    the whole tree is one batch, even when it staged no rows."""
+    if batch_col is None:
+        return {0: stage_dir}
     staged: dict[int, str] = {}
     for d in os.listdir(stage_dir):
         full = os.path.join(stage_dir, d)
@@ -246,8 +249,6 @@ class InMemoryConditionalPutBackend(ManifestBackend):
     and the hard-link one."""
 
     def __init__(self):
-        import threading
-
         self._objects: dict[str, bytes] = {}
         self._lock = threading.Lock()
 
@@ -361,14 +362,6 @@ class CommittedLog:
         shutil.rmtree(stage_dir, ignore_errors=True)
         return new_files
 
-    def _try_commit(self, version: int, manifest: dict) -> None:
-        """Publish a manifest ATOMICALLY via the backend's conditional
-        PUT: exactly one writer can land a given version key (hard-link
-        EEXIST on POSIX/HDFS, If-None-Match on object stores)."""
-        key = self._manifest_key(version)
-        if not self.backend.put_if_absent(key, json.dumps(manifest).encode()):
-            raise CommitConflict(f"version {version} already committed")
-
     # ------------------------------------------------------------------ #
     # append (optimistic, retried)
     # ------------------------------------------------------------------ #
@@ -407,74 +400,9 @@ class CommittedLog:
         the SAME txn_id commit exactly once: the loser re-replays, sees
         the txn landed, and no-ops.
         """
-        writer_id = writer_id or uuid.uuid4().hex[:8]
-        order = order_col or "__arrival"
-        batch = records
-        if order_col is None:
-            batch = batch.withColumn("__arrival", F.monotonically_increasing_id())
-
-        spark = records.sparkSession
-        for attempt in range(max_retries):
-            version, watermarks, _files, txns = self._replay()
-            if txn_id is not None and txn_id in txns:
-                return txns[txn_id]  # already committed: idempotent no-op
-            hwm = _watermark_frame(spark, watermarks)
-            assigned = assign_dense_offsets(batch, hwm, order)
-            # stage the attempt, then move files into the ONE consistent
-            # data/partition=p/ tree (unique names per attempt) — mixed
-            # per-writer subtrees would break Spark's partition discovery,
-            # and a shared tree keeps partition pruning on reads. Renames
-            # are metadata-only locally/on HDFS; an object store pays a
-            # copy here (or writes direct with unique keys).
-            # unique per CALL and attempt: a reused writer_id (a stable
-            # process identity is the natural reading) must never rename
-            # over a previous append's committed files
-            attempt_tag = f"{writer_id}-{uuid.uuid4().hex[:8]}-{attempt}"
-            stage_dir = os.path.join(self.root, "_staging", attempt_tag)
-            # NO repartition before the write: the row_number window above
-            # already hash-partitioned the batch by `partition`, so a
-            # repartition("partition") here would be a second full shuffle
-            # for the same layout. Tasks may hold several log partitions
-            # (hash collisions), so the within-task sort leads with the
-            # partition column to keep each parquet file offset-ordered.
-            (
-                assigned.sortWithinPartitions("partition", "offset")
-                .write.mode("overwrite")
-                .partitionBy("partition")
-                .parquet(stage_dir)
-            )
-            new_marks = dict(watermarks)
-            for p, cnt in _staged_counts(stage_dir).items():
-                new_marks[p] = watermarks.get(p, 0) + cnt
-            new_files = self._publish_staged(stage_dir, attempt_tag)
-            manifest = {
-                "version": version + 1,
-                "writer": writer_id,
-                "files": new_files,
-                "watermarks": {str(p): n for p, n in new_marks.items()},
-                "txn_id": txn_id,
-            }
-            # re-stamp IMMEDIATELY before the manifest PUT: the publish-time
-            # stamp protects staging→publish, but a writer suspended between
-            # publish and here for longer than vacuum's min_age would still
-            # commit a manifest referencing vacuumed files. This shrinks the
-            # unprotected span to the stamp→PUT instructions; the residual
-            # invariant (vacuum min_age_seconds must exceed any possible
-            # writer pause inside that span, plus vacuum re-checks the log
-            # right before deleting) is documented on vacuum().
-            for rel in new_files:
-                try:
-                    os.utime(os.path.join(self.root, rel))
-                except OSError:
-                    pass
-            try:
-                self._try_commit(version + 1, manifest)
-            except CommitConflict:
-                continue  # orphan the attempt's files; re-snapshot and retry
-            if version + 1 > 0 and (version + 1) % _CHECKPOINT_EVERY == 0:
-                self._checkpoint(version + 1)
-            return version + 1
-        raise CommitConflict(f"lost {max_retries} commit races on {self.root}")
+        return self._commit_staged(
+            records, None, order_col, max_retries, writer_id, txn_id
+        )
 
     def append_batches(
         self,
@@ -519,99 +447,138 @@ class CommittedLog:
                 f"append_batches: batch_col {batch_col!r} must be integral,"
                 f" got {dtype.simpleString()}"
             )
+        return self._commit_staged(
+            records, batch_col, order_col, max_retries, writer_id, None
+        )
+
+    def _commit_staged(
+        self,
+        records: DataFrame,
+        batch_col: str | None,
+        order_col: str | None,
+        max_retries: int,
+        writer_id: str | None,
+        txn_id: str | None,
+    ) -> int:
+        """The one optimistic commit loop behind :meth:`append` (no
+        ``batch_col``: the whole frame is one batch) and
+        :meth:`append_batches`: snapshot, assign offsets, stage, then per
+        batch read its footer counts, publish its files and PUT its
+        manifest; on a conflict re-stage the uncommitted batches. Returns
+        the last committed version."""
         writer_id = writer_id or uuid.uuid4().hex[:8]
         spark = records.sparkSession
+        keep = () if batch_col is None else (batch_col,)
         remaining: list[int] | None = None  # every batch, until staged once
         for attempt in range(max_retries):
-            version, watermarks, _files, _txns = self._replay()
-            sub = (
-                records
-                if remaining is None
-                else records.filter(F.col(batch_col).isin(remaining))
-            )
-            hwm = _watermark_frame(spark, watermarks)
+            version, watermarks, _files, txns = self._replay()
+            if txn_id is not None and txn_id in txns:
+                return txns[txn_id]  # already committed: idempotent no-op
+            sub = records
+            if batch_col is not None and remaining is not None:
+                sub = records.filter(F.col(batch_col).isin(remaining))
             # ONE window over (partition) ordered by (batch, order): each
             # batch's block is contiguous, so its offsets are dense and
             # start at the previous batch's end — identical to per-batch
-            # assign_dense_offsets against rolling watermarks
-            w = Window.partitionBy("partition").orderBy(batch_col, order_col)
-            assigned = (
-                sub.withColumn(
-                    "__rel", (F.row_number().over(w) - 1).cast("long")
-                )
-                .join(F.broadcast(hwm), "partition", "left")
-                .withColumn(
-                    "offset",
-                    F.coalesce(F.col("high_watermark"), F.lit(0))
-                    + F.col("__rel"),
-                )
-                .select(batch_col, *LOG_COLUMNS)
+            # assignment against rolling watermarks
+            assigned = assign_dense_offsets(
+                sub, _watermark_frame(spark, watermarks), batch_col, order_col,
+                keep=keep,
             )
+            # stage the attempt, then move files into the ONE consistent
+            # data/partition=p/ tree (unique names per attempt) — mixed
+            # per-writer subtrees would break Spark's partition discovery,
+            # and a shared tree keeps partition pruning on reads. Renames
+            # are metadata-only locally/on HDFS; an object store pays a
+            # copy here (or writes direct with unique keys).
+            # unique per CALL and attempt: a reused writer_id (a stable
+            # process identity is the natural reading) must never rename
+            # over a previous append's committed files
             stage_tag = f"{writer_id}-{uuid.uuid4().hex[:8]}-{attempt}"
             stage_dir = os.path.join(self.root, "_staging", stage_tag)
-            # same no-repartition rationale as append(): the window
-            # already hash-partitioned by `partition`; within a partition
-            # offset order IS (batch, order) order, so one sort serves
-            # every batch subtree
+            # NO repartition before the write: the row_number window above
+            # already hash-partitioned the batch by `partition`, so a
+            # repartition("partition") here would be a second full shuffle
+            # for the same layout. Tasks may hold several log partitions
+            # (hash collisions), so the within-task sort leads with the
+            # partition column to keep each parquet file offset-ordered;
+            # within a partition offset order IS (batch, order) order, so
+            # one sort serves every batch subtree.
             (
                 assigned.sortWithinPartitions("partition", "offset")
                 .write.mode("overwrite")
-                .partitionBy(batch_col, "partition")
+                .partitionBy(*keep, "partition")
                 .parquet(stage_dir)
             )
             staged = _staged_batches(stage_dir, batch_col)
             remaining = sorted(staged)
-            conflicted = False
+            committed = version
             for i, b in enumerate(list(remaining)):
                 new_marks = dict(watermarks)
                 for p, cnt in _staged_counts(staged[b]).items():
                     new_marks[p] = new_marks.get(p, 0) + cnt
                 new_files = self._publish_staged(staged[b], f"{stage_tag}-b{i}")
                 manifest = {
-                    "version": version + 1,
                     "writer": writer_id,
                     "files": new_files,
                     "watermarks": {str(p): n for p, n in new_marks.items()},
-                    "txn_id": None,
+                    "txn_id": txn_id,
                 }
-                for rel in new_files:  # re-stamp just before the PUT
-                    try:
-                        os.utime(os.path.join(self.root, rel))
-                    except OSError:
-                        pass
                 try:
-                    self._try_commit(version + 1, manifest)
+                    top = self._commit(version + 1, manifest, new_files)
                 except CommitConflict:
                     # this batch's (and all later staged) offsets assumed
                     # the stale snapshot: orphan them, re-stage the rest
-                    conflicted = True
                     break
-                version += 1
+                committed, version = version + 1, top
                 watermarks = new_marks
                 remaining.remove(b)
-                if version > 0 and version % _CHECKPOINT_EVERY == 0:
-                    self._checkpoint(version)
             shutil.rmtree(stage_dir, ignore_errors=True)
-            if not conflicted:
-                return version
+            if not remaining:
+                return committed
         raise CommitConflict(f"lost {max_retries} commit races on {self.root}")
 
-    def _checkpoint(self, upto: int) -> None:
-        """Fold all state ≤ upto into one checkpoint manifest so snapshot()
-        stops replaying old manifests (Delta's checkpoint.parquet analog).
-        Best-effort: a conflict means someone else checkpointed."""
-        version, watermarks, files, txns = self._replay(at_version=upto)
+    def _commit(self, version: int, manifest: dict, files: list[str]) -> int:
+        """Land ``manifest`` as ``version`` — the one PUT every append and
+        optimize makes — and fold a checkpoint every
+        ``_CHECKPOINT_EVERY`` versions. Returns the newest version now in
+        the log: ``version``, or the checkpoint's.
+
+        ``files`` are re-stamped IMMEDIATELY before the PUT: the
+        publish-time stamp protects staging→publish, but a writer
+        suspended between publish and here for longer than vacuum's
+        min_age would still commit a manifest referencing vacuumed files
+        (for optimize, whose manifest also retires the old files, that
+        would leave no surviving copy of the data). This shrinks the
+        unprotected span to the stamp→PUT instructions; the residual
+        invariant is documented on vacuum(). Raises ``CommitConflict``
+        when another writer holds ``version``."""
+        for rel in files:
+            try:
+                os.utime(os.path.join(self.root, rel))
+            except OSError:
+                pass
+        payload = json.dumps({"version": version, **manifest}).encode()
+        if not self.backend.put_if_absent(self._manifest_key(version), payload):
+            raise CommitConflict(f"version {version} already committed")
+        folds = version > 0 and version % _CHECKPOINT_EVERY == 0
+        return version + 1 if folds and self._checkpoint(version) else version
+
+    def _checkpoint(self, upto: int) -> bool:
+        """Fold all state ≤ upto into one checkpoint manifest at upto + 1
+        so snapshot() stops replaying old manifests (Delta's
+        checkpoint.parquet analog). Best-effort: False when another
+        writer holds that version."""
+        _, watermarks, files, txns = self._replay(at_version=upto)
         manifest = {
-            "version": version + 1,
+            "version": upto + 1,
             "checkpoint": True,
             "watermarks": {str(p): n for p, n in watermarks.items()},
             "all_files": files,
             "txn_ids": txns,
         }
-        try:
-            self._try_commit(version + 1, manifest)
-        except CommitConflict:
-            pass
+        key = self._manifest_key(upto + 1)
+        return self.backend.put_if_absent(key, json.dumps(manifest).encode())
 
     # ------------------------------------------------------------------ #
     # read / maintenance
@@ -650,7 +617,7 @@ class CommittedLog:
         adds the new ones in a single manifest (Delta OPTIMIZE / Iceberg
         rewrite-data-files). Readers never see a half-compacted log:
         either the old file list or the new one, decided by the same
-        O_EXCL manifest race appends use — a concurrent append simply wins
+        conditional manifest PUT appends use — a concurrent append simply wins
         or loses a version, and the loser (this job) re-reads and retries
         over the appended data. Watermarks are untouched: compaction
         rewrites bytes, not offsets.
@@ -674,24 +641,13 @@ class CommittedLog:
             )
             new_files = self._publish_staged(stage_dir, attempt_tag)
             manifest = {
-                "version": version + 1,
                 "optimize": True,
                 "files": new_files,
                 "removes": old_files,
                 "watermarks": {str(p): n for p, n in watermarks.items()},
             }
-            # re-stamp immediately before the PUT — the same invariant
-            # append holds (see its comment). Worse here than for append:
-            # this manifest also RETIRES the old files, so committing a
-            # reference to vacuumed new files would leave NO surviving
-            # copy of the data.
-            for rel in new_files:
-                try:
-                    os.utime(os.path.join(self.root, rel))
-                except OSError:
-                    pass
             try:
-                self._try_commit(version + 1, manifest)
+                self._commit(version + 1, manifest, new_files)
             except CommitConflict:
                 continue  # someone appended; recompact over the new state
             return version + 1

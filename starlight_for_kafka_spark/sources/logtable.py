@@ -95,24 +95,31 @@ def record_size(key_col: str = "key", value_col: str = "value"):
     ).cast("long")
 
 
-def assign_dense_offsets(batch, hwm, order):
-    """The ONE dense-offset-assignment plan shared by LogTable.append and
-    CommittedLog.append: per-partition row_number over ``order`` + a
-    broadcast watermark join, starting empty partitions at 0. Shared so
-    the single-writer and optimistic-commit paths can never drift on the
-    empty-log / ordering contracts their tests pin.
+def assign_dense_offsets(batch, hwm, *order, keep=()):
+    """The ONE dense-offset-assignment plan, shared by LogTable.append,
+    LogTable.migrate_from and CommittedLog's commit loop: per-partition
+    row_number over the ``order`` columns + a broadcast watermark join,
+    starting empty partitions at 0. Shared so the single-writer and
+    optimistic-commit paths can never drift on the empty-log / ordering
+    contracts their tests pin.
 
-    ``hwm`` is a (partition, high_watermark) frame (num-partitions rows).
-    Returns rows with ``offset`` assigned, projected to LOG_COLUMNS.
+    ``None`` entries of ``order`` are skipped; with no column left the
+    rows keep arrival order (``monotonically_increasing_id``). ``hwm`` is
+    a (partition, high_watermark) frame (num-partitions rows). Returns
+    rows with ``offset`` assigned, projected to LOG_COLUMNS plus ``keep``.
     """
-    w = Window.partitionBy("partition").orderBy(order)
+    order = [c for c in order if c is not None]
+    if not order:
+        batch = batch.withColumn("__arrival", F.monotonically_increasing_id())
+        order = ["__arrival"]
+    w = Window.partitionBy("partition").orderBy(*order)
     return (
         batch.withColumn("__rel", (F.row_number().over(w) - 1).cast("long"))
         .join(F.broadcast(hwm), "partition", "left")
         .withColumn(
             "offset", F.coalesce(F.col("high_watermark"), F.lit(0)) + F.col("__rel")
         )
-        .select(*LOG_COLUMNS)
+        .select(*LOG_COLUMNS, *keep)
     )
 
 
@@ -120,8 +127,10 @@ class LogTable:
     """A partitioned offset-addressed log as a DataFrame.
 
     Wraps a DataFrame with KAFKA_RECORD_SCHEMA columns. All operations are
-    lazy DataFrame transforms; nothing collects to the driver except the
-    (num_partitions)-row high-watermark map used by ``append``.
+    lazy DataFrame transforms (``append`` broadcasts the watermark frame,
+    it collects nothing); only ``compact_segments`` (its segment plan) and
+    ``fetch_multi`` given a DataFrame request (its duplicate-partition
+    check) run a Spark job when called.
     """
 
     def __init__(self, df: DataFrame):
@@ -215,11 +224,7 @@ class LogTable:
           commit (Delta/Iceberg optimistic transaction) around
           read-watermark → write.
         """
-        order = order_col or "__arrival"
-        batch = records
-        if order_col is None:
-            batch = batch.withColumn("__arrival", F.monotonically_increasing_id())
-        appended = assign_dense_offsets(batch, self.high_watermarks(), order)
+        appended = assign_dense_offsets(records, self.high_watermarks(), order_col)
         return LogTable(self.df.select(*LOG_COLUMNS).unionByName(appended))
 
     def write(self, path: str, mode: str = "overwrite") -> None:
@@ -614,24 +619,22 @@ class LogTable:
 
         Scale: the bulk copy is one shuffle of the source on ``partition``
         for the row_number; destination watermarks are a num_partitions-row
-        broadcast. Identical plan shape to ``append``.
+        broadcast: ``append``'s ``assign_dense_offsets`` plan, ordered by
+        the source offset.
         """
-        w = Window.partitionBy("partition").orderBy("offset")
-        hwm = self.high_watermarks()
-        mapped = (
-            src.df.withColumn("__rel", (F.row_number().over(w) - 1).cast("long"))
-            .join(F.broadcast(hwm), "partition", "left")
-            .withColumn("__base", F.coalesce(F.col("high_watermark"), F.lit(0)))
-            .withColumn("src_offset", F.col("offset"))
-            .withColumn("dst_offset", F.col("__base") + F.col("__rel"))
+        mapped = assign_dense_offsets(
+            src.df.withColumnRenamed("offset", "src_offset"),
+            self.high_watermarks(),
+            "src_offset",
+            keep=("src_offset",),
         )
         mapping = mapped.select(
             "partition",
             "src_offset",
-            "dst_offset",
-            (F.col("dst_offset") - F.col("src_offset")).alias("offset_shift"),
+            F.col("offset").alias("dst_offset"),
+            (F.col("offset") - F.col("src_offset")).alias("offset_shift"),
         )
-        migrated = mapped.withColumn("offset", F.col("dst_offset")).select(*LOG_COLUMNS)
+        migrated = mapped.select(*LOG_COLUMNS)
         merged = LogTable(self.df.select(*LOG_COLUMNS).unionByName(migrated))
         return merged, mapping
 

@@ -93,9 +93,8 @@ def encode_wire_batches(
         pdf = pdf.sort_values("offset")
         part = int(key[0])
         n_rec = len(pdf)
-        # columnar straight through: the record dicts this kernel used to
-        # build (and encode_batches_v2_many used to unpack) were ~40% of
-        # kernel time; the codec itself vectorizes varints across the
+        # columnar straight through: building per-record dicts was ~40%
+        # of kernel time; the codec itself vectorizes varints across the
         # whole chunk (kafka_records.encode_batches_v2_columnar) with all
         # CRCs in one lane-parallel pass
         offs = pdf["offset"].to_numpy(dtype=np.int64)

@@ -32,12 +32,14 @@ accident; from /tmp it fails loudly if a kernel isn't pickled by value.
     cd /tmp && python /root/repo/sweep.py [sf_dir] [name ...]
 
 Defaults to /root/testdata/sf0.01 (the driver's grading scale) and all
-entries. Exit code 0 iff every entry has an oracle and is exact in every
-lane; an entry without an oracle counts as bad.
+entries. The last line is one JSON object: ``entries``, ``bad``,
+``seconds`` and ``bad_names``. Exit code 0 iff every entry has an oracle
+and is exact in every lane; an entry without an oracle counts as bad.
 """
 
 from __future__ import annotations
 
+import json
 import os
 import sys
 import time
@@ -186,10 +188,10 @@ def main() -> int:
     qs, os_ = entrymod.queries(), entrymod.oracle_sql()
     todo = names or list(qs)
     t0 = time.time()
-    bad = 0
+    bad = []
     for name in todo:
         if name not in os_:
-            bad += 1
+            bad.append(name)
             print(f"{name} NO ORACLE", flush=True)
             continue
         try:
@@ -204,21 +206,24 @@ def main() -> int:
             orows = oracle_rows.arrow_rows(atable)
             ok = col_ok and srows == orows and not type_div and not canon_div
         except Exception as ex:  # noqa: BLE001 — report and keep sweeping
-            bad += 1
+            bad.append(name)
             print(f"{name} ERROR {ex!r}"[:250], flush=True)
             continue
         if not ok:
-            bad += 1
+            bad.append(name)
             print(
                 f"{name} MISMATCH col_ok={col_ok} "
                 f"rows {len(srows)} vs {len(orows)} types={type_div} "
                 f"canon={canon_div}",
                 flush=True,
             )
-    print(
-        f"SWEEP DONE {len(todo)} entries, {bad} bad, {round(time.time() - t0)} s",
-        flush=True,
-    )
+    summary = {
+        "entries": len(todo),
+        "bad": len(bad),
+        "seconds": round(time.time() - t0),
+        "bad_names": bad,
+    }
+    print(json.dumps(summary), flush=True)
     return 1 if bad else 0
 
 

@@ -638,3 +638,63 @@ def test_frame_derived_from_snapshot_aggregates_its_own_rows(spark, tmp_path):
     only3 = LogTable(log.read(spark).filter(F.col("partition") == 3))
     assert _ends(only3.latest_offsets()) == {3: 4}
     assert _ends(only3.high_watermarks()) == {3: 4}
+
+
+@pytest.mark.parametrize("n_batches", [1, 3])
+def test_append_batches_runs_three_jobs(spark, tmp_path, jobs_run_by, n_batches):
+    """Any number of batches onto a non-empty log is the same three-job
+    chain as one append: one offset window, one watermark broadcast and
+    one staged write for all of them."""
+    log = CommittedLog(str(tmp_path / "log"))
+    log.append(_batch(spark, [(0, 2), (1, 1)]), order_col="seq")
+    batches = _batch(spark, [(0, 3), (1, 2), (4, 1)]).withColumn(
+        "b", (F.col("seq") % n_batches).cast("int")
+    )
+    n = jobs_run_by(
+        lambda: log.append_batches(batches, batch_col="b", order_col="seq"),
+        f"append-batches-jobs-{n_batches}",
+    )
+    assert n == 3, f"append_batches ran {n} Spark jobs, expected 3"
+    assert log.snapshot()[1] == {0: 5, 1: 3, 4: 1}
+
+
+def test_append_batches_across_a_checkpoint_stages_once(
+    spark, tmp_path, jobs_run_by
+):
+    """A batch landing on a checkpoint version makes the checkpoint take
+    the next version; the following batches commit after it from the
+    same staged write, with no re-stage and no orphaned data file."""
+    log = CommittedLog(str(tmp_path / "log"))
+    log.append(_batch(spark, [(0, 1)]), order_col="seq")  # v0
+    batches = _batch(spark, [(0, 12)]).withColumn("b", F.col("seq").cast("int"))
+    n = jobs_run_by(
+        lambda: log.append_batches(batches, batch_col="b", order_col="seq"),
+        "append-batches-checkpoint",
+    )
+    assert n == 3, f"append_batches ran {n} Spark jobs, expected 3"
+    # batches 0-9 are v1-v10, the checkpoint v11, batches 10-11 v12-v13
+    assert log._versions() == list(range(14))
+    assert json.loads(log.backend.get(log._manifest_key(11)))["checkpoint"]
+    assert log.snapshot()[1] == {0: 13}
+    assert log.vacuum(min_age_seconds=0) == []
+
+
+def test_optimize_on_a_checkpoint_version_folds_a_checkpoint(
+    spark, tmp_path, make_log
+):
+    """Every commit keeps the checkpoint cadence: an optimize landing on
+    version 10 folds the checkpoint at 11, whose state is the replayed
+    state."""
+    log = make_log(str(tmp_path / "log"))
+    batches = _batch(spark, [(0, 6), (1, 4)]).withColumn(
+        "b", F.col("seq").cast("int")
+    )
+    assert log.append_batches(batches, batch_col="b", order_col="seq") == 9
+    before = _offsets(log.read(spark))
+    assert log.optimize(spark) == 10
+    ckpt = json.loads(log.backend.get(log._manifest_key(11)))
+    assert ckpt["checkpoint"]
+    compacted = json.loads(log.backend.get(log._manifest_key(10)))["files"]
+    assert sorted(ckpt["all_files"]) == sorted(compacted)
+    assert log.snapshot()[:2] == (11, {0: 6, 1: 4})
+    assert _offsets(log.read(spark)) == before

@@ -397,3 +397,30 @@ def test_expire_transactional_ids_keeps_ongoing(spark):
     assert out["idle-ongoing"].final_state == "Ongoing"
     assert not out["fresh-complete"].expired
     assert out["idle-complete"].last_update_ms < out["fresh-complete"].last_update_ms
+
+
+def test_snapshot_manifest_is_fsynced_before_it_is_visible(
+    spark, tmp_path, monkeypatch
+):
+    """take_snapshot publishes its manifest durably: the manifest bytes
+    are fsynced while the manifest name does not exist yet."""
+    import os
+
+    store = tx.ProducerStateStore(str(tmp_path / "pstate"))
+    manifest = os.path.join(store.root, "_manifests", "1.json")
+    seen = []
+    real_fsync = os.fsync
+
+    def fsync(fd):
+        seen.append(os.path.exists(manifest))
+        real_fsync(fd)
+
+    monkeypatch.setattr(os, "fsync", fsync)
+    txn_log = spark.createDataFrame(
+        [(0, o, 1, 0, "commit") for o in range(5)],
+        "partition int, offset long, pid long, txn_group long, txn_status string",
+    )
+    assert store.take_snapshot(txn_log) == 1
+    assert seen and not any(seen)
+    assert os.path.exists(manifest)
+    assert store.latest() == (1, {0: 5})

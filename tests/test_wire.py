@@ -600,6 +600,21 @@ def test_columnar_codec_matches_scalar_paths():
             "headers": hdrs,
         }
 
+    def encode_columnar(chunks, **kw):
+        """``chunks`` of (base_offset, records) through the columnar
+        encoder, in the column layout ``encode_wire_batches`` hands it."""
+        recs = [r for _, rs in chunks for r in rs]
+        hdrs = [r["headers"] for r in recs]
+        return kr.encode_batches_v2_columnar(
+            [r["offset"] for r in recs],
+            [r["timestamp_ms"] for r in recs],
+            [r["key"] for r in recs],
+            [r["value"] for r in recs],
+            hdrs if any(hdrs) else None,
+            np.cumsum([0] + [len(rs) for _, rs in chunks])[:-1],
+            **kw,
+        )
+
     chunks = []
     off = 10**12  # exercises multi-byte offset varints via base, deltas small
     for _ in range(8):
@@ -614,13 +629,13 @@ def test_columnar_codec_matches_scalar_paths():
             )
             for b, r in chunks
         ]
-        got = kr.encode_batches_v2_many(
+        got = encode_columnar(
             chunks, compression=comp, producer_id=9, producer_epoch=2,
             base_sequence=4,
         )
         assert want == got, comp
 
-    blobs = kr.encode_batches_v2_many(chunks, compression="lz4")
+    blobs = encode_columnar(chunks, compression="lz4")
     col = kr.decode_batches_v2_columnar(blobs)
     ri = 0
     for bi, blob in enumerate(blobs):
@@ -641,16 +656,12 @@ def test_columnar_codec_matches_scalar_paths():
         {"offset": 6, "timestamp_ms": 2**40, "key": None, "value": b"c" * 150,
          "headers": None},
     ]
-    blob = kr.encode_batches_v2_many([(5, recs)])
+    blob = encode_columnar([(5, recs)])
     assert blob[0] == kr.encode_batch_v2(5, recs)
     c = kr.decode_batches_v2_columnar(blob)
     assert c["ts_ms"][1] == 2**40 and c["values"][1] == b"c" * 150
     assert c["keys"][1] is None and c["values"][0] == b"b"
 
-    # non-first-record base offset falls back to the per-record path
-    gap = [{"offset": 7, "timestamp_ms": 1, "key": b"k", "value": b"v",
-            "headers": None}]
-    assert kr.encode_batches_v2_many([(5, gap)]) == [kr.encode_batch_v2(5, gap)]
 
 
 def test_down_convert_many_matches_scalar():
