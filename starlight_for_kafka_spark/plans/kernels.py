@@ -1,7 +1,10 @@
 """One seam for every Python kernel this package hands to Spark.
 
-Each ``mapInPandas`` / ``applyInPandas`` / ``applyInPandasWithState``
-function goes through :func:`kernel`, which does two things.
+Each ``mapInPandas`` / ``mapInArrow`` / ``applyInPandas`` /
+``applyInPandasWithState`` function goes through :func:`kernel`, which
+does two things. (The ``mapInArrow`` kernels are the four map-only wire
+conversions in ``sources/wire.py``: decode, transcode, down-convert and
+legacy ingest, which read and yield ``pyarrow.RecordBatch`` es.)
 
 **Ships the kernel's modules by value.** Executor Python workers cannot
 import this package (it is on the driver's ``sys.path`` only), so a kernel

@@ -65,9 +65,11 @@ KAFKA_RECORD_SCHEMA = T.StructType(
 
 LOG_COLUMNS = [f.name for f in KAFKA_RECORD_SCHEMA.fields]
 
-# attribute under which ``CommittedLog.read`` tags the frame it returns
-# with that snapshot's log-end offsets {partition: next offset}
+# attributes under which ``CommittedLog.read`` tags the frame it returns
+# with that snapshot's log-end offsets {partition: next offset}, and under
+# which ``LogTable`` keeps the LocalRelations built from them {column: frame}
 _LOG_END_OFFSETS = "_log_end_offsets"
+_LOG_END_FRAMES = "_log_end_frames"
 
 
 def tag_log_end_offsets(df: DataFrame, offsets: dict[int, int]) -> DataFrame:
@@ -77,6 +79,7 @@ def tag_log_end_offsets(df: DataFrame, offsets: dict[int, int]) -> DataFrame:
     this object carries the tag: a frame derived from it (``filter``,
     ``select``, ...) is a new object and keeps the aggregate."""
     setattr(df, _LOG_END_OFFSETS, dict(offsets))
+    setattr(df, _LOG_END_FRAMES, {})
     return df
 
 
@@ -185,17 +188,22 @@ class LogTable:
         """(partition, ``name``) = max(offset) + 1 per partition. On a
         frame tagged by ``tag_log_end_offsets`` these are the snapshot's
         offsets as a LocalRelation — the broker answers from metadata, no
-        scan — otherwise one aggregate over the log."""
-        offsets = vars(self.df).get(_LOG_END_OFFSETS)
+        scan — built once per snapshot frame and column; otherwise one
+        aggregate over the log."""
+        tags = vars(self.df)
+        offsets = tags.get(_LOG_END_OFFSETS)
         if offsets is None:
             return self.df.groupBy("partition").agg(
                 (F.max("offset") + 1).alias(name)
             )
-        return local_frame(
-            self.df.sparkSession,
-            sorted(offsets.items()),
-            f"partition int, {name} long",
-        )
+        frames = tags[_LOG_END_FRAMES]
+        if name not in frames:
+            frames[name] = local_frame(
+                self.df.sparkSession,
+                sorted(offsets.items()),
+                f"partition int, {name} long",
+            )
+        return frames[name]
 
     def high_watermarks(self) -> DataFrame:
         """Per-partition high watermark = max(offset) + 1 (reference

@@ -11,8 +11,13 @@ and the operators are Arrow-batched:
   are offset-sorted and chunked into batches of ``max_records_per_batch``,
   mirroring how a producer's batches land on a partition leader. One
   shuffle on ``partition`` (the same co-location produce needs anyway).
-- decode: mapInPandas — batches are self-contained blobs, so decoding is
-  embarrassingly parallel, no shuffle; CRC32C is verified per batch.
+- decode, transcode, down-convert and legacy ingest: mapInArrow — batches
+  are self-contained blobs, so these are embarrassingly parallel, no
+  shuffle; CRC32C is verified per batch. Each kernel reads the Arrow
+  batch's columns and yields a ``pyarrow.RecordBatch`` at the declared
+  types: no pandas frame, and no PySpark pandas converter, whose pass
+  over the ``headers`` array<struct> column alone cost more than the
+  decode it carried.
 
 Kafka timestamps are MILLISECONDS on the wire, so a roundtrip truncates
 sub-ms precision — that is wire semantics, not a codec defect.
@@ -23,6 +28,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 
 from starlight_for_kafka_spark.functions import kafka_records as kr
 from starlight_for_kafka_spark.plans.kernels import kernel
@@ -33,6 +39,39 @@ WIRE_BATCH_SCHEMA = T.StructType(
         T.StructField("base_offset", T.LongType(), False),
         T.StructField("record_count", T.IntegerType(), False),
         T.StructField("batch", T.BinaryType(), False),
+    ]
+)
+
+# what down_convert_batches returns
+_MESSAGE_SET_SCHEMA = T.StructType(
+    [
+        T.StructField("partition", T.IntegerType()),
+        T.StructField("base_offset", T.LongType()),
+        T.StructField("record_count", T.IntegerType()),
+        T.StructField("message_set", T.BinaryType()),
+    ]
+)
+
+# what the decode kernels return: log rows with the timestamp still epoch
+# millis, converted JVM-side by _with_timestamp
+_DECODED_SCHEMA = T.StructType(
+    [
+        T.StructField("key", T.BinaryType()),
+        T.StructField("value", T.BinaryType()),
+        T.StructField(
+            "headers",
+            T.ArrayType(
+                T.StructType(
+                    [
+                        T.StructField("key", T.StringType()),
+                        T.StructField("value", T.BinaryType()),
+                    ]
+                )
+            ),
+        ),
+        T.StructField("__ts_ms", T.LongType()),
+        T.StructField("partition", T.IntegerType()),
+        T.StructField("offset", T.LongType()),
     ]
 )
 
@@ -138,57 +177,87 @@ def encode_wire_batches(
     )
 
 
+def _log_row_kernel(column: str, decode):
+    """mapInArrow kernel: log rows (``_DECODED_SCHEMA``) of every blob in
+    ``column``. ``decode(blobs)`` returns (offsets, ts_ms, keys, values,
+    headers, records per blob); each row takes its blob's ``partition``."""
+    schema = to_arrow_schema(_DECODED_SCHEMA)
+
+    def op(batches):
+        import numpy as np
+        import pyarrow as pa
+
+        for rb in batches:
+            offsets, ts_ms, keys, values, headers, counts = decode(
+                rb.column(column).to_pylist()
+            )
+            blob_of_row = np.repeat(np.arange(rb.num_rows), counts)
+            yield pa.RecordBatch.from_arrays(
+                [
+                    pa.array(keys, pa.binary()),
+                    pa.array(values, pa.binary()),
+                    pa.array(headers, schema.field("headers").type),
+                    pa.array(ts_ms, pa.int64()),
+                    rb.column("partition").take(blob_of_row).cast(pa.int32()),
+                    pa.array(offsets, pa.int64()),
+                ],
+                schema=schema,
+            )
+
+    return op
+
+
+def _with_timestamp(decoded: DataFrame) -> DataFrame:
+    """The log columns of a ``_DECODED_SCHEMA`` frame.
+
+    millis -> TIMESTAMP converted JVM-side (timestamp_millis is an
+    instant, immune to the session timezone — a Python utcfromtimestamp
+    naive datetime would be re-interpreted session-locally on the way
+    back in); Kafka's NO_TIMESTAMP sentinel is EXACTLY -1 — any other
+    negative value is a legitimate pre-1970 instant the encoder wrote
+    faithfully and must round-trip, so the test is != -1, not >= 0."""
+    return decoded.withColumn(
+        "timestamp",
+        F.timestamp_millis(F.when(F.col("__ts_ms") != -1, F.col("__ts_ms"))),
+    ).select("key", "value", "headers", "timestamp", "partition", "offset")
+
+
+def _blob_kernel(convert, schema: T.StructType):
+    """mapInArrow kernel: each row's ``batch`` blob replaced by
+    ``convert(blobs)`` as ``schema``'s last column; partition,
+    base_offset and record_count pass through."""
+    arrow_schema = to_arrow_schema(schema)
+    kept = list(arrow_schema)[:3]
+
+    def op(batches):
+        import pyarrow as pa
+
+        for rb in batches:
+            out = convert(rb.column("batch").to_pylist())
+            yield pa.RecordBatch.from_arrays(
+                [rb.column(f.name).cast(f.type) for f in kept]
+                + [pa.array(out, pa.binary())],
+                schema=arrow_schema,
+            )
+
+    return op
+
+
 def decode_wire_batches(batches: DataFrame) -> DataFrame:
     """Decode RecordBatch v2 blobs back to log rows (CRC-verified).
     Map-only — each blob is self-contained."""
-    mid_schema = (
-        "key binary, value binary, "
-        "headers array<struct<key:string,value:binary>>, "
-        "__ts_ms long, partition int, offset long"
-    )
 
-    def op(batch_iter):
-        import numpy as np
-        import pandas as pd
-
-        for pdf in batch_iter:
-            # columnar decode of the whole chunk: one lane-parallel CRC
-            # verify, varints decoded across all records at once, and the
-            # pandas frame built from columns instead of per-record dicts
-            blobs = [bytes(b) for b in pdf["batch"]]
-            col = kr.decode_batches_v2_columnar(blobs)
-            _empty: list = []
-            yield pd.DataFrame(
-                {
-                    "key": col["keys"],
-                    "value": col["values"],
-                    "headers": [
-                        [{"key": hk, "value": hv} for hk, hv in h] if h else _empty
-                        for h in col["headers"]
-                    ],
-                    "__ts_ms": col["ts_ms"],
-                    "partition": np.repeat(
-                        pdf["partition"].to_numpy(dtype=np.int64),
-                        col["record_counts"],
-                    ),
-                    "offset": col["offsets"],
-                },
-                columns=["key", "value", "headers", "__ts_ms", "partition", "offset"],
-            )
-
-    # millis -> TIMESTAMP converted JVM-side (timestamp_millis is an
-    # instant, immune to the session timezone — a Python utcfromtimestamp
-    # naive datetime would be re-interpreted session-locally on the way
-    # back in); Kafka's NO_TIMESTAMP sentinel is EXACTLY -1 — any other
-    # negative value is a legitimate pre-1970 instant the encoder wrote
-    # faithfully and must round-trip, so the test is != -1, not >= 0.
-    return (
-        batches.mapInPandas(kernel(op, kr), mid_schema)
-        .withColumn(
-            "timestamp",
-            F.timestamp_millis(F.when(F.col("__ts_ms") != -1, F.col("__ts_ms"))),
+    def decode(blobs):
+        # columnar decode of the whole chunk: one lane-parallel CRC
+        # verify, varints decoded across all records at once
+        col = kr.decode_batches_v2_columnar(blobs)
+        return (
+            col["offsets"], col["ts_ms"], col["keys"], col["values"],
+            col["headers"], col["record_counts"],
         )
-        .select("key", "value", "headers", "timestamp", "partition", "offset")
+
+    return _with_timestamp(
+        batches.mapInArrow(kernel(_log_row_kernel("batch", decode), kr), _DECODED_SCHEMA)
     )
 
 
@@ -209,22 +278,18 @@ def transcode_batches(
     at 100 TB."""
     hops = compression if isinstance(compression, (list, tuple)) else [compression]
 
-    def op(batch_iter):
-        import pandas as pd
+    def convert(blobs):
+        # whole-chunk hops: each hop's CRC verify + re-CRC run as one
+        # lane-parallel crc32c_many over every batch in the Arrow
+        # chunk (kafka_records.transcode_many) — CRC was 92% of the
+        # per-batch transcode profile
+        for target in hops:
+            blobs = kr.transcode_many(blobs, target)
+        return blobs
 
-        for pdf in batch_iter:
-            out = pdf.copy()
-            # whole-chunk hops: each hop's CRC verify + re-CRC run as one
-            # lane-parallel crc32c_many over every batch in the Arrow
-            # chunk (kafka_records.transcode_many) — CRC was 92% of the
-            # per-batch transcode profile
-            blobs = [bytes(b) for b in pdf["batch"]]
-            for target in hops:
-                blobs = kr.transcode_many(blobs, target)
-            out["batch"] = blobs
-            yield out
-
-    return batches.mapInPandas(kernel(op, kr), WIRE_BATCH_SCHEMA)
+    return batches.mapInArrow(
+        kernel(_blob_kernel(convert, WIRE_BATCH_SCHEMA), kr), WIRE_BATCH_SCHEMA
+    )
 
 
 def ingest_message_sets(message_sets: DataFrame) -> DataFrame:
@@ -241,48 +306,16 @@ def ingest_message_sets(message_sets: DataFrame) -> DataFrame:
     (same timezone discipline as decode_wire_batches). Headers don't
     exist before v2 → empty array. Per-message CRC32 is verified in the
     kernel. Map-only — each blob is self-contained, no shuffle."""
-    mid_schema = (
-        "key binary, value binary, "
-        "headers array<struct<key:string,value:binary>>, "
-        "__ts_ms long, partition int, offset long"
-    )
 
-    def op(batch_iter):
-        import numpy as np
-        import pandas as pd
+    def decode(blobs):
+        # whole-chunk columnar decode (decode_message_sets_v01_many)
+        offsets, ts_ms, keys, values, counts = kr.decode_message_sets_v01_many(blobs)
+        return offsets, ts_ms, keys, values, [[]] * len(offsets), counts
 
-        cols = ["key", "value", "headers", "__ts_ms", "partition", "offset"]
-        for pdf in batch_iter:
-            # whole-chunk columnar decode (decode_message_sets_v01_many)
-            # + a dict-of-columns DataFrame: the per-record dict rows the
-            # old shape built (then pd.DataFrame(rows) re-inferred) were
-            # most of this kernel's CPU (guide §4.2)
-            offs, ts, keys, values, cnts = kr.decode_message_sets_v01_many(
-                [bytes(b) for b in pdf["message_set"]]
-            )
-            parts = np.repeat(
-                pdf["partition"].to_numpy(dtype=np.int64),
-                np.asarray(cnts, dtype=np.int64),
-            )
-            yield pd.DataFrame(
-                {
-                    "key": keys,
-                    "value": values,
-                    "headers": [[]] * len(offs),
-                    "__ts_ms": ts,
-                    "partition": parts,
-                    "offset": offs,
-                },
-                columns=cols,
-            )
-
-    return (
-        message_sets.mapInPandas(kernel(op, kr), mid_schema)
-        .withColumn(
-            "timestamp",
-            F.timestamp_millis(F.when(F.col("__ts_ms") != -1, F.col("__ts_ms"))),
+    return _with_timestamp(
+        message_sets.mapInArrow(
+            kernel(_log_row_kernel("message_set", decode), kr), _DECODED_SCHEMA
         )
-        .select("key", "value", "headers", "timestamp", "partition", "offset")
     )
 
 
@@ -297,24 +330,16 @@ def down_convert_batches(
     producers with compression wrote; relative inner offsets in v1; lz4
     uses the KAFKA-3160 legacy framing, broken HC for magic v0).
     Map-only."""
-    def op(batch_iter):
-        import pandas as pd
 
-        for pdf in batch_iter:
-            out = pdf[["partition", "base_offset", "record_count"]].copy()
-            # batch the source-CRC verify across the chunk (one
-            # lane-parallel crc32c_many pass), then the whole chunk
-            # converts through ONE vectorized decode + v01 encode
-            # (down_convert_many — guide §4.2) instead of a per-batch
-            # scalar walk
-            blobs = [bytes(b) for b in pdf["batch"]]
-            kr.verify_batches_v2_crc(blobs)
-            out["message_set"] = kr.down_convert_many(
-                blobs, to_magic, compression=compression, verify_crc=False
-            )
-            yield out
+    def convert(blobs):
+        # batch the source-CRC verify across the chunk (one lane-parallel
+        # crc32c_many pass), then the whole chunk converts through ONE
+        # vectorized decode + v01 encode (down_convert_many)
+        kr.verify_batches_v2_crc(blobs)
+        return kr.down_convert_many(
+            blobs, to_magic, compression=compression, verify_crc=False
+        )
 
-    return batches.mapInPandas(
-        kernel(op, kr),
-        "partition int, base_offset long, record_count int, message_set binary",
+    return batches.mapInArrow(
+        kernel(_blob_kernel(convert, _MESSAGE_SET_SCHEMA), kr), _MESSAGE_SET_SCHEMA
     )

@@ -628,6 +628,38 @@ def test_snapshot_latest_offsets_are_manifest_watermarks(spark, tmp_path, jobs_r
     assert check(log.read(spark, at_version=-1)) == {}
 
 
+def test_snapshot_log_end_frame_is_built_once(spark, tmp_path, py4j_calls_by):
+    """A snapshot frame builds each log-end LocalRelation once: asking
+    ``latest_offsets`` again, as ``consumer_lag(..., latest_offsets())``
+    after ``latest_offsets()`` on the same snapshot does, makes fewer than
+    half the Py4J round trips of the first call (the parent rebuilt it:
+    the same count both times). A new snapshot gets its own offsets."""
+    from starlight_for_kafka_spark.operators import groups
+    from starlight_for_kafka_spark.sources import LogTable
+
+    log = CommittedLog(str(tmp_path / "log"))
+    log.append(_batch(spark, [(0, 2), (1, 1)]), order_col="seq")
+    snap = log.read(spark)
+    first = py4j_calls_by(lambda: LogTable(snap).latest_offsets())
+    again = py4j_calls_by(lambda: LogTable(snap).latest_offsets())
+    assert again < first / 2, (first, again)
+    assert _ends(LogTable(snap).latest_offsets()) == {0: 2, 1: 1}
+    assert _ends(LogTable(snap).high_watermarks()) == {0: 2, 1: 1}
+    assert LogTable(snap).high_watermarks().columns == ["partition", "high_watermark"]
+
+    commits = spark.createDataFrame(
+        [("g", "t", 0, 0, "", 1), ("g", "t", 1, 0, "", 1)],
+        "group string, topic string, partition int, offset long, metadata string,"
+        " commit_ts long",
+    ).withColumn("commit_ts", F.col("commit_ts").cast("timestamp"))
+    lag = groups.consumer_lag(commits, LogTable(snap).latest_offsets())
+    assert sorted((r.partition, r.lag) for r in lag.collect()) == [(0, 1), (1, 0)]
+
+    log.append(_batch(spark, [(0, 3)]), order_col="seq")
+    assert _ends(LogTable(log.read(spark)).latest_offsets()) == {0: 5, 1: 1}
+    assert _ends(LogTable(snap).latest_offsets()) == {0: 2, 1: 1}
+
+
 def test_frame_derived_from_snapshot_aggregates_its_own_rows(spark, tmp_path):
     """Only the exact frame ``read`` returns carries the snapshot's
     offsets: a filtered frame answers from its own rows."""

@@ -3,8 +3,9 @@
 The wrapper must keep what pyspark reads off a kernel (arity, annotations,
 the eval type they give), drop the worker's archive importers so the next
 task's ``importlib.invalidate_caches()`` has nothing to re-read, and be
-the only way a function reaches ``mapInPandas`` / ``applyInPandas`` /
-``applyInPandasWithState`` in the package.
+the only way a function reaches ``mapInPandas`` / ``mapInArrow`` /
+``applyInPandas`` / ``applyInArrow`` / ``applyInPandasWithState`` in the
+package.
 """
 
 from __future__ import annotations
@@ -170,7 +171,7 @@ def test_grouped_operators_build_without_warnings(spark):
 
 _PACKAGE = pathlib.Path(__file__).resolve().parent.parent / "starlight_for_kafka_spark"
 _GROUPED = {"applyInPandas", "applyInPandasWithState"}
-_PYTHON_KERNEL_CALLS = {"mapInPandas"} | _GROUPED
+_PYTHON_KERNEL_CALLS = {"mapInPandas", "mapInArrow", "applyInArrow"} | _GROUPED
 
 
 def _kernel_calls(source: str):
@@ -224,6 +225,8 @@ def test_every_python_kernel_goes_through_the_seam():
 def test_guard_flags_a_bare_kernel():
     for src in (
         "df.mapInPandas(op, schema)",
+        "df.mapInArrow(op, schema)",
+        "df.groupBy('k').applyInArrow(fold, schema)",
         "df.groupBy('k').applyInPandas(fold, schema)",
         "g.applyInPandasWithState(update, out, st, 'update', 'NoTimeout')",
         "df.mapInPandas(func=kernel(op), schema=s)",

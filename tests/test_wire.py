@@ -751,10 +751,46 @@ def test_decode_message_sets_v01_many_matches_scalar():
     assert values == [r["value"] for r in flat]
 
 
-def test_lz4_fast_block_decompress_matches_pure_python():
-    """The size-walk + C-codec block decompress inverts the raw block
-    compressor exactly AND raises the same guard messages as the pure
-    Python decoder on every corrupt-input class."""
+def _lz4_frame(blocks, flg=0x60, broken_hc=False, content=b""):
+    """An LZ4 frame around ``blocks`` (compressed block payloads; a
+    ``bytes`` wrapped in a 1-tuple is stored raw), honouring FLG's
+    block-checksum (0x10), content-size (0x08) and content-checksum
+    (0x04) bits; ``content`` is the decoded payload those describe."""
+    descriptor = bytes([flg, 0x40])
+    if flg & 0x08:
+        descriptor += struct.pack("<Q", len(content))
+    hc_input = kr._LZ4_FRAME_MAGIC + descriptor if broken_hc else descriptor
+    out = bytearray(kr._LZ4_FRAME_MAGIC) + descriptor
+    out.append((kr._xxh32(hc_input) >> 8) & 0xFF)
+    for blk in blocks:
+        raw = isinstance(blk, tuple)
+        body = blk[0] if raw else blk
+        out += struct.pack("<I", len(body) | (kr._LZ4_UNCOMPRESSED_BIT if raw else 0))
+        out += body
+        if flg & 0x10:
+            out += struct.pack("<I", kr._xxh32(body))
+    out += struct.pack("<I", 0)
+    if flg & 0x04:
+        out += struct.pack("<I", kr._xxh32(content))
+    return bytes(out)
+
+
+def _lz4_blocks(payload, size=65536):
+    import pyarrow as pa
+
+    codec = pa.Codec("lz4_raw")
+    out = []
+    for i in range(0, len(payload), size):
+        chunk = payload[i : i + size]
+        comp = codec.compress(chunk, asbytes=True)
+        out.append((chunk,) if len(comp) >= len(chunk) else comp)
+    return out
+
+
+def test_lz4_frame_decode_matches_pure_python_blocks():
+    """The C frame decoder inverts the raw block compressor exactly, like
+    the pure-Python block decoder, AND a frame around each corrupt-block
+    class raises the pure-Python decoder's guard message."""
     import random
 
     import pyarrow as pa
@@ -766,8 +802,9 @@ def test_lz4_fast_block_decompress_matches_pure_python():
             [rng.randrange(0, 200)]
         ) * rng.randrange(0, 3000)
         comp = pa.Codec("lz4_raw").compress(raw, asbytes=True)
-        assert kr._lz4_block_decompress_fast(comp) == raw
         assert kr._lz4_block_decompress(comp) == raw
+        for broken in (False, True):
+            assert kr.decode_kafka_lz4(_lz4_frame([comp], broken_hc=broken)) == raw
     cases = [
         (bytes([0x13]) + b"abc" + struct.pack("<H", 5) + bytes([0x00]),
          "match offset beyond output"),
@@ -778,8 +815,265 @@ def test_lz4_fast_block_decompress_matches_pure_python():
          "match length runs past input"),
         (bytes([0x14]) + b"a" + struct.pack("<H", 0), "zero match offset"),
     ]
+    good = pa.Codec("lz4_raw").compress(b"legacy " * 300, asbytes=True)
     for bad, msg in cases:
         with pytest.raises(ValueError, match=msg):
             kr._lz4_block_decompress(bad)
-        with pytest.raises(ValueError, match=msg):
-            kr._lz4_block_decompress_fast(bad)
+        for flg in (0x60, 0x70):
+            for blocks in ([bad], [good, bad]):
+                with pytest.raises(ValueError, match=msg):
+                    kr.decode_kafka_lz4(_lz4_frame(blocks, flg=flg))
+    # a block that only refers back into the PREVIOUS block: the frame
+    # says independent blocks, so this is corrupt, as it always was
+    linked = bytes([0x04]) + struct.pack("<H", 8) + bytes([0x50]) + b"xxxxx"
+    with pytest.raises(ValueError, match="match offset beyond output"):
+        kr.decode_kafka_lz4(_lz4_frame([good, linked]))
+
+
+def test_lz4_frame_checksums_and_content_size_are_skipped():
+    """Block checksums, content size and a content checksum are read past
+    without verification, in every combination, both HC variants, over
+    multi-block compressed and raw payloads: each frame decodes to its
+    payload. A block longer than the 64 KiB its descriptor declares
+    decodes too."""
+    import random
+
+    rng = random.Random(7)
+    payloads = [
+        b"",
+        b"x",
+        rng.randbytes(70_000),
+        b"kafka " * 20_000,
+        b"".join(rng.randbytes(rng.randrange(1, 40)) * rng.randrange(1, 30)
+                 for _ in range(2000)),
+    ]
+    for payload in payloads:
+        for flg in (0x60, 0x70, 0x68, 0x64, 0x7C, 0x40, 0x5C):
+            for broken in (False, True):
+                for size in (65536, 1000):
+                    f = _lz4_frame(_lz4_blocks(payload, size), flg, broken, payload)
+                    assert kr.decode_kafka_lz4(f) == payload, (len(payload), flg)
+        assert kr.decode_kafka_lz4(
+            _lz4_frame(_lz4_blocks(payload, 200_000))
+        ) == payload
+    # checksum values are not checked: a wrong one still decodes
+    payload = b"checksums are skipped " * 100
+    f = bytearray(_lz4_frame(_lz4_blocks(payload), 0x74, content=payload))
+    f[-9] ^= 0xFF  # last byte of the block checksum
+    f[-1] ^= 0xFF  # content checksum
+    assert kr.decode_kafka_lz4(bytes(f)) == payload
+
+
+def test_lz4_zero_offset_mid_block_fails_the_wrapper_crc():
+    """A zero match offset FOLLOWED by more sequences passes Arrow's C
+    decoder (it copies from the output position), where the Python token
+    walk rejected it; inside a legacy lz4 wrapper the inner message's
+    CRC32 still rejects the set."""
+    import pytest
+
+    inner = bytearray()
+    for i in range(3):
+        inner += kr._encode_message_v01(i, 1700000000000 + i, b"k", bytes([0x5A + i]) * 40, 1)
+
+    def seq(literals, offset=None, match_len=4):
+        lit = len(literals)
+        m = match_len - 4 if offset is not None else 0
+        out = bytearray([(min(lit, 15) << 4) | min(m, 15)])
+        if lit >= 15:
+            rest = lit - 15
+            while rest >= 255:
+                out.append(255)
+                rest -= 255
+            out.append(rest)
+        out += literals
+        if offset is not None:
+            out += struct.pack("<H", offset)
+        return bytes(out)
+
+    cut = len(inner) - 30  # inside the last message's value
+    block = seq(bytes(inner[:cut]), offset=0, match_len=8) + seq(bytes(inner[cut + 8 :]))
+    msgset = kr._encode_message_v01(
+        10, 1700000000000, None, _lz4_frame([block]), 1,
+        attributes=kr._LEGACY_CODECS["lz4"],
+    )
+    with pytest.raises(ValueError, match="CRC32 mismatch"):
+        kr.decode_message_sets_v01_many([msgset])
+    with pytest.raises(ValueError):
+        kr.decode_message_set_v01(msgset)
+
+
+def test_map_only_wire_kernels_import_no_pandas():
+    """In ``sources/wire.py`` only ``encode_wire_batches`` (applyInPandas)
+    imports pandas: the four mapInArrow kernels, their factories and
+    every other function there do not."""
+    import ast
+    import inspect
+
+    def imports_pandas(fn):
+        for node in ast.walk(fn):
+            if isinstance(node, ast.Import):
+                names = [a.name for a in node.names]
+            elif isinstance(node, ast.ImportFrom):
+                names = [node.module or ""]
+            else:
+                continue
+            if any(n.split(".")[0] == "pandas" for n in names):
+                return True
+        return False
+
+    tree = ast.parse(inspect.getsource(wire))
+    functions = [f for f in tree.body if isinstance(f, ast.FunctionDef)]
+    assert {f.name for f in functions if imports_pandas(f)} == {"encode_wire_batches"}
+    assert {"decode_wire_batches", "transcode_batches", "down_convert_batches",
+            "ingest_message_sets"} <= {f.name for f in functions}
+
+
+# ---------------------------------------------------------------------------
+# the mapInArrow kernels against the scalar codec
+# ---------------------------------------------------------------------------
+
+def _wire_schemas():
+    from pyspark.sql import types as T
+
+    headers = T.ArrayType(
+        T.StructType([T.StructField("key", T.StringType()),
+                      T.StructField("value", T.BinaryType())])
+    )
+    log = T.StructType([
+        T.StructField("key", T.BinaryType()),
+        T.StructField("value", T.BinaryType()),
+        T.StructField("headers", headers),
+        T.StructField("timestamp", T.TimestampType()),
+        T.StructField("partition", T.IntegerType()),
+        T.StructField("offset", T.LongType()),
+    ])
+    batches = T.StructType([
+        T.StructField("partition", T.IntegerType(), False),
+        T.StructField("base_offset", T.LongType(), False),
+        T.StructField("record_count", T.IntegerType(), False),
+        T.StructField("batch", T.BinaryType(), False),
+    ])
+    sets = T.StructType([
+        T.StructField("partition", T.IntegerType()),
+        T.StructField("base_offset", T.LongType()),
+        T.StructField("record_count", T.IntegerType()),
+        T.StructField("message_set", T.BinaryType()),
+    ])
+    return log, batches, sets
+
+
+def _edge_batches():
+    """(partition, v2 blob) pairs over the edge cases: null key, null
+    value, empty key and value, zero / one / several headers (a null
+    header value among them), NO_TIMESTAMP (-1), pre-1970 millis."""
+    recs = [
+        (None, b"v0", [], 1_700_000_000_000),
+        (b"k1", None, [("h1", b"x"), ("h2", None), ("h3", b"")], -1),
+        (b"", b"", [("only", b"y")], -86_400_000),
+        (b"k3", b"v3" * 50, [], -1_000),
+        (None, None, [("a", b"1"), ("b", b"2")], 0),
+    ]
+    out = []
+    for i, partition in enumerate([0, 3, 7, 3, 0, 5, 7]):
+        base = 100 * i
+        chunk = recs[i % len(recs):] + recs[: i % len(recs)]
+        rows = [
+            {"offset": base + j, "timestamp_ms": ts, "key": k, "value": v, "headers": h}
+            for j, (k, v, h, ts) in enumerate(chunk[: 1 + i % 5])
+        ]
+        out.append((partition, kr.encode_batch_v2(base, rows)))
+    return out
+
+
+def _log_rows_of(df):
+    return [
+        (r.partition, r.offset,
+         None if r.key is None else bytes(r.key),
+         None if r.value is None else bytes(r.value),
+         [(h.key, None if h.value is None else bytes(h.value)) for h in r.headers],
+         r.ts)
+        for r in df.select(
+            "partition", "offset", "key", "value", "headers",
+            F.unix_millis("timestamp").alias("ts"),
+        ).collect()
+    ]
+
+
+def _expected_log_rows(partition, records):
+    return [
+        (partition, r["offset"], r["key"], r["value"],
+         [tuple(h) for h in r.get("headers") or []],
+         None if r["timestamp_ms"] in (-1, None) else r["timestamp_ms"])
+        for r in records
+    ]
+
+
+def test_arrow_wire_kernels_match_scalar_codec_on_edges(spark):
+    """decode_wire_batches, transcode_batches, down_convert_batches and
+    ingest_message_sets against the scalar codec, row for row and in
+    order, on one task that receives several Arrow batches (two rows per
+    batch): null key / value, zero and several headers, -1, pre-1970 and
+    v0 (NULL) timestamps; each schema, nullability included, as the
+    pandas kernels had it; an empty input gives no rows."""
+    from starlight_for_kafka_spark.plans import local_frame
+
+    log_schema, batch_schema, set_schema = _wire_schemas()
+    pairs = _edge_batches()
+    rows = [
+        (p, kr.decode_batch_v2(b)["base_offset"], len(kr.decode_batch_v2(b)["records"]), b)
+        for p, b in pairs
+    ]
+    conf = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    saved = spark.conf.get(conf)
+    spark.conf.set(conf, "2")
+    try:
+        frame = local_frame(spark, rows, batch_schema).coalesce(1)
+        assert frame.rdd.getNumPartitions() == 1 and len(rows) > 2
+
+        decoded = wire.decode_wire_batches(frame)
+        assert decoded.schema == log_schema
+        want = [r for p, b in pairs
+                for r in _expected_log_rows(p, kr.decode_batch_v2(b)["records"])]
+        assert _log_rows_of(decoded) == want
+
+        hops = ["lz4", "zstd", None]
+        transcoded = wire.transcode_batches(frame, hops)
+        assert transcoded.schema == batch_schema
+        want_t = []
+        for p, base, n, b in rows:
+            for h in hops:
+                b = kr.transcode(b, h)
+            want_t.append((p, base, n, b))
+        assert [(r.partition, r.base_offset, r.record_count, bytes(r.batch))
+                for r in transcoded.collect()] == want_t
+
+        for magic, codec in ((0, None), (1, None), (1, "lz4"), (0, "gzip")):
+            sets = wire.down_convert_batches(frame, magic, codec)
+            assert sets.schema == set_schema
+            got = [(r.partition, r.base_offset, r.record_count, bytes(r.message_set))
+                   for r in sets.collect()]
+            assert got == [(p, base, n, kr.down_convert(b, magic, compression=codec))
+                           for p, base, n, b in rows]
+
+            ingested = wire.ingest_message_sets(sets)
+            assert ingested.schema == log_schema
+            want_i = [
+                r for p, _, _, ms in got
+                for r in _expected_log_rows(p, kr.decode_message_set_v01(ms))
+            ]
+            assert _log_rows_of(ingested) == want_i
+            if magic == 0:
+                assert {r[5] for r in want_i} == {None}
+    finally:
+        spark.conf.set(conf, saved)
+
+    empty = local_frame(spark, [], batch_schema)
+    empty_sets = local_frame(spark, [], "partition int, message_set binary")
+    for df, schema in (
+        (wire.decode_wire_batches(empty), log_schema),
+        (wire.transcode_batches(empty, "gzip"), batch_schema),
+        (wire.down_convert_batches(empty, 1, "lz4"), set_schema),
+        (wire.ingest_message_sets(empty_sets), log_schema),
+    ):
+        assert df.schema == schema
+        assert df.collect() == []
