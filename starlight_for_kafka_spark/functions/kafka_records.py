@@ -549,33 +549,14 @@ def _assemble_v2(
 # (profiled: ~70% of encode, ~100% of decode). Varints inside one record
 # chain sequentially, but ACROSS the records of an Arrow chunk every
 # field is independent — the same lane axis crc32c_many exploits. Encode
-# computes every record's zigzag varints as one (N, 10) masked byte
-# matrix per field and scatters bytes/blobs into a single preallocated
-# output buffer (ragged blob placement via the repeat+arange index
-# trick); decode walks only the record-length prefixes sequentially
+# writes every record's zigzag varints with one masked byte-matrix
+# scatter per varint column and lets Arrow's element-wise binary join
+# interleave them with the key, value and header buffers (no per-record
+# Python); decode walks only the record-length prefixes sequentially
 # (~4 Python ops per record) and decodes every interior field of all
 # records in one masked gather per field. Outputs are byte-identical to
 # encode_batch_v2 / value-identical to decode_batch_v2 (pinned by tests).
 # ---------------------------------------------------------------------- #
-
-
-def _encode_headers(headers) -> bytes:
-    """The header section of one record: varint(count) + per-header
-    varint(len(key)) key varint(len(value)|-1) value — exactly
-    :func:`encode_record_v2`'s layout."""
-    out = bytearray()
-    headers = headers or []
-    _write_varint(len(headers), out)
-    for hk, hv in headers:
-        kb = hk.encode("utf-8")
-        _write_varint(len(kb), out)
-        out += kb
-        if hv is None:
-            _write_varint(-1, out)
-        else:
-            _write_varint(len(hv), out)
-            out += hv
-    return bytes(out)
 
 
 def _vec_zigzag(n):
@@ -630,12 +611,32 @@ def _vec_ragged_scatter(out, dest_starts, lens, src_cat):
         s = e
 
 
+def _varint_array(*fields):
+    """A binary Arrow array whose element i is ``varint(f[i])`` for each
+    int64 array ``f`` in ``fields``, back to back: one scatter for all."""
+    import numpy as np
+    import pyarrow as pa
+
+    z = np.stack([_vec_zigzag(np.asarray(f, np.int64)) for f in fields], 1).ravel()
+    nb = _vec_varint_nb(z)
+    ends = np.cumsum(nb)
+    out = np.zeros(int(ends[-1]) if len(z) else 0, dtype=np.uint8)
+    if len(z):
+        _vec_varint_scatter(out, ends - nb, z, nb)
+    n = len(z) // len(fields)
+    offsets = np.zeros(n + 1, dtype=np.int32)
+    offsets[1:] = ends[len(fields) - 1 :: len(fields)]
+    return pa.Array.from_buffers(
+        pa.binary(), n, [None, pa.py_buffer(offsets), pa.py_buffer(out)]
+    )
+
+
 def encode_batches_v2_columnar(
     offsets,
     ts_ms,
-    keys: list,
-    values: list,
-    headers: list | None,
+    keys,
+    values,
+    headers,
     batch_starts,
     compression: str | None = None,
     producer_id: int = -1,
@@ -646,13 +647,22 @@ def encode_batches_v2_columnar(
 ) -> list[bytes]:
     """Columnar :func:`encode_batch_v2` over many batches at once:
     ``offsets``/``ts_ms`` are per-record int64 arrays, ``keys``/``values``
-    per-record ``bytes | None`` lists, ``headers`` a per-record list of
-    ``(key, value)`` tuples (or ``None`` for the whole argument when no
-    record has headers). ``batch_starts`` are the record indices where
-    each batch begins (each batch's base offset is its first record's
-    offset).
+    binary columns, ``headers`` a ``list<struct<key string, value
+    binary>>`` column (or ``None`` for the whole argument when no record
+    has headers; a null list and an empty one both encode no headers).
+    Columns are Arrow arrays (chunked or sliced) or Python lists of
+    ``bytes | None`` and ``(key, value)`` tuples, which go through
+    ``pa.array`` first. ``batch_starts`` are the record indices where each
+    batch begins (each batch's base offset is its first record's offset).
+
+    Every record's bytes come from Arrow's element-wise binary join over
+    the key, value and header buffers and the varint columns between
+    them, so no Python object is built per record. A null header key
+    raises ``ValueError`` before any bytes are written.
     Byte-identical to per-record encoding (pinned by tests)."""
     import numpy as np
+    import pyarrow as pa
+    import pyarrow.compute as pc
 
     offsets = np.asarray(offsets, dtype=np.int64)
     ts_ms = np.asarray(ts_ms, dtype=np.int64)
@@ -664,84 +674,60 @@ def encode_batches_v2_columnar(
         batch_starts[0] != 0 or batch_starts[-1] >= n_rec
     ):
         raise ValueError("empty batch")
+    if compression not in (None, "none", *_CODEC_IDS):
+        raise ValueError(f"unknown codec {compression!r}")
     counts = np.diff(np.concatenate((batch_starts, [n_rec])))
-
-    base_off = np.repeat(offsets[batch_starts], counts)
     base_ts_b = np.minimum.reduceat(ts_ms, batch_starts)
     max_ts_b = np.maximum.reduceat(ts_ms, batch_starts)
     ts_delta = ts_ms - np.repeat(base_ts_b, counts)
-    off_delta = offsets - base_off
+    off_delta = offsets - np.repeat(offsets[batch_starts], counts)
 
-    klen = np.fromiter(
-        (-1 if k is None else len(k) for k in keys), np.int64, n_rec
-    )
-    vlen = np.fromiter(
-        (-1 if v is None else len(v) for v in values), np.int64, n_rec
-    )
-    keys_cat = b"".join(k for k in keys if k is not None)
-    vals_cat = b"".join(v for v in values if v is not None)
-    if headers is None:
-        hdr_blobs = None
-        hlen = np.ones(n_rec, dtype=np.int64)  # every blob is b"\x00"
-    else:
-        hdr_blobs = [_encode_headers(h) for h in headers]
-        hlen = np.fromiter((len(b) for b in hdr_blobs), np.int64, n_rec)
+    def arrow(col, typ):
+        if isinstance(col, pa.ChunkedArray):
+            col = col.combine_chunks()
+        return (col if isinstance(col, pa.Array) else pa.array(col, typ)).cast(typ)
 
-    # one fused pass: byte counts for the 4 interior varints, then the
-    # length prefix, then ALL 5N varints written by a single scatter
-    z4 = np.concatenate(
-        (_vec_zigzag(ts_delta), _vec_zigzag(off_delta),
-         _vec_zigzag(klen), _vec_zigzag(vlen))
-    )
-    nb4 = _vec_varint_nb(z4)
-    nb_t, nb_o, nb_k, nb_v = (
-        nb4[:n_rec], nb4[n_rec : 2 * n_rec],
-        nb4[2 * n_rec : 3 * n_rec], nb4[3 * n_rec :],
-    )
+    def lengths(col):  # -1 for null, as the protocol writes it
+        return pc.binary_length(col).fill_null(-1).to_numpy().astype(np.int64)
 
-    kbytes = np.maximum(klen, 0)
-    vbytes = np.maximum(vlen, 0)
-    body_len = 1 + nb_t + nb_o + nb_k + kbytes + nb_v + vbytes + hlen
-    zl = _vec_zigzag(body_len)
-    nb_l = _vec_varint_nb(zl)
-    rec_len = nb_l + body_len
-    rec_starts = np.concatenate(([0], np.cumsum(rec_len)[:-1]))
+    def join(*cols):  # null elements join as b""
+        return pc.binary_join_element_wise(*cols, b"", null_handling="replace")
 
-    out = np.zeros(int(rec_len.sum()), dtype=np.uint8)
-    # attr byte at rec_starts + nb_l is 0 — buffer is zero-initialized
-    ts_start = rec_starts + nb_l + 1
-    off_start = ts_start + nb_t
-    klen_start = off_start + nb_o
-    key_start = klen_start + nb_k
-    vlen_start = key_start + kbytes
-    val_start = vlen_start + nb_v
-    hdr_start = val_start + vbytes
-    _vec_varint_scatter(
-        out,
-        np.concatenate((rec_starts, ts_start, off_start, klen_start, vlen_start)),
-        np.concatenate((zl, z4)),  # same field order as the starts
-        np.concatenate((nb_l, nb4)),
+    keys, values = arrow(keys, pa.binary()), arrow(values, pa.binary())
+    klen, vlen = lengths(keys), lengths(values)
+    hdr_type = pa.list_(pa.struct([("key", pa.string()), ("value", pa.binary())]))
+    headers = arrow(pa.nulls(n_rec, hdr_type) if headers is None else headers, hdr_type)
+    n_hdr = pc.list_value_length(headers).fill_null(0).to_numpy().astype(np.int64)
+    # a null list's child slots are skipped; a null struct nulls its key
+    hk, hv = pc.list_flatten(headers).flatten()
+    if hk.null_count:
+        raise ValueError("null header key")
+    hk = hk.cast(pa.binary())
+    entries = join(_varint_array(lengths(hk)), hk, _varint_array(lengths(hv)), hv)
+    hdr_offsets = np.concatenate(([0], np.cumsum(n_hdr))).astype(np.int32)
+    hdr_bytes = pc.binary_join(
+        pa.ListArray.from_arrays(pa.array(hdr_offsets), entries), b""
     )
-    _vec_ragged_scatter(out, key_start[klen >= 0], kbytes[klen >= 0], keys_cat)
-    _vec_ragged_scatter(out, val_start[vlen >= 0], vbytes[vlen >= 0], vals_cat)
-    if hdr_blobs is None:
-        out[hdr_start] = 0  # zigzag varint of header count 0
-    else:
-        _vec_ragged_scatter(out, hdr_start, hlen, b"".join(hdr_blobs))
+    # attributes byte 0 is varint(0)
+    body = (
+        _varint_array(np.zeros(n_rec), ts_delta, off_delta, klen), keys,
+        _varint_array(vlen), values, _varint_array(n_hdr), hdr_bytes,
+    )
+    body_len = sum(np.maximum(lengths(col), 0) for col in body)
+    recs = join(_varint_array(body_len), *body)
 
     # split per batch and finish with the scalar header assembly (40
     # fixed bytes per batch) + one lane-parallel CRC pass
-    all_bytes = out.tobytes()
-    b_start = rec_starts[batch_starts]
-    b_end = np.concatenate((b_start[1:], [len(all_bytes)]))
+    rec_starts = np.frombuffer(recs.buffers()[1], np.int32)
+    data = memoryview(recs.buffers()[2])
+    b_start = rec_starts[batch_starts].tolist()
+    b_end = b_start[1:] + [int(rec_starts[n_rec])]
     parts: list[bytes] = []
     for bi in range(len(batch_starts)):
-        recs = all_bytes[int(b_start[bi]) : int(b_end[bi])]
+        section = data[b_start[bi] : b_end[bi]]
         attr = attributes
         if compression not in (None, "none"):
-            if compression not in _CODEC_IDS:
-                raise ValueError(f"unknown codec {compression!r}")
-            recs = _compress(compression, recs)
+            section = _compress(compression, section)
             attr = (attr & ~0x07) | _CODEC_IDS[compression]
         last = int(batch_starts[bi] + counts[bi] - 1)
         last_offset_delta = int(offsets[last] - offsets[batch_starts[bi]])
@@ -757,7 +743,7 @@ def encode_batches_v2_columnar(
                 base_sequence,
                 int(counts[bi]),
             )
-            + recs
+            + section
         )
     return [
         _assemble_v2(
@@ -1333,7 +1319,14 @@ def decode_kafka_lz4(data: bytes) -> bytes:
     rebuilt frame with the spec HC and no block checksums, content size
     or content checksum, which this replay path never verified. A block
     the C decoder rejects raises the pure-Python decoder's guard message
-    when one of its guards names the fault."""
+    when one of its guards names the fault.
+
+    Known gap: a zero match offset followed by more sequences is accepted
+    by the C decoder, which copies from the output position and returns
+    bytes the input never held (a zero offset that ends the block is
+    still rejected). Inside a legacy wrapper the inner messages' CRC32
+    fails the set; a direct caller gets the wrong bytes. Rejecting it
+    needs a Python token walk over every block."""
     data = bytes(data)
     if data[:4] != _LZ4_FRAME_MAGIC:
         raise ValueError("not an LZ4 frame (bad magic)")

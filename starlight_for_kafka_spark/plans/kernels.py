@@ -1,10 +1,12 @@
 """One seam for every Python kernel this package hands to Spark.
 
 Each ``mapInPandas`` / ``mapInArrow`` / ``applyInPandas`` /
-``applyInPandasWithState`` function goes through :func:`kernel`, which
-does two things. (The ``mapInArrow`` kernels are the four map-only wire
+``applyInArrow`` / ``applyInPandasWithState`` function goes through
+:func:`kernel`, which does two things. (The Arrow kernels are the wire
 conversions in ``sources/wire.py``: decode, transcode, down-convert and
-legacy ingest, which read and yield ``pyarrow.RecordBatch`` es.)
+legacy ingest on ``mapInArrow``, which read and yield
+``pyarrow.RecordBatch`` es, and encode on ``applyInArrow``, which takes
+and returns one ``pyarrow.Table`` per group.)
 
 **Ships the kernel's modules by value.** Executor Python workers cannot
 import this package (it is on the driver's ``sys.path`` only), so a kernel
@@ -40,7 +42,9 @@ The saving is per reused worker process: with
 has never run a kernel, so the drop does nothing there. The wrapper keeps
 the kernel's arity and annotations exactly as pyspark reads them
 (``getfullargspec``, ``get_type_hints``), so each call site keeps its eval
-type; ``tests/test_kernels.py`` keeps every call site on this seam.
+type: an unannotated ``applyInArrow`` kernel stays the table form, the
+one pyspark picks when the hints name no iterator; ``tests/test_kernels.py``
+keeps every call site on this seam.
 """
 
 from __future__ import annotations

@@ -7,17 +7,24 @@ consumers (utils/ByteBufUtils.java:172-278, format/KafkaV1EntryFormatter
 codec is functions/kafka_records.py (pure Python, public protocol spec)
 and the operators are Arrow-batched:
 
-- encode: applyInPandas grouped by partition — each partition's records
-  are offset-sorted and chunked into batches of ``max_records_per_batch``,
-  mirroring how a producer's batches land on a partition leader. One
-  shuffle on ``partition`` (the same co-location produce needs anyway).
+- encode: applyInArrow grouped by (partition, bucket of 16 batches) —
+  each partition's records are offset-sorted and chunked into batches of
+  ``max_records_per_batch``, mirroring how a producer's batches land on a
+  partition leader. Two exchanges: the row_number window's on
+  ``partition`` and an explicit one on (partition, bucket), so encode
+  tasks scale with the data, not the number of log partitions. The
+  kernel hands the group's ``pyarrow.Table`` columns to the codec, which
+  joins each record's bytes from the key, value and header buffers.
 - decode, transcode, down-convert and legacy ingest: mapInArrow — batches
   are self-contained blobs, so these are embarrassingly parallel, no
   shuffle; CRC32C is verified per batch. Each kernel reads the Arrow
   batch's columns and yields a ``pyarrow.RecordBatch`` at the declared
-  types: no pandas frame, and no PySpark pandas converter, whose pass
-  over the ``headers`` array<struct> column alone cost more than the
-  decode it carried.
+  types.
+
+No kernel here builds a pandas frame: PySpark's pandas converter, whose
+pass over the ``headers`` array<struct> column alone cost more than the
+decode it carried, and a per-record Python walk over the headers on the
+encode side, both cost more than the codec work they fed.
 
 Kafka timestamps are MILLISECONDS on the wire, so a roundtrip truncates
 sub-ms precision — that is wire semantics, not a codec defect.
@@ -87,14 +94,19 @@ def encode_wire_batches(
 
     Batch membership (positional chunks of ``max_records_per_batch`` rows
     in offset order) is assigned JVM-side with a per-partition row_number,
-    and the Python kernel then runs per (partition, bucket-of-16-batches)
-    group — so encode parallelism scales with the DATA, not the number of
-    log partitions (a per-partition kernel would serialize a hot
-    partition's whole byte-assembly into one task: a 2-partition topic
-    would use 2 of 32 cores), while each kernel call still amortizes the
-    Python/Arrow invocation over 16 batches (one group per batch measured
-    slower than the per-partition kernel — per-group overhead dominates).
-    The batch boundaries produced are identical in all three shapes."""
+    and the applyInArrow kernel then runs per (partition,
+    bucket-of-16-batches) group, behind its own exchange on that pair —
+    so encode parallelism scales with the DATA, not the number of log
+    partitions (a per-partition kernel would serialize a hot partition's
+    whole byte-assembly into one task: a 2-partition topic would use 2 of
+    32 cores, even where grouping by partition alone measures faster on a
+    log with more partitions than cores), while each kernel call still
+    amortizes the Python/Arrow invocation over 16 batches (one group per
+    batch measured slower than the per-partition kernel — per-group
+    overhead dominates). The batch boundaries produced are identical in
+    all three shapes. The kernel passes the group's Arrow columns
+    straight to ``kafka_records.encode_batches_v2_columnar``: no pandas
+    frame and no Python object per record."""
     from pyspark.sql import Window
 
     n = max_records_per_batch
@@ -115,64 +127,39 @@ def encode_wire_batches(
     # bytes; the Python/Arrow hop is the expensive leg and it must scale
     # with the data, not the partition count.
     staged = staged.repartition("partition", "__grp").withColumn(
-        # epoch millis computed JVM-side: a pandas .astype('int64') on the
-        # timestamp column would encode SESSION-LOCAL wall-clock millis
-        # into the wire bytes (wrong for any non-UTC session, silently
-        # self-cancelling on roundtrip) and crashes/corrupts on NULL
-        # timestamps. unix_millis is an instant regardless of session TZ;
-        # NULL maps to Kafka's NO_TIMESTAMP (-1) in the kernel.
+        # epoch millis computed JVM-side: unix_millis is an instant
+        # regardless of the session timezone (a Python-side conversion of
+        # the timestamp column would encode SESSION-LOCAL wall-clock
+        # millis into the wire bytes). NULL maps to Kafka's NO_TIMESTAMP
+        # (-1) in the kernel.
         "__ts_ms",
         F.unix_millis("timestamp"),
     )
+    schema = to_arrow_schema(WIRE_BATCH_SCHEMA)
 
-    def op(key, pdf):
+    def op(table):
         import numpy as np
-        import pandas as pd
+        import pyarrow as pa
 
-        pdf = pdf.sort_values("offset")
-        part = int(key[0])
-        n_rec = len(pdf)
-        # columnar straight through: building per-record dicts was ~40%
-        # of kernel time; the codec itself vectorizes varints across the
-        # whole chunk (kafka_records.encode_batches_v2_columnar) with all
-        # CRCs in one lane-parallel pass
-        offs = pdf["offset"].to_numpy(dtype=np.int64)
-        ts_ms = (
-            pdf["__ts_ms"].fillna(-1).to_numpy(dtype=np.int64, na_value=-1)
-            if pdf["__ts_ms"].isna().any()
-            else pdf["__ts_ms"].to_numpy(dtype=np.int64)
-        )
-        keys = [None if k is None else bytes(k) for k in pdf["key"]]
-        vals = [None if v is None else bytes(v) for v in pdf["value"]]
-        hdrs_raw = pdf["headers"].tolist()
-        headers = None
-        if any(hs is not None and len(hs) > 0 for hs in hdrs_raw):
-            headers = [
-                [
-                    (h["key"], bytes(h["value"]) if h["value"] is not None else None)
-                    for h in hs
-                ]
-                if hs is not None and len(hs) > 0
-                else None
-                for hs in hdrs_raw
-            ]
-        batch_starts = np.arange(0, n_rec, n, dtype=np.int64)
+        table = table.sort_by("offset")
+        offsets = table.column("offset").to_numpy()
+        batch_starts = np.arange(0, table.num_rows, n, dtype=np.int64)
         blobs = kr.encode_batches_v2_columnar(
-            offs, ts_ms, keys, vals, headers, batch_starts,
-            compression=compression,
+            offsets, table.column("__ts_ms").fill_null(-1).to_numpy(),
+            table.column("key"), table.column("value"), table.column("headers"),
+            batch_starts, compression=compression,
         )
-        counts = np.diff(np.concatenate((batch_starts, [n_rec])))
-        return pd.DataFrame(
-            {
-                "partition": np.full(len(blobs), part, dtype=np.int64),
-                "base_offset": offs[batch_starts],
-                "record_count": counts,
-                "batch": blobs,
-            },
-            columns=["partition", "base_offset", "record_count", "batch"],
+        return pa.Table.from_arrays(
+            [
+                table.column("partition").take(batch_starts).cast(pa.int32()),
+                pa.array(offsets[batch_starts], pa.int64()),
+                pa.array(np.diff(batch_starts, append=table.num_rows), pa.int32()),
+                pa.array(blobs, pa.binary()),
+            ],
+            schema=schema,
         )
 
-    return staged.groupBy("partition", "__grp").applyInPandas(
+    return staged.groupBy("partition", "__grp").applyInArrow(
         kernel(op, kr), WIRE_BATCH_SCHEMA
     )
 

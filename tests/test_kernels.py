@@ -22,6 +22,7 @@ import zipfile
 import zipimport
 
 import pandas as pd
+import pyarrow as pa
 import pytest
 from pyspark import cloudpickle
 
@@ -97,6 +98,35 @@ def test_wrapper_keeps_what_pyspark_reads(fn, eval_type):
     assert [f.equals(frame) for f in out] == [True]
 
 
+def _table(table):
+    return table
+
+
+def _batches(batches: typing.Iterator[pa.RecordBatch]) -> typing.Iterator[pa.RecordBatch]:
+    yield from batches
+
+
+@pytest.mark.parametrize(
+    "fn, eval_type",
+    [(_table, "SQL_GROUPED_MAP_ARROW_UDF"), (_batches, "SQL_GROUPED_MAP_ARROW_ITER_UDF")],
+)
+def test_wrapper_keeps_the_arrow_eval_type(fn, eval_type):
+    """applyInArrow reads the same signature: an unannotated kernel stays
+    the table form (pyspark's default when it infers nothing), an
+    annotated iterator kernel the iterator form, and no warning."""
+    from pyspark.sql.pandas.typehints import infer_group_arrow_eval_type_from_func
+    from pyspark.util import PythonEvalType
+
+    wrapped = kernel(fn)
+    assert inspect.getfullargspec(wrapped) == inspect.getfullargspec(fn)
+    with warnings.catch_warnings():
+        warnings.simplefilter("error")
+        inferred = infer_group_arrow_eval_type_from_func(wrapped)
+    assert (inferred or PythonEvalType.SQL_GROUPED_MAP_ARROW_UDF) == getattr(
+        PythonEvalType, eval_type
+    )
+
+
 def test_kernel_drops_zip_importers_in_the_worker(spark):
     def count(batches):
         import os
@@ -156,7 +186,7 @@ def _grouped_builders():
 def test_grouped_operators_build_without_warnings(spark):
     builders = _grouped_builders()
     assert set(builders) == set(_grouped_call_sites()), (
-        "add the new applyInPandas/applyInPandasWithState operator here"
+        "add the new applyInPandas/applyInArrow/applyInPandasWithState operator here"
     )
     for (path, name), (build, schema) in builders.items():
         frame = local_frame(spark, [], schema)
@@ -170,8 +200,8 @@ def test_grouped_operators_build_without_warnings(spark):
 # ---------------------------------------------------------------------------
 
 _PACKAGE = pathlib.Path(__file__).resolve().parent.parent / "starlight_for_kafka_spark"
-_GROUPED = {"applyInPandas", "applyInPandasWithState"}
-_PYTHON_KERNEL_CALLS = {"mapInPandas", "mapInArrow", "applyInArrow"} | _GROUPED
+_GROUPED = {"applyInPandas", "applyInArrow", "applyInPandasWithState"}
+_PYTHON_KERNEL_CALLS = {"mapInPandas", "mapInArrow"} | _GROUPED
 
 
 def _kernel_calls(source: str):

@@ -903,9 +903,9 @@ def test_lz4_zero_offset_mid_block_fails_the_wrapper_crc():
 
 
 def test_map_only_wire_kernels_import_no_pandas():
-    """In ``sources/wire.py`` only ``encode_wire_batches`` (applyInPandas)
-    imports pandas: the four mapInArrow kernels, their factories and
-    every other function there do not."""
+    """No function in ``sources/wire.py`` imports pandas: the four
+    mapInArrow kernels, their factories and ``encode_wire_batches``
+    (applyInArrow) all read and return Arrow."""
     import ast
     import inspect
 
@@ -923,9 +923,9 @@ def test_map_only_wire_kernels_import_no_pandas():
 
     tree = ast.parse(inspect.getsource(wire))
     functions = [f for f in tree.body if isinstance(f, ast.FunctionDef)]
-    assert {f.name for f in functions if imports_pandas(f)} == {"encode_wire_batches"}
-    assert {"decode_wire_batches", "transcode_batches", "down_convert_batches",
-            "ingest_message_sets"} <= {f.name for f in functions}
+    assert {f.name for f in functions if imports_pandas(f)} == set()
+    assert {"encode_wire_batches", "decode_wire_batches", "transcode_batches",
+            "down_convert_batches", "ingest_message_sets"} <= {f.name for f in functions}
 
 
 # ---------------------------------------------------------------------------
@@ -1077,3 +1077,181 @@ def test_arrow_wire_kernels_match_scalar_codec_on_edges(spark):
     ):
         assert df.schema == schema
         assert df.collect() == []
+
+
+# ---------------------------------------------------------------------------
+# the produce-side encoder against the scalar codec
+# ---------------------------------------------------------------------------
+
+_CODECS = [None, "gzip", "snappy", "lz4", "zstd"]
+
+
+def _encode_edge_rows():
+    """(key, value, headers, timestamp ms) over the encoder's edge cases:
+    null, empty and >= 128-byte keys and values (two-byte length
+    varints); a null header list and an empty one; a null header value; a
+    non-ASCII header key; two and three headers; NO_TIMESTAMP (-1) and
+    pre-1970 millis."""
+    big = bytes(range(256)) * 2
+    return [
+        (None, b"v", None, 1_700_000_000_000),
+        (b"k", None, [], -1),
+        (b"", b"", [("h", None)], -86_400_000),
+        (big, big[:200], [("ключ-é", b"x"), ("b", b""), ("c", big)], 0),
+        (big[:128], None, [("a", b"1"), ("a", None)], -1_000),
+        (None, None, None, 5),
+        (b"k" * 300, b"", [("", b"")], 1_700_000_000_999),
+    ]
+
+
+def _scalar_batches(offsets, rows, per_batch, compression):
+    """encode_batch_v2 over ``rows`` (offset order) in chunks of
+    ``per_batch``: the bytes every columnar path must reproduce."""
+    recs = [
+        {"offset": o, "timestamp_ms": ts, "key": k, "value": v, "headers": h}
+        for o, (k, v, h, ts) in zip(offsets, rows)
+    ]
+    return [
+        kr.encode_batch_v2(recs[i]["offset"], recs[i:i + per_batch],
+                           compression=compression)
+        for i in range(0, len(recs), per_batch)
+    ]
+
+
+def test_columnar_encoder_matches_scalar_on_arrow_edges():
+    """encode_batches_v2_columnar is byte-identical to encode_batch_v2 for
+    every codec, from Python lists and from Arrow columns: plain, sliced
+    (non-zero offset), chunked, and with null slots whose offsets still
+    span bytes or header entries."""
+    import numpy as np
+    import pyarrow as pa
+
+    hdr_type = pa.list_(pa.struct([("key", pa.string()), ("value", pa.binary())]))
+    rows = _encode_edge_rows() * 3
+    n = len(rows)
+    offsets = np.arange(10**12, 10**12 + 2 * n, 2, dtype=np.int64)  # gapped
+    keys, values, headers, ts = (list(c) for c in zip(*rows))
+    starts = np.arange(0, n, 4)
+
+    def spanning_nulls(col, typ):
+        """``col`` rebuilt so every null slot covers 3 bytes / 2 entries."""
+        arr = pa.array(col, typ)
+        if typ == hdr_type:
+            fill = pa.array([[("x", b"y"), ("z", None)]] * n, typ).values
+            items = [arr[i].values if arr[i].is_valid else fill[2 * i:2 * i + 2]
+                     for i in range(n)]
+            lens = [len(x) for x in items]
+            return pa.ListArray.from_arrays(
+                pa.array(np.concatenate(([0], np.cumsum(lens))), pa.int32()),
+                pa.concat_arrays(items), typ, mask=arr.is_null())
+        data = b"".join(b"NUL" if x is None else x for x in col)
+        lens = [3 if x is None else len(x) for x in col]
+        out = pa.Array.from_buffers(typ, n, [
+            arr.buffers()[0],
+            pa.py_buffer(np.concatenate(([0], np.cumsum(lens))).astype(np.int32)),
+            pa.py_buffer(data)])
+        assert out.null_count == arr.null_count and len(out.buffers()[2]) == len(data)
+        return out
+
+    def sliced(col, typ):
+        pad = pa.array([None, None], typ)
+        return pa.concat_arrays([pad, pa.array(col, typ), pad]).slice(2, n)
+
+    def chunked(col, typ):
+        return pa.chunked_array([pa.array(col[:5], typ), pa.array(col[5:], typ)])
+
+    forms = {
+        "lists": lambda col, typ: col,
+        "arrow": lambda col, typ: pa.array(col, typ),
+        "sliced": sliced,
+        "chunked": chunked,
+        "spanning_nulls": spanning_nulls,
+    }
+    for codec in _CODECS:
+        want = _scalar_batches(offsets.tolist(), rows, 4, codec)
+        for name, form in forms.items():
+            got = kr.encode_batches_v2_columnar(
+                offsets, ts, form(keys, pa.binary()), form(values, pa.binary()),
+                form(headers, hdr_type), starts, compression=codec,
+            )
+            assert got == want, (codec, name)
+    # the whole headers argument None: no record has headers
+    bare = [(k, v, None, t) for k, v, _, t in rows]
+    assert kr.encode_batches_v2_columnar(
+        offsets, ts, keys, values, None, starts
+    ) == _scalar_batches(offsets.tolist(), bare, 4, None)
+
+
+def test_columnar_encoder_rejects_a_null_header_key():
+    """A null header key (or a null header entry) is a ValueError raised
+    before any bytes are written, from lists and from Arrow."""
+    import pyarrow as pa
+    import pytest
+
+    hdr_type = pa.list_(pa.struct([("key", pa.string()), ("value", pa.binary())]))
+    for headers in (
+        [[("k", b"v")], [(None, b"x")]],
+        pa.array([[("k", b"v")], [(None, b"x")]], hdr_type),
+        pa.array([[("k", b"v")], [None]], hdr_type),
+    ):
+        with pytest.raises(ValueError, match="null header key"):
+            kr.encode_batches_v2_columnar(
+                [0, 1], [0, 0], [b"a", b"b"], [b"c", b"d"], headers, [0])
+
+
+def test_encode_wire_batches_matches_scalar_on_edges(spark):
+    """encode_wire_batches against encode_batch_v2 for every codec: rows
+    handed over out of offset order, gapped offsets, a partition spanning
+    two kernel groups (16 batches each), a NULL timestamp (-1 on the
+    wire), and the declared schema with its nullability."""
+    import random
+
+    from starlight_for_kafka_spark.plans import local_frame
+
+    log_schema, batch_schema, _ = _wire_schemas()
+    edge = _encode_edge_rows()
+    parts = {0: 40, 3: 5}
+    log_rows, want_in = [], {}
+    for p, count in parts.items():
+        offsets = [7 + 3 * i for i in range(count)]
+        rows = [edge[(i + p) % len(edge)] for i in range(count)]
+        rows[1] = rows[1][:3] + (None,)  # NULL timestamp
+        want_in[p] = (offsets, [r[:3] + (-1 if r[3] is None else r[3],) for r in rows])
+        log_rows += [(k, v, h, ts, p, o) for o, (k, v, h, ts) in zip(offsets, rows)]
+    random.Random(5).shuffle(log_rows)
+    frame = local_frame(
+        spark, log_rows,
+        "key binary, value binary, headers array<struct<key: string, value: binary>>, "
+        "ts long, partition int, offset long",
+    ).select("key", "value", "headers", F.timestamp_millis("ts").alias("timestamp"),
+             "partition", "offset")
+    assert frame.schema == log_schema
+    for codec in _CODECS:
+        out = wire.encode_wire_batches(frame, max_records_per_batch=2, compression=codec)
+        assert out.schema == batch_schema
+        got = sorted((r.partition, r.base_offset, r.record_count, bytes(r.batch))
+                     for r in out.collect())
+        want = sorted(
+            (p, offsets[2 * i], len(rows[2 * i:2 * i + 2]), blob)
+            for p, (offsets, rows) in want_in.items()
+            for i, blob in enumerate(_scalar_batches(offsets, rows, 2, codec))
+        )
+        assert got == want, codec
+    assert wire.encode_wire_batches(frame.limit(0)).collect() == []
+
+
+def test_encode_plan_groups_behind_a_partition_and_group_exchange(spark, log):
+    """Encode's FlatMapGroupsInArrow reads a hash exchange on
+    (partition, __grp), not the window's exchange on partition alone, so
+    its tasks scale with the data rather than the number of log
+    partitions; no pandas node appears in the plan."""
+    import re
+
+    plan = wire.encode_wire_batches(log.df)._jdf.queryExecution().executedPlan().toString()
+    lines = plan.splitlines()
+    at = [i for i, line in enumerate(lines) if "FlatMapGroupsInArrow" in line]
+    assert len(at) == 1, plan
+    below = next(line for line in lines[at[0]:] if "Exchange" in line)
+    assert re.search(r"Exchange hashpartitioning\(partition#\d+, __grp#\d+L?, \d+\)",
+                     below), plan
+    assert "Pandas" not in plan

@@ -1,10 +1,11 @@
 #!/usr/bin/env python
-"""Per-request driver probe: what each ``log_serve`` request costs the driver.
+"""Per-request driver probe: what each request of a benchmark workload costs.
 
-Runs the benchmark's ``log_serve`` workload (``perfbench/log_serve.py``,
-unchanged, on a ``get_session`` session sized like a benchmark run) for
-one set-up, one warm-up pass and ``--passes`` measured passes, and
-reports per request kind, as the median over the measured passes:
+Runs one of the benchmark's workloads (``perfbench/log_serve.py`` or
+``perfbench/wire_convert.py``, unchanged, on a ``get_session`` session
+sized like a benchmark run) for one set-up, one warm-up pass and
+``--passes`` measured passes, and reports per request kind, as the
+median over the measured passes:
 
 - ``py4j``: Py4J commands the request sends (driver -> JVM round trips),
   building the request's frame and fetching it as Arrow included, and
@@ -20,7 +21,8 @@ It also prints the compiles of the set-up, of the warm-up pass and of
 every measured pass. The probe's own counter reads happen outside the
 request, so they are in none of the figures.
 
-    python tools/request_probe.py [--seed 5] [--passes 3] [--out FILE]
+    python tools/request_probe.py [--workload {log_serve,wire_convert}]
+        [--seed 5] [--passes 3] [--out FILE]
 
 Every file the run writes stays under ``perfbench/out/``.
 """
@@ -86,6 +88,8 @@ class Counters:
 
 def main() -> None:
     ap = argparse.ArgumentParser()
+    ap.add_argument("--workload", choices=("log_serve", "wire_convert"),
+                    default="log_serve")
     ap.add_argument("--seed", type=int, default=5)
     ap.add_argument("--passes", type=int, default=3)
     ap.add_argument("--out")
@@ -98,7 +102,7 @@ def main() -> None:
     os.chdir(workdir)
     spark = run.start_session()
     try:
-        report = probe(spark, args.seed, args.passes, workdir)
+        report = probe(spark, args.workload, args.seed, args.passes, workdir)
     finally:
         run.stop_session(spark)
         shutil.rmtree(workdir, ignore_errors=True)
@@ -108,12 +112,12 @@ def main() -> None:
             json.dump(report, f, indent=1)
 
 
-def probe(spark, seed: int, passes: int, workdir: str) -> dict:
+def probe(spark, workload: str, seed: int, passes: int, workdir: str) -> dict:
     import harness
-    from log_serve import LogServe
+    import run
 
     counters = Counters(spark)
-    wl = LogServe(spark, seed, workdir)
+    wl = run.make_workload(workload, spark, seed, workdir)
     c0 = counters.compiles()
     wl.setup(0)
     setup_compiles = counters.compiles() - c0
@@ -138,6 +142,7 @@ def probe(spark, seed: int, passes: int, workdir: str) -> dict:
     summary = {
         "python": sys.version.split()[0],
         "nproc": len(os.sched_getaffinity(0)),
+        "workload": workload,
         "seed": seed,
         "passes": passes,
         "setup_compiles": setup_compiles,
