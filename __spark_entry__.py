@@ -20,7 +20,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from starlight_for_kafka_spark import load_table
-from starlight_for_kafka_spark.functions.hashing import md5_hash64
+from starlight_for_kafka_spark.functions.hashing import md5_hash64, words
 from starlight_for_kafka_spark.operators import analytics as analytics_ops
 from starlight_for_kafka_spark.operators import dedup as dedup_ops
 from starlight_for_kafka_spark.operators import groups as group_ops
@@ -2286,8 +2286,7 @@ def q_dedup_minhash_incremental_star(spark, sf_dir):
             F.concat(F.col("text"), F.lit(" crawl tail")).alias("text"),
         )
         clones = c if clones is None else clones.unionByName(c)
-    norm = F.trim(F.regexp_replace(F.lower(F.col("text")), r"\s+", " "))
-    rev = F.array_join(F.reverse(F.split(norm, " ")), " ")
+    rev = F.array_join(F.reverse(words(F.col("text"))), " ")
     fresh = docs.filter(F.col("doc_id") % 40 == 21).select(
         (F.col("doc_id") + 9_000_000).alias("doc_id"), rev.alias("text")
     )
@@ -2311,8 +2310,7 @@ def q_dedup_minhash_incremental(spark, sf_dir):
     full asymmetric pipeline: combined-occupancy cap for cross pairs,
     batch-only occupancy for within-batch pairs."""
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    norm = F.trim(F.regexp_replace(F.lower(F.col("text")), r"\s+", " "))
-    rev = F.array_join(F.reverse(F.split(norm, " ")), " ")
+    rev = F.array_join(F.reverse(words(F.col("text"))), " ")
     near = docs.filter(F.col("doc_id") % 25 == 0).select(
         (F.col("doc_id") + 2_000_000).alias("doc_id"),
         F.concat(F.col("text"), F.lit(" extra token")).alias("text"),
@@ -2341,8 +2339,7 @@ def _fuzzy_bench_fixture(spark, sf_dir):
     (reversal destroys word shingles — clean eval items, flag nothing).
     Benchmark ids offset so ids stay unique across both inputs."""
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    norm = F.trim(F.regexp_replace(F.lower(F.col("text")), r"\s+", " "))
-    rev = F.array_join(F.reverse(F.split(norm, " ")), " ")
+    rev = F.array_join(F.reverse(words(F.col("text"))), " ")
     leak = docs.filter(F.col("doc_id") % 50 == 0).select(
         (F.col("doc_id") + 7_000_000).alias("doc_id"),
         F.concat(F.col("text"), F.lit(" eval answer token")).alias("text"),
@@ -2485,8 +2482,7 @@ def q_snapshot_delta(spark, sf_dir):
     to %10==2 (changed), keeps the rest verbatim (unchanged), and adds
     word-reversed %10==3 clones at +9M ids (added)."""
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    norm = F.trim(F.regexp_replace(F.lower(F.col("text")), r"\s+", " "))
-    rev = F.array_join(F.reverse(F.split(norm, " ")), " ")
+    rev = F.array_join(F.reverse(words(F.col("text"))), " ")
     kept = docs.filter(F.col("doc_id") % 10 != 1)
     changed = F.when(
         F.col("doc_id") % 10 == 2,

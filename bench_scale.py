@@ -258,10 +258,17 @@ class StageMetrics:
     def delta(self) -> dict:
         new = [s for s in self._stages() if s["stageId"] not in self.seen]
         writes = [int(s.get("shuffleWriteBytes", 0)) for s in new]
+
+        def total(field: str) -> int:
+            return sum(int(s.get(field, 0)) for s in new)
+
         return {
             "n_stages": len(new),
             "shuffle_write_bytes": sum(writes),
             "max_stage_shuffle_write_bytes": max(writes, default=0),
+            "executor_run_s": total("executorRunTime") / 1e3,
+            "gc_s": total("jvmGcTime") / 1e3,
+            "spill_bytes": total("memoryBytesSpilled") + total("diskBytesSpilled"),
         }
 
     def peak_heap_mb(self) -> float | None:

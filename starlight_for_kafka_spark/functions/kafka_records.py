@@ -72,8 +72,8 @@ def _build_table() -> None:
 
 _build_table()
 
-def _crc32c_bytewise(data: bytes, crc: int = 0) -> int:
-    crc = ~crc & 0xFFFFFFFF
+def _crc32c_bytewise(data: bytes) -> int:
+    crc = 0xFFFFFFFF
     for b in data:
         crc = (crc >> 8) ^ _crc32c_table[(crc ^ b) & 0xFF]
     return ~crc & 0xFFFFFFFF
@@ -96,9 +96,6 @@ def _crc32c_bytewise(data: bytes, crc: int = 0) -> int:
 # 256-entry byte tables, so the fold costs 4 lookups per lane.
 # ---------------------------------------------------------------------- #
 
-_CRC32C_POLY_REFLECTED = 0x82F63B78
-
-
 def _gf2_matrix_times(mat: list[int], vec: int) -> int:
     s = 0
     i = 0
@@ -117,7 +114,7 @@ def _gf2_matrix_square(mat: list[int]) -> list[int]:
 def _zero_shift_operator(n_bytes: int) -> list[int]:
     """32 column images of the operator 'advance the CRC register past
     ``n_bytes`` zero bytes' (reflected domain)."""
-    odd = [_CRC32C_POLY_REFLECTED] + [1 << (n - 1) for n in range(1, 32)]
+    odd = [_CRC32C_POLY] + [1 << (n - 1) for n in range(1, 32)]
     even = _gf2_matrix_square(odd)   # x^2
     odd = _gf2_matrix_square(even)   # x^4
     mat = _gf2_matrix_square(odd)    # x^8 == one zero byte
@@ -154,7 +151,6 @@ def _operator_byte_tables(mat: list[int]):
     return tabs
 
 
-_LANE_MIN_BYTES = 1 << 16  # below this the numpy setup costs more
 _LANE_LEN = 512
 _lane_op_cache: dict[int, list] = {}
 
@@ -176,35 +172,9 @@ def _apply_op(tabs: list, crc: int) -> int:
     )
 
 
-def crc32c(data: bytes, crc: int = 0) -> int:
-    n = len(data)
-    if n < _LANE_MIN_BYTES:
-        return _crc32c_bytewise(data, crc)
-    import numpy as np
-
-    table_np = _crc32c_np_table()
-    # lane length ~512 bytes: iteration count stays ~512 while each numpy
-    # gather amortizes over (n/512)-wide vectors
-    k = n // _LANE_LEN
-    body = k * _LANE_LEN
-    lanes = np.frombuffer(data, dtype=np.uint8, count=body).reshape(
-        k, _LANE_LEN
-    )
-    reg = np.full(k, 0xFFFFFFFF, dtype=np.uint32)
-    for i in range(_LANE_LEN):
-        reg = (reg >> np.uint32(8)) ^ table_np[
-            (reg ^ lanes[:, i]) & np.uint32(0xFF)
-        ]
-    lane_crcs = (~reg & np.uint32(0xFFFFFFFF)).tolist()
-    tabs = _lane_op(_LANE_LEN)
-    out = lane_crcs[0]
-    for c in lane_crcs[1:]:
-        out = _apply_op(tabs, out) ^ c
-    # fold the caller's incoming crc (chaining) across the whole body:
-    # crc32c(body, crc) == combine(shift(crc, body), crc32c(body, 0))
-    if crc:
-        out ^= _apply_op(_lane_op(body), crc)
-    return _crc32c_bytewise(data[body:], out)
+def crc32c(data: bytes) -> int:
+    """CRC32C of one payload (:func:`crc32c_many` of a one-blob list)."""
+    return crc32c_many([data])[0]
 
 
 def crc32c_many(blobs: list[bytes]) -> list[int]:
@@ -221,7 +191,8 @@ def crc32c_many(blobs: list[bytes]) -> list[int]:
     left-to-right with the cached GF(2) zero-shift operator (4 table
     lookups per segment).
 
-    Exactly equal to [crc32c(b) for b in blobs] (asserted by tests)."""
+    Exactly equal to the bytewise CRC32C recurrence per blob (asserted
+    by ``tests/test_wire.py``)."""
     k = len(blobs)
     if k == 0:
         return []

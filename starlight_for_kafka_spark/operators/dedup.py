@@ -22,7 +22,14 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from starlight_for_kafka_spark.functions.hashing import md5_hash64, shingles, word_shingles
+from starlight_for_kafka_spark.functions.hashing import (
+    char_shingles,
+    md5_hash64,
+    normalize,
+    shingles,
+    word_shingles,
+    words,
+)
 
 
 def content_digest(text_col) -> "F.Column":
@@ -36,7 +43,7 @@ def content_digest(text_col) -> "F.Column":
     every stored digest into a miss and no-op the exact dedup. Accepts
     a column or a column name."""
     c = F.col(text_col) if isinstance(text_col, str) else text_col
-    return F.md5(F.regexp_replace(F.lower(c), r"\s+", " ").cast("binary"))
+    return F.md5(normalize(c).cast("binary"))
 
 
 #: digest-recipe version recorded next to stored indexes (_PARAMS.json);
@@ -103,9 +110,8 @@ def dedup_stats(
     group with a runaway dup rate usually means a broken upstream crawler,
     not real content). Same normalize→md5 digest as exact_dedup, two
     map-side-combinable aggregations, no self-join."""
-    norm = F.regexp_replace(F.lower(F.col(text_col)), r"\s+", " ")
     per_group = (
-        df.withColumn("__digest", F.md5(norm.cast("binary")))
+        df.withColumn("__digest", content_digest(text_col))
         .groupBy(group_col)
         .agg(
             F.count("*").alias("n_docs"),
@@ -199,8 +205,7 @@ def snapshot_delta(
     crawl-key contract); a duplicated id would multiply through the
     join like any keyed log with a corrupt key.
     """
-    norm = F.regexp_replace(F.lower(F.col(text_col)), r"\s+", " ")
-    digest = F.md5(norm.cast("binary"))
+    digest = content_digest(text_col)
     o = old.select(F.col(id_col), digest.alias("old_digest"))
     n = new.select(F.col(id_col), digest.alias("new_digest"))
     joined = o.join(n, id_col, "full_outer")
@@ -225,7 +230,7 @@ def _minhash_coeffs(num_hashes: int) -> tuple[list[int], list[int]]:
 
 def _shingle_expr(text_col: str, shingle_k: int, mode: str):
     if mode == "word":
-        return word_shingles(F.col(text_col), shingle_k)
+        return word_shingles(words(F.col(text_col)), shingle_k)
     return shingles(F.col(text_col), shingle_k)
 
 
@@ -853,11 +858,11 @@ def ngram_jaccard_pairs(
     can then never shrink a prefix or over-prune), so exactness is
     preserved by construction; the verify step owns precision.
 
-    Two micro-decisions that dominate wall-clock: (a) the normalized text
-    is PROJECTED once before shingling — substr inside the transform
-    lambda then reads an attribute, instead of re-running the
-    regexp_replace per position; (b) shingles are hashed to int64
-    (xxhash64) at birth, so every downstream compare — distinct, df
+    Two micro-decisions that dominate wall-clock: (a) the tokenized text
+    (normalized string, or word array in word mode) is PROJECTED once
+    before shingling — the k-fold zip chain then slices an attribute
+    instead of re-running the regexp_replace per slice; (b) shingles are
+    hashed to int64 (xxhash64) at birth, so every downstream compare — distinct, df
     count, prefix join, array_intersect verify — works on longs, not
     5-char strings. Jaccard over distinct hashes equals Jaccard over
     distinct shingles barring a 64-bit collision (≈n²/2⁶⁴ — negligible,
@@ -882,43 +887,20 @@ def ngram_jaccard_pairs(
     # position) is the corpus-heavy leg; spread it across cores when the
     # corpus arrives as 1-2 input splits (single-row-group parquet — see
     # plans/spread.py; a wide 100 TB scan skips the guard)
-    norm = spread_if_narrow(df, id_col).select(
-        F.col(id_col).alias("__id"),
-        F.regexp_replace(F.lower(F.col(text_col)), r"\s+", " ").alias("__t"),
-    )
     if shingle_mode == "word":
         # Broder-style w-shingling (same choice minhash_dedup made, same
         # rationale): the word-gram vocabulary is orders of magnitude
         # larger than the char-k-gram space, so document frequencies —
         # and with them the prefix-join pair space — collapse.
-        # zip-chain over shifted slices, not transform(sequence(...)):
-        # codegen re-evaluates the split ONCE PER SHINGLE inside a lambda
-        # body (no subexpression sharing into lambdas), which turns the
-        # shingling pass quadratic in document length — see
-        # functions/hashing.py word_shingles for the measured numbers.
-        ws = F.split(F.trim(F.col("__t")), " ")
-        ngrams = F.size(ws) - F.lit(shingle_k - 1)
-        acc = F.slice(ws, 1, ngrams)
-        for i in range(1, shingle_k):
-            acc = F.zip_with(
-                acc,
-                F.slice(ws, i + 1, ngrams),
-                lambda a, b: F.concat(a, F.lit(" "), b),
-            )
-        hashed = F.when(
-            ngrams >= 1, F.transform(acc, lambda s: F.xxhash64(s))
-        ).otherwise(F.array().cast("array<bigint>"))
+        tokenize, shingle = words, word_shingles
     else:
-        chars = F.slice(F.split(F.col("__t"), ""), 1, F.length("__t"))
-        npos = F.length("__t") - F.lit(shingle_k - 1)
-        acc = F.slice(chars, 1, npos)
-        for i in range(1, shingle_k):
-            acc = F.zip_with(
-                acc, F.slice(chars, i + 1, npos), lambda a, b: F.concat(a, b)
-            )
-        hashed = F.when(
-            npos >= 1, F.transform(acc, lambda s: F.xxhash64(s))
-        ).otherwise(F.array().cast("array<bigint>"))
+        tokenize, shingle = normalize, char_shingles
+    norm = spread_if_narrow(df, id_col).select(
+        F.col(id_col).alias("__id"), tokenize(F.col(text_col)).alias("__t")
+    )
+    hashed = F.transform(
+        shingle(F.col("__t"), shingle_k), lambda s: F.xxhash64(s)
+    )
     sets_df = norm.select(
         "__id", F.array_distinct(hashed).alias("__set")
     ).withColumn("__n", F.size("__set"))
@@ -1203,7 +1185,7 @@ def benchmark_contamination(
     except the final per-doc aggregation, which is pre-combined map-side.
     Docs shorter than ``ngram_k`` words have no n-grams and report ratio 0.
     """
-    grams = lambda c: F.array_distinct(word_shingles(c, ngram_k))  # noqa: E731
+    grams = lambda c: F.array_distinct(word_shingles(words(c), ngram_k))  # noqa: E731
     bench_grams = (
         benchmark.select(F.explode(grams(F.col(text_col))).alias("g")).distinct()
     )
@@ -1255,7 +1237,7 @@ def bloom_decontaminate(
 
     Emits (id, n_ngrams, bloom_hit).
     """
-    grams = lambda c: F.array_distinct(word_shingles(c, ngram_k))  # noqa: E731
+    grams = lambda c: F.array_distinct(word_shingles(words(c), ngram_k))  # noqa: E731
 
     def positions(g, i: int):
         return F.pmod(md5_hash64(F.concat(F.lit(f"bl{i}:"), g)), F.lit(n_bits))
@@ -1666,7 +1648,7 @@ def source_overlap(
     grams = df.select(
         F.col(group_col).alias("grp"),
         F.explode(
-            F.transform(word_shingles(F.col(text_col), ngram_k), md5_hash64)
+            F.transform(word_shingles(words(F.col(text_col)), ngram_k), md5_hash64)
         ).alias("g"),
     ).distinct()
     sizes = grams.groupBy("grp").agg(F.count("*").alias("n"))
@@ -1732,7 +1714,7 @@ def duplicated_ngram_fraction(
         F.col(id_col),
         F.explode(
             F.array_distinct(
-                F.transform(word_shingles(F.col(text_col), ngram_k), md5_hash64)
+                F.transform(word_shingles(words(F.col(text_col)), ngram_k), md5_hash64)
             )
         ).alias("g"),
     )
@@ -1855,11 +1837,16 @@ def repeated_spans(
     copied passage of ``run + k - 1`` words — without building a suffix
     array, which does not distribute. Exact for passages ≥ k words.
 
-    Shuffle shape: positional k-grams (map-only posexplode), the same
-    doc-distinct gram-frequency aggregation as duplicated_ngram_fraction
-    (one gram-keyed count, d rows per gram, never d²), a gram-keyed join
-    back to flag each position, then gaps-and-islands per doc (doc-keyed
-    windows over the doc's own positions — bounded by doc length).
+    Tokenized with :func:`~starlight_for_kafka_spark.functions.hashing.words`
+    (lowercase, whitespace collapsed). Ids are unique per document, as
+    every dedup operator here assumes.
+
+    Shuffle shape: positional k-grams (map-only posexplode; gram identity
+    is the md5-derived int64, as in :func:`duplicated_ngram_fraction` and
+    :func:`remove_repeated_spans`), one gram-keyed (min-doc, max-doc)
+    aggregation that partial-combines map-side, a gram-keyed join back to
+    flag each position, then gaps-and-islands per doc (doc-keyed windows
+    over the doc's own positions — bounded by doc length).
 
     Emits one row per INPUT doc: n_grams (positions; 0 for docs shorter
     than ``ngram_k`` words), longest_dup_run (k-gram run), and
@@ -1873,13 +1860,13 @@ def repeated_spans(
     df = spread_if_narrow(df, id_col)
     pos_grams = df.select(
         F.col(id_col),
-        F.posexplode(word_shingles(F.col(text_col), ngram_k)).alias("pos", "g"),
+        F.posexplode(
+            F.transform(word_shingles(words(F.col(text_col)), ngram_k), md5_hash64)
+        ).alias("pos", "g"),
     )
     # "gram shared by >1 doc" == min(doc) != max(doc) over the positional
-    # rows (round 11): the dedicated doc-distinct explode — a SECOND full
-    # tokenize pass over the corpus — is gone, and min/max partial-combine
-    # map-side so hot grams never concentrate on one reducer (the
-    # count-per-gram they replace shipped one row per holding doc).
+    # rows; min/max partial-combine map-side, so a hot gram never
+    # concentrates on one reducer
     freq = pos_grams.groupBy("g").agg(
         F.min(id_col).alias("__mn"), F.max(id_col).alias("__mx")
     )
@@ -1928,25 +1915,32 @@ def remove_repeated_spans(
     document with every shared passage of >= ``ngram_k`` words removed
     from all but its FIRST-occurrence document (lowest ``id_col`` holding
     the k-gram — the same keep-min-id keeper rule every dedup path in
-    this package pins).
+    this package pins). Ids are unique per document, as every dedup
+    operator here assumes.
 
-    Semantics (exact, engine-reproducible): tokenize like
-    ``word_shingles`` (lowercase, whitespace collapsed); a word survives
-    unless it is covered by a positional k-gram that (a) occurs in more
-    than one document and (b) sits in a non-keeper document. Output text
-    is the surviving words joined by single spaces — normalized-token
+    Semantics (exact, engine-reproducible): tokenize with
+    :func:`~starlight_for_kafka_spark.functions.hashing.words`
+    (lowercase, whitespace collapsed); a word survives unless it is
+    covered by a positional k-gram that (a) occurs in more than one
+    document and (b) sits in a non-keeper document. Output text is the
+    surviving words joined by single spaces — normalized-token
     granularity, the convention substring-dedup pipelines run the pass
     at; the keeper document keeps every occurrence, so no shared passage
     is ever lost from the corpus.
 
     Shuffle shape (no suffix array — it does not distribute): positional
-    k-grams map-only; ONE gram-keyed aggregation carrying (count,
-    min-doc) — d rows per gram, never d²; a gram-keyed join back; the
-    k-x coverage explode touches REMOVABLE positions only (zero on a
-    clean corpus); one doc-keyed anti-join + one doc-keyed reassembly
-    aggregation, both bounded by doc length. Reassembly is
-    agg-not-window: array_sort(collect_list(struct(pos, word))) per doc,
-    not a global order. Gram identity travels as the repo-standard
+    k-grams map-only; ONE gram-keyed aggregation carrying (min-doc,
+    max-doc) — algebraic, so it partial-combines map-side and a gram held
+    by every document ships one row per map partition; a gram-keyed join
+    back keeps the removable grams; their start positions gather per
+    affected document (one doc-keyed aggregation, one int per removable
+    gram, zero rows on a clean corpus) and join back onto the documents
+    by id. Each document's kept words are then one array expression
+    over its own word array: the positions
+    ``array_except(sequence(0, n - 1), covered)`` (hash-based, so a full
+    clone stays linear in its length) mapped back to words; a document
+    with no covered position keeps its array as it is. No word is ever
+    exploded or regrouped. Gram identity travels as the repo-standard
     md5-derived int64 (functions.hashing.md5_hash64), not the raw
     k-word string: the gram agg and join shuffle 8 bytes per position
     instead of ~an 8-word string — measured 3.7x less gram-stage
@@ -1957,100 +1951,53 @@ def remove_repeated_spans(
     specific decision vanishingly lower).
 
     Emits one row per input doc: (id, n_words, removed_words, text).
-    Docs shorter than ``ngram_k`` words pass through untouched.
+    Docs shorter than ``ngram_k`` words pass through untouched; a null
+    text gives text ``""``.
     """
     from starlight_for_kafka_spark.plans.spread import spread_if_narrow
 
-    # every consumer of ``base`` (word posexplode, the zip-chain + md5
-    # positional grams, the final n_words projection) re-derives from the
-    # scan; on a 1-2-split corpus each of those passes serializes onto
-    # 1-2 slots. Spread once below the scan (see plans/spread.py).
+    # the positional-gram pass and the final per-doc projection both read
+    # ``base``; on a 1-2-split corpus each would serialize onto 1-2 slots.
+    # Spread once below the scan (see plans/spread.py).
     df = spread_if_narrow(df, id_col)
-    norm = F.regexp_replace(F.lower(F.col(text_col)), r"\s+", " ")
-    words = F.split(F.trim(norm), " ")
-    base = df.select(F.col(id_col), words.alias("__ws"))
-    wp = base.select(id_col, F.posexplode("__ws").alias("wpos", "word"))
-    # gram hashes from the SAME word array (round-10, guide §1.2/#1):
-    # the previous shape ran word_shingles(text) — regex-normalize +
-    # split + zip-chain — as a SECOND and THIRD full tokenize pass
-    # (positional grams and doc-distinct grams each re-derived from raw
-    # text). Building the zip-chain over the already-split ``__ws``
-    # attribute tokenizes once; identical shingle strings by
-    # construction (same normalize/trim/split as word_shingles).
-    n_sh = F.size(F.col("__ws")) - F.lit(ngram_k - 1)
-    acc = F.slice(F.col("__ws"), 1, n_sh)
-    for i in range(1, ngram_k):
-        acc = F.zip_with(
-            acc,
-            F.slice(F.col("__ws"), i + 1, n_sh),
-            lambda a, b: F.concat(a, F.lit(" "), b),
-        )
-    grams = F.when(n_sh >= 1, acc).otherwise(F.array().cast("array<string>"))
+    base = df.select(F.col(id_col), words(F.col(text_col)).alias("__ws"))
     pos_grams = base.select(
         F.col(id_col),
-        F.posexplode(F.transform(grams, md5_hash64)).alias("pos", "g"),
+        F.posexplode(
+            F.transform(word_shingles(F.col("__ws"), ngram_k), md5_hash64)
+        ).alias("pos", "g"),
     )
-    # shared-gram stats per gram straight off the positional rows. The
-    # dedicated doc-distinct explode pass is gone (round 10), and the
-    # round-10 count_distinct is gone too (round 11, guide §2.3/§2.5):
-    # "gram occurs in >1 doc" is exactly min(doc) != max(doc), and
-    # min/max are ALGEBRAIC — the aggregation partial-combines map-side,
-    # so a stop-word gram held by every doc contributes ONE row per map
-    # partition to the exchange instead of a distinct (g, doc) pair per
-    # holder, and the planner's two-pass distinct expansion (extra
-    # Aggregate layer keyed (g, doc)) disappears. Hot-gram skew in this
-    # pass is thereby bounded by the map partition count, not by
-    # gram popularity — the cap/salt the capped-minhash family needs for
-    # its pair EMISSION is unnecessary here because nothing downstream
-    # ever receives more than one row per gram.
+    # "gram occurs in >1 doc" is exactly min(doc) != max(doc)
     freq = pos_grams.groupBy("g").agg(
         F.min(id_col).alias("keeper"),
         F.max(id_col).alias("__maxdoc"),
     )
-    removable = (
+    covered = (
         pos_grams.join(
             freq.filter(F.col("keeper") != F.col("__maxdoc")).select("g", "keeper"),
             "g",
         )
         .filter(F.col(id_col) != F.col("keeper"))
-        .select(id_col, "pos")
-    )
-    # .distinct() looks redundant before an anti-join (existence test),
-    # but it is load-bearing for shuffle BYTES: overlapping removable
-    # grams cover each position up to k times, the distinct's partial
-    # aggregation collapses those k-fold rows MAP-SIDE before the
-    # exchange, and the anti-join then reuses the distinct's (id, wpos)
-    # partitioning — so dropping it would shuffle k x the rows through
-    # the same exchange (measured +4 MB at sf0.1 on the clone-heavy
-    # fixture when removed)
-    covered = removable.select(
-        id_col,
-        F.explode(
-            F.sequence(F.col("pos"), F.col("pos") + F.lit(ngram_k - 1))
-        ).alias("wpos"),
-    ).distinct()
-    kept = wp.join(covered, [id_col, "wpos"], "left_anti")
-    rebuilt = kept.groupBy(id_col).agg(
-        F.count("*").alias("__kept"),
-        F.concat_ws(
-            " ",
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("wpos", "word"))),
-                lambda s: s.getField("word"),
-            ),
-        ).alias("__text"),
-    )
-    return (
-        base.select(id_col, F.size("__ws").alias("n_words"))
-        .join(rebuilt, id_col, "left")
-        .select(
-            id_col,
-            "n_words",
-            (F.col("n_words") - F.coalesce("__kept", F.lit(0))).alias(
-                "removed_words"
-            ),
-            F.coalesce("__text", F.lit("")).alias(text_col),
+        .groupBy(id_col)
+        .agg(
+            F.flatten(
+                F.transform(
+                    F.collect_list("pos"),
+                    lambda p: F.sequence(p, p + F.lit(ngram_k - 1)),
+                )
+            ).alias("__cov")
         )
+    )
+    ws, cov, n = F.col("__ws"), F.col("__cov"), F.size("__ws")
+    kept = F.when(cov.isNull(), ws).otherwise(
+        F.transform(F.array_except(F.sequence(F.lit(0), n - 1), cov), lambda i: ws[i])
+    )
+    n_kept = F.when(ws.isNotNull(), F.size(kept))
+    return base.join(covered, id_col, "left").select(
+        id_col,
+        n.alias("n_words"),
+        (n - F.coalesce(n_kept, F.lit(0))).alias("removed_words"),
+        F.coalesce(F.array_join(kept, " "), F.lit("")).alias(text_col),
     )
 
 

@@ -409,10 +409,6 @@ def latest_schemas(registry: DataFrame) -> DataFrame:
     )
 
 
-def lookup_by_id(registry: DataFrame, schema_id: int) -> DataFrame:
-    return registry.filter(F.col("id") == schema_id)
-
-
 def delete_subject(registry: DataFrame, subject: str) -> tuple[DataFrame, DataFrame]:
     """DELETE /subjects/{s} (SchemaStorage.deleteSubject): remove every
     version of the subject, returning (new registry, deleted versions) —

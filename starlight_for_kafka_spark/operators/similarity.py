@@ -488,20 +488,6 @@ def ivf_top_k(
     return brute_force_top_k(candidates, query_vec, k, id_col, vec_col)
 
 
-def all_pairs_above(
-    embeddings: DataFrame,
-    threshold: float,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    n_planes: int = 6,
-) -> DataFrame:
-    """All pairs with cosine ≥ threshold, LSH-bucketed to avoid the O(n²)
-    cross join (see dedup.embedding_cosine_dups)."""
-    from starlight_for_kafka_spark.operators.dedup import embedding_cosine_dups
-
-    return embedding_cosine_dups(embeddings, id_col, vec_col, threshold, n_planes)
-
-
 def quantize_embeddings(
     df: DataFrame, vec_col: str = "embedding", id_col: str = "vec_id"
 ) -> DataFrame:

@@ -89,18 +89,6 @@ def salted_count(df: DataFrame, *keys: str, n_salts: int = 32) -> DataFrame:
     )
 
 
-def salted_sum(
-    df: DataFrame, keys: list, value: Column, alias: str, n_salts: int = 32
-) -> DataFrame:
-    return salted_aggregate(
-        df,
-        keys,
-        [F.sum(value).alias("__partial_sum")],
-        [F.sum("__partial_sum").alias(alias)],
-        n_salts,
-    )
-
-
 def salted_join(
     skewed: DataFrame,
     small: DataFrame,

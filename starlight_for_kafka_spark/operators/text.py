@@ -19,7 +19,13 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from starlight_for_kafka_spark.functions.hashing import md5_hash64, word_shingles
+from starlight_for_kafka_spark.functions.hashing import (
+    md5_hash64,
+    normalize,
+    word_shingles,
+    words,
+)
+from starlight_for_kafka_spark.operators.dedup import content_digest
 from starlight_for_kafka_spark.plans.kernels import kernel
 from starlight_for_kafka_spark.plans.local import local_frame
 
@@ -152,8 +158,7 @@ def corpus_card(
     partial sums per (slice, digest)-ish key — never documents.
     """
     scored = quality_score(token_count(df, text_col), text_col)
-    norm = F.regexp_replace(F.lower(F.col(text_col)), r"\s+", " ")
-    digest = F.md5(norm.cast("binary"))
+    digest = content_digest(text_col)
     n_chars = F.length(text_col)
     out = (
         scored.withColumn("__digest", digest)
@@ -185,8 +190,8 @@ def fingerprint(df: DataFrame, text_col: str = "text") -> DataFrame:
     """Document fingerprint: md5 of the normalized text (whole-doc), plus a
     rolling winnowed prefix fingerprint (first 64 normalized chars) that is
     stable under suffix edits — the cheap analog of winnowing."""
-    norm = F.regexp_replace(F.lower(F.col(text_col)), r"\s+", " ")
-    return df.withColumn("fp_full", F.md5(norm.cast("binary"))).withColumn(
+    norm = normalize(F.col(text_col))
+    return df.withColumn("fp_full", content_digest(text_col)).withColumn(
         "fp_prefix64", F.md5(F.substring(norm, 1, 64).cast("binary"))
     )
 
@@ -214,14 +219,13 @@ def repetition_score(
     per bigram occurrence and partitions by doc_id with no skew (every doc
     contributes ~n_words rows).
     """
-    norm = F.regexp_replace(F.lower(F.col(text_col)), r"\s+", " ")
-    words = F.split(F.trim(norm), " ")
-    n_words = F.size(words)
+    ws = words(F.col(text_col))
+    n_words = F.size(ws)
     base = df.withColumn("n_words", n_words).withColumn(
-        "ttr", F.size(F.array_distinct(words)) / n_words
+        "ttr", F.size(F.array_distinct(ws)) / n_words
     )
     bigrams = base.select(
-        id_col, F.explode(word_shingles(F.col(text_col), 2)).alias("bigram")
+        id_col, F.explode(word_shingles(ws, 2)).alias("bigram")
     )
     per_bigram = bigrams.groupBy(id_col, "bigram").agg(F.count("*").alias("c"))
     top = per_bigram.groupBy(id_col).agg(F.max("c").alias("top_bigram_cnt"))
@@ -330,9 +334,8 @@ def tfidf_top_terms(
     fits, shuffle-join when 100 TB vocabulary doesn't). The final per-doc
     top-k window repartitions by doc_id, no skew.
     """
-    norm = F.regexp_replace(F.lower(F.col(text_col)), r"\s+", " ")
     terms = df.select(
-        id_col, F.explode(F.split(F.trim(norm), " ")).alias("term")
+        id_col, F.explode(words(F.col(text_col))).alias("term")
     )
     tf = terms.groupBy(id_col, "term").agg(F.count("*").alias("tf"))
     dfreq = tf.groupBy("term").agg(F.count("*").alias("df_docs"))
@@ -385,9 +388,8 @@ def bm25_scores(
     """
     qt = sorted({t.lower() for t in query_terms})
     k1p1 = k1 + 1.0
-    norm = F.regexp_replace(F.lower(F.col(text_col)), r"\s+", " ")
-    words = F.split(F.trim(norm), " ")
-    base = df.select(F.col(id_col).alias("__id"), words.alias("__w"))
+    ws = words(F.col(text_col))
+    base = df.select(F.col(id_col).alias("__id"), ws.alias("__w"))
     lens = base.select("__id", F.size("__w").cast("long").alias("dl"))
     stats = lens.agg(
         F.count("*").alias("n_docs"), F.avg("dl").alias("avgdl")
@@ -452,8 +454,7 @@ def unigram_logprob(
     Zipf-small, broadcast it when it fits. The totals row is a broadcast
     scalar. No pass ever shuffles raw text.
     """
-    norm = F.regexp_replace(F.lower(F.col(text_col)), r"\s+", " ")
-    terms = df.select(id_col, F.explode(F.split(F.trim(norm), " ")).alias("term"))
+    terms = df.select(id_col, F.explode(words(F.col(text_col))).alias("term"))
     tf = terms.groupBy(id_col, "term").agg(F.count("*").alias("tf"))
     model = tf.groupBy("term").agg(F.sum("tf").alias("cnt"))
     totals = model.agg(
@@ -505,10 +506,9 @@ def line_dedup(
     """
     from starlight_for_kafka_spark.plans.spread import spread_if_narrow
 
-    norm = F.regexp_replace(F.lower(F.col(text_col)), r"\s+", " ")
-    words = F.split(F.trim(norm), " ")
+    ws = words(F.col(text_col))
     n_lines = F.greatest(
-        F.lit(1), F.ceil(F.size(words) / F.lit(line_words)).cast("int")
+        F.lit(1), F.ceil(F.size(ws) / F.lit(line_words)).cast("int")
     )
     # the tile explode + per-tile md5 is the heavy pass; spread it across
     # cores when the corpus arrives as 1-2 input splits (single-row-group
@@ -520,7 +520,7 @@ def line_dedup(
     )
     tiles = df.select(
         F.col(id_col).alias("__id"),
-        words.alias("__w"),
+        ws.alias("__w"),
         F.explode(F.sequence(F.lit(0), n_lines - 1)).alias("line_no"),
     ).select(
         "__id",
@@ -588,15 +588,14 @@ def dedup_lines_in_doc(
     Emits per doc: n_lines, n_kept, cleaned_text + md5 of it (the same
     shape as :func:`line_dedup`).
     """
-    norm = F.regexp_replace(F.lower(F.col(text_col)), r"\s+", " ")
-    words = F.split(F.trim(norm), " ")
+    ws = words(F.col(text_col))
     n_lines = F.greatest(
-        F.lit(1), F.ceil(F.size(words) / F.lit(line_words)).cast("long")
+        F.lit(1), F.ceil(F.size(ws) / F.lit(line_words)).cast("long")
     )
     tiles = F.transform(
         F.sequence(F.lit(0), (n_lines - 1).cast("int")),
         lambda i: F.concat_ws(
-            " ", F.slice(words, i * line_words + 1, line_words)
+            " ", F.slice(ws, i * line_words + 1, line_words)
         ),
     )
     kept = F.array_distinct(tiles)
@@ -698,7 +697,7 @@ def dsir_weights(
     grams = spread_if_narrow(df, id_col).select(
         F.col(id_col).alias("__id"),
         target_pred.alias("__is_target"),
-        F.explode(word_shingles(F.col(text_col), 2)).alias("gram"),
+        F.explode(word_shingles(words(F.col(text_col)), 2)).alias("gram"),
     ).withColumn("b", md5_hash64(F.col("gram")) % n_buckets)
     per_doc_bucket = grams.groupBy("__id", "__is_target", "b").agg(
         F.count("*").alias("tf")
@@ -837,10 +836,9 @@ def gopher_quality_flags(
     the alphabetic fraction is one array filter. Filtering 100 TB costs
     exactly one pass, fully codegen'd.
     """
-    norm = F.regexp_replace(F.lower(F.col(text_col)), r"\s+", " ")
     out = df.select(
         id_col,
-        F.trim(norm).alias("__t"),
+        F.trim(normalize(F.col(text_col))).alias("__t"),
     ).select(
         id_col,
         F.split("__t", " ").alias("__w"),
@@ -907,9 +905,8 @@ def bpe_merge_pairs(
     substr over the word column (words are short — no quadratic hazard).
     One tiny pair-keyed agg and a bounded top-k finish it.
     """
-    norm = F.regexp_replace(F.lower(F.col(text_col)), r"\s+", " ")
     word_freq = (
-        df.select(F.explode(F.split(F.trim(norm), " ")).alias("word"))
+        df.select(F.explode(words(F.col(text_col))).alias("word"))
         .groupBy("word")
         .agg(F.count("*").alias("wf"))
     )
@@ -985,8 +982,7 @@ def corpus_drift(
     scanned once each; nothing ever shuffles text.
     """
     def model(d: DataFrame, side: str) -> DataFrame:
-        norm = F.regexp_replace(F.lower(F.col(text_col)), r"\s+", " ")
-        terms = d.select(F.explode(F.split(F.trim(norm), " ")).alias("term"))
+        terms = d.select(F.explode(words(F.col(text_col))).alias("term"))
         return terms.groupBy("term").agg(F.count("*").alias(f"cnt_{side}"))
 
     a, b = model(df_a, "a"), model(df_b, "b")
@@ -1059,8 +1055,7 @@ def bigram_logprob(
     average folds in sorted order (deterministic doubles), emitted at
     6 dp.
     """
-    norm = F.regexp_replace(F.lower(F.col(text_col)), r"\s+", " ")
-    words = F.split(F.trim(norm), " ")
+    ws = words(F.col(text_col))
     # (w, prev) pairs formed INSIDE the row's own word array (w[i-1] —
     # the same trick the oracle uses): map-only, no self-join of the
     # exploded token table, which would shuffle every token twice before
@@ -1070,11 +1065,11 @@ def bigram_logprob(
     # body (see functions/hashing.py word_shingles), making tokenization
     # quadratic; the zip evaluates it a constant number of times per row.
     pairs = F.arrays_zip(
-        F.sequence(F.lit(0), F.size(words) - 1).alias("pos"),
-        words.alias("w"),
+        F.sequence(F.lit(0), F.size(ws) - 1).alias("pos"),
+        ws.alias("w"),
         F.concat(
             F.array(F.lit(None).cast("string")),
-            F.slice(words, 1, F.size(words) - 1),
+            F.slice(ws, 1, F.size(ws) - 1),
         ).alias("prev"),
     )
     seq = df.select(
@@ -1277,13 +1272,12 @@ def bpe_train(
     (like the PageRank idiom) and without a barrier round N's plan
     would re-run all earlier folds once per consumer.
     """
-    norm = F.regexp_replace(F.lower(F.col(text_col)), r"\s+", " ")
     chars = F.transform(
         F.sequence(F.lit(1), F.length("word")),
         lambda i: F.col("word").substr(i, F.lit(1)),
     )
     vocab = (
-        df.select(F.explode(F.split(F.trim(norm), " ")).alias("word"))
+        df.select(F.explode(words(F.col(text_col))).alias("word"))
         .filter(F.length("word") > 0)
         .groupBy("word")
         .agg(F.count("*").alias("wf"))
@@ -1382,9 +1376,8 @@ def bpe_train_local(
     import heapq
     from collections import Counter
 
-    norm = F.regexp_replace(F.lower(F.col(text_col)), r"\s+", " ")
     wordfreq = (
-        df.select(F.explode(F.split(F.trim(norm), " ")).alias("word"))
+        df.select(F.explode(words(F.col(text_col))).alias("word"))
         .filter(F.length("word") > 0)
         .groupBy("word")
         .agg(F.count("*").alias("wf"))
@@ -1401,11 +1394,11 @@ def bpe_train_local(
     rows = wordfreq.collect()
     spark = df.sparkSession
 
-    words: list[list[str]] = [list(r["word"]) for r in rows]
+    spellings: list[list[str]] = [list(r["word"]) for r in rows]
     wfs: list[int] = [int(r["wf"]) for r in rows]
     pair_counts: Counter = Counter()
     pair_words: dict[tuple[str, str], set[int]] = {}
-    for i, (syms, wf) in enumerate(zip(words, wfs)):
+    for i, (syms, wf) in enumerate(zip(spellings, wfs)):
         for p in zip(syms, syms[1:]):
             pair_counts[p] += wf
             pair_words.setdefault(p, set()).add(i)
@@ -1430,7 +1423,7 @@ def bpe_train_local(
         merged = left + right
         merges.append((rank, left, right, merged, count))
         for i in list(pair_words.get((left, right), ())):
-            old, wf = words[i], wfs[i]
+            old, wf = spellings[i], wfs[i]
             new = _bpe_greedy_fold(old, left, right, merged)
             oldp = Counter(zip(old, old[1:]))
             newp = Counter(zip(new, new[1:]))
@@ -1451,7 +1444,7 @@ def bpe_train_local(
                             pair_words.pop(p, None)
                 elif p in newp and p not in oldp:
                     pair_words.setdefault(p, set()).add(i)
-            words[i] = new
+            spellings[i] = new
         # greedy fold leaves no adjacent (left, right) anywhere
         pair_counts.pop((left, right), None)
         pair_words.pop((left, right), None)
@@ -1548,10 +1541,9 @@ def bpe_apply(
     tokenizer as noted in :func:`token_count`). Emits
     (id, n_words, n_tokens).
     """
-    norm = F.regexp_replace(F.lower(F.col(text_col)), r"\s+", " ")
     occurrences = (
         df.select(
-            F.col(id_col), F.explode(F.split(F.trim(norm), " ")).alias("word")
+            F.col(id_col), F.explode(words(F.col(text_col))).alias("word")
         )
         .filter(F.length("word") > 0)
     )

@@ -231,11 +231,6 @@ def txn_markers(txn_log: DataFrame) -> DataFrame:
     )
 
 
-def read_uncommitted(txn_log: DataFrame) -> DataFrame:
-    """READ_UNCOMMITTED: everything, open txns included (the plain fetch)."""
-    return txn_log
-
-
 def idempotent_dedupe(records: DataFrame) -> DataFrame:
     """Producer idempotence: drop duplicate (pid, epoch, seq) retries,
     keeping the first appended copy (reference ProducerStateManager

@@ -29,32 +29,6 @@ def keyed_reduce(df: DataFrame, keys: list, reduce_exprs: list[Column]) -> DataF
     return df.groupBy(*keys).agg(*reduce_exprs)
 
 
-def keyed_aggregate(
-    df: DataFrame, keys: list, initializer_and_adder_exprs: list[Column]
-) -> DataFrame:
-    """KGroupedStream.aggregate with custom init+adder
-    (KStreamAggregationTest.java:242-287): expressible as agg expressions
-    whenever the adder is associative; arbitrary adders go through
-    applyInPandas (slow path, kept off the hot path by design)."""
-    return df.groupBy(*keys).agg(*initializer_and_adder_exprs)
-
-
-def tumbling_window(
-    df: DataFrame, ts_col: str, duration: str, keys: list | None = None
-) -> DataFrame:
-    """Epoch-aligned tumbling-window ANNOTATION (TimeWindows.of, reference
-    test :178): each row gains explicit ``window_start``/``window_end``
-    bound columns — the pre-aggregation form for callers that window-tag
-    rows and aggregate themselves (use :func:`tumbling_window_agg` for the
-    grouped aggregate; an earlier version returned a bare GroupedData,
-    which supports none of the DataFrame API its docstring implied)."""
-    keys = keys or []  # kept for signature compatibility; tagging is per-row
-    win = F.window(F.col(ts_col), duration)
-    return df.withColumn("window_start", win["start"]).withColumn(
-        "window_end", win["end"]
-    )
-
-
 def tumbling_window_agg(
     df: DataFrame,
     ts_col: str,

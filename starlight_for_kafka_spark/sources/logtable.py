@@ -131,9 +131,8 @@ class LogTable:
 
     Wraps a DataFrame with KAFKA_RECORD_SCHEMA columns. All operations are
     lazy DataFrame transforms (``append`` broadcasts the watermark frame,
-    it collects nothing); only ``compact_segments`` (its segment plan) and
-    ``fetch_multi`` given a DataFrame request (its duplicate-partition
-    check) run a Spark job when called.
+    it collects nothing); only ``compact_segments`` (its segment plan) runs
+    a Spark job when called.
     """
 
     def __init__(self, df: DataFrame):
@@ -313,7 +312,7 @@ class LogTable:
 
     def fetch_multi(
         self,
-        requests: "list[tuple[int, int]] | DataFrame",
+        requests: list[tuple[int, int]],
         response_max_bytes: int,
     ) -> DataFrame:
         """Multi-partition FETCH with ONE response-level byte budget — a
@@ -327,8 +326,8 @@ class LogTable:
         Per-partition bounds compose via ``fetch``'s own max_bytes.
 
         ``requests``: ordered [(partition, start_offset), ...] (one entry
-        per partition, as in a Kafka fetch request), or an equivalent
-        DataFrame with (ridx, partition, start_offset).
+        per partition, as in a Kafka fetch request; a partition listed
+        twice is rejected, as Kafka answers INVALID_REQUEST).
 
         Scale: the global greedy fill DECOMPOSES — a row's response-order
         cumulative equals (sum of ALL earlier-requested partitions'
@@ -347,7 +346,7 @@ class LogTable:
         each reads only the requested offset ranges, never the log. Rows
         keep ``ridx`` so callers can regroup per-partition responses.
 
-        A Python request list becomes an Arrow ``LocalRelation``
+        The request list becomes an Arrow ``LocalRelation``
         (``plans.local_frame``): its broadcast is a JVM-only scan, so
         none of the request's Spark jobs (6 for a small fetch) starts a
         Python worker task. Its partitions and smallest start offset are
@@ -356,40 +355,22 @@ class LogTable:
         """
         spark = self.df.sparkSession
         log = self.df
-        if isinstance(requests, DataFrame):
-            req = requests.select(
-                F.col("ridx").cast("int"),
-                F.col("partition").cast("int"),
-                F.col("start_offset").cast("long"),
+        parts = [int(p) for p, _ in requests]
+        # a partition listed twice would double its rows through the
+        # broadcast join and interleave __pcum/__prn across the two ridx
+        # values, silently corrupting the byte budget
+        if len(parts) != len(set(parts)):
+            raise ValueError("fetch_multi: duplicate partition(s) in request")
+        req = local_frame(
+            spark,
+            [(i, int(p), int(o)) for i, (p, o) in enumerate(requests)],
+            "ridx int, partition int, start_offset long",
+        )
+        if parts:
+            log = log.filter(
+                F.col("partition").isin(parts)
+                & (F.col("offset") >= min(int(o) for _, o in requests))
             )
-            # a partition listed twice would double its rows through the
-            # broadcast join and interleave __pcum/__prn across the two
-            # ridx values, silently corrupting the byte budget — reject,
-            # as Kafka does (INVALID_REQUEST on duplicate partitions).
-            # Control-plane check: req is the request list, tiny.
-            dup = (
-                req.groupBy("partition").count().filter(F.col("count") > 1)
-            )
-            if dup.limit(1).count() > 0:
-                raise ValueError(
-                    "fetch_multi: duplicate partition(s) in request"
-                )
-        else:
-            parts = [int(p) for p, _ in requests]
-            if len(parts) != len(set(parts)):
-                raise ValueError(
-                    "fetch_multi: duplicate partition(s) in request"
-                )
-            req = local_frame(
-                spark,
-                [(i, int(p), int(o)) for i, (p, o) in enumerate(requests)],
-                "ridx int, partition int, start_offset long",
-            )
-            if parts:
-                log = log.filter(
-                    F.col("partition").isin(parts)
-                    & (F.col("offset") >= min(int(o) for _, o in requests))
-                )
         size = record_size()
         wp = Window.partitionBy("partition").orderBy("offset")
         run = wp.rowsBetween(Window.unboundedPreceding, Window.currentRow)

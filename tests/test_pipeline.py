@@ -1745,6 +1745,86 @@ def test_remove_repeated_spans_exact_clone_loses_whole_body(spark):
     assert out[20].text == "" and out[20].removed_words == 10
 
 
+def _span_reference(rows, k):
+    """Pure-Python replay of the substring-dedup span policy: tokenize
+    like functions.hashing.words, k-grams by position, a gram is shared
+    when more than one document holds it, and its keeper is the lowest id
+    holding it. Returns {id: (n_words, removed_words, text, n_grams,
+    longest_dup_run, longest_dup_span_words)}."""
+    import re
+    from collections import defaultdict
+
+    toks = {
+        i: None if t is None else re.sub(r"[ \t\n\x0b\f\r]+", " ", t.lower()).strip(" ").split(" ")
+        for i, t in rows
+    }
+    holders = defaultdict(set)
+    for i, ws in toks.items():
+        for p in range(len(ws or []) - k + 1):
+            holders[" ".join(ws[p : p + k])].add(i)
+    out = {}
+    for i, ws in toks.items():
+        covered, dup = set(), []
+        for p in range(len(ws or []) - k + 1):
+            h = holders[" ".join(ws[p : p + k])]
+            dup.append(len(h) > 1)
+            if len(h) > 1 and i != min(h):
+                covered.update(range(p, p + k))
+        run = best = 0
+        for d in dup:
+            run = run + 1 if d else 0
+            best = max(best, run)
+        if ws is None:
+            n_words = removed = None
+            text_out = ""
+        else:
+            kept = [w for j, w in enumerate(ws) if j not in covered]
+            n_words, removed, text_out = len(ws), len(ws) - len(kept), " ".join(kept)
+        out[i] = (n_words, removed, text_out, len(dup), best, best + k - 1 if best else 0)
+    return out
+
+
+def test_repeated_spans_operators_match_a_python_reference(spark):
+    """remove_repeated_spans and repeated_spans against a pure-Python
+    replay: null, empty and whitespace-only text, fewer than k words,
+    overlapping removable grams, a document that keeps one shared passage
+    (it is that passage's keeper) and loses another, a gram repeated
+    inside one document only (not shared), and an exact clone."""
+    k = 4
+    p1 = "Alpha beta\tgamma delta epsilon"
+    p2 = "one two three four five six"
+    rows = [
+        (1, None),
+        (2, ""),
+        (3, "  \t \n "),
+        (4, "a b c"),
+        (5, f"{p1} zeta ETA theta"),
+        (6, f"x {p1.lower()} y"),
+        (7, f"start {p1} mid {p2} end"),
+        (8, f"  {p1} zeta ETA theta "),
+        (9, f"{p2} only here"),
+        (10, "x y z w x y z w"),
+        (11, f"tail alpha beta gamma delta and {p2}"),
+    ]
+    want = _span_reference(rows, k)
+    df = spark.createDataFrame(rows, "doc_id long, text string")
+    got = {
+        r.doc_id: (r.n_words, r.removed_words, r.text)
+        for r in dedup.remove_repeated_spans(df, ngram_k=k).collect()
+    }
+    assert got == {i: w[:3] for i, w in want.items()}
+    got = {
+        r.doc_id: (r.n_grams, r.longest_dup_run, r.longest_dup_span_words)
+        for r in dedup.repeated_spans(df, ngram_k=k).collect()
+    }
+    assert got == {i: w[3:] for i, w in want.items()}
+    # the cases the reference is meant to cover do occur
+    assert want[8][1] == want[8][0] and want[8][2] == ""  # exact clone
+    assert want[7][1] == 5 and p2 in want[7][2]  # loses p1, keeps p2
+    assert want[6][1] == 5  # overlapping grams cover p1 once
+    assert want[10][1] == 0 and want[10][4] == 0
+
+
 def test_soft_dedup_weights_mass_per_cluster_is_one(spark, documents):
     """alpha=1: each near-dup cluster's total weight is exactly 1, no row
     is ever dropped, singletons weigh 1."""

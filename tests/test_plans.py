@@ -488,6 +488,20 @@ def test_hybrid_search_shortlists_are_takeordered(spark):
     assert plan.count("TakeOrderedAndProject") >= 2, plan
 
 
+def test_remove_repeated_spans_filters_word_arrays_in_place(spark):
+    """Span removal keeps each document's words with one array expression
+    over its own word array: no word of any document is exploded
+    (Generate over ``__ws``), no (wpos, word) struct is regrouped, and the
+    plan stays within 6 exchanges."""
+    import re
+
+    df = QUERIES["remove_repeated_spans"](spark, SF_DIR)
+    plan = plan_string(df)
+    assert not re.search(r"explode\(__ws#\d+\)", plan), plan
+    assert "wpos" not in plan, plan
+    assert exchange_count(df) <= 6, plan
+
+
 def test_ngram_jaccard_no_cartesian_and_bounded_exchanges(spark):
     """The prefix-filtered set-similarity join must stay a keyed-join plan:
     no cartesian/nested-loop product anywhere, and the verify side uses

@@ -16,6 +16,34 @@ def test_crc32c_check_value():
     assert kr.crc32c(b"123456789") == 0xE3069283
 
 
+def test_crc32c_many_matches_the_bytewise_recurrence():
+    """crc32c_many runs 512-byte numpy lanes once its blobs total 16 KiB
+    and a plain per-byte loop below that; both must equal the CRC32C bit
+    recurrence for ragged lengths around the lane size, on either side of
+    the 16 KiB switch, and for a payload that spans many lanes."""
+    import random
+
+    def reference(data: bytes) -> int:
+        crc = 0xFFFFFFFF
+        for b in data:
+            crc ^= b
+            for _ in range(8):
+                crc = (crc >> 1) ^ (0x82F63B78 if crc & 1 else 0)
+        return crc ^ 0xFFFFFFFF
+
+    rng = random.Random(7)
+    ragged = [rng.randbytes(n) for n in (0, 1, 511, 512, 513, 1000, 4096)]
+    under = ragged + [rng.randbytes((1 << 14) - 1 - sum(map(len, ragged)))]
+    over = under + [rng.randbytes(1)]
+    big = [rng.randbytes(70 * 1024 + 3)]
+    assert sum(map(len, under)) == (1 << 14) - 1
+    want = {b: reference(b) for b in over + big}
+    for blobs in (ragged, under, over, big, ragged + big):
+        assert kr.crc32c_many(blobs) == [want[b] for b in blobs]
+    for b in over + big:
+        assert kr.crc32c(b) == want[b]
+
+
 def test_batch_v2_layout_fields():
     b = kr.encode_batch_v2(
         5, [{"offset": 5, "timestamp_ms": 1000, "key": b"k", "value": b"v", "headers": []}],

@@ -99,7 +99,8 @@ def main() -> None:
         }
         print(
             f"  {name}: {wall}s, stages={d['n_stages']}, "
-            f"shuffle={d['shuffle_write_bytes']/1e6:.1f}MB, "
+            f"shuffle={d['shuffle_write_bytes']/1e6:.1f}MB, gc={d['gc_s']}s, "
+            f"spill={d['spill_bytes']/1e6:.1f}MB, "
             f"exch={out[name]['plan']['exchanges']}",
             file=sys.stderr,
         )
