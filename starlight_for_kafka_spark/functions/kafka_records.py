@@ -296,6 +296,9 @@ def _read_varint(buf: bytes, pos: int) -> tuple[int, int]:
         if not byte & 0x80:
             break
         shift += 7
+        if shift > 63:
+            raise ValueError("varint longer than 10 bytes")
+    accum &= 0xFFFFFFFFFFFFFFFF  # 64 bits, as the columnar decode reads it
     return (accum >> 1) ^ -(accum & 1), pos
 
 
@@ -369,8 +372,13 @@ def _snappy_raw_size(block: bytes) -> int:
         pos += 1
         size |= (b & 0x7F) << shift
         if not b & 0x80:
-            return size
+            break
         shift += 7
+    # a snappy element of n bytes emits at most 64 / 3 bytes per byte, so
+    # a larger claim is a corrupt header, not a buffer to allocate
+    if size > 22 * len(block):
+        raise ValueError("corrupt snappy block: uncompressed length")
+    return size
 
 
 def _compress(codec: str, data: bytes) -> bytes:
@@ -397,6 +405,16 @@ def _compress(codec: str, data: bytes) -> bytes:
 
 
 def _decompress(codec_id: int, data: bytes) -> bytes:
+    """``data`` decompressed with Kafka codec ``codec_id``; a payload
+    the codec rejects raises ``ValueError``."""
+    try:
+        return _decompress_payload(codec_id, data)
+    except (zlib.error, OSError, IndexError, struct.error) as e:
+        name = _CODEC_NAMES[codec_id]
+        raise ValueError(f"corrupt {name} payload: {e}") from None
+
+
+def _decompress_payload(codec_id: int, data: bytes) -> bytes:
     if codec_id == COMPRESSION_GZIP:
         return zlib.decompress(bytes(data), wbits=31)
     name = _CODEC_NAMES.get(codec_id)
@@ -524,9 +542,11 @@ def _assemble_v2(
 # scatter per varint column and lets Arrow's element-wise binary join
 # interleave them with the key, value and header buffers (no per-record
 # Python); decode walks only the record-length prefixes sequentially
-# (~4 Python ops per record) and decodes every interior field of all
-# records in one masked gather per field. Outputs are byte-identical to
-# encode_batch_v2 / value-identical to decode_batch_v2 (pinned by tests).
+# (~4 Python ops per record), decodes every interior field of all
+# records in one vectorized pass per field (headers: one pass per header
+# index) and gathers keys, values and headers into Arrow arrays straight
+# from the records buffer. Outputs are byte-identical to encode_batch_v2
+# / value-identical to decode_batch_v2 (pinned by tests).
 # ---------------------------------------------------------------------- #
 
 
@@ -563,23 +583,6 @@ def _vec_varint_scatter(out, starts, z, nb):
     mask = np.arange(width)[None, :] < nb[:, None]
     pos = starts[:, None] + np.arange(width)[None, :]
     out[pos[mask]] = w[mask]
-
-
-def _vec_ragged_scatter(out, dest_starts, lens, src_cat):
-    """Copy concatenated variable-length blobs to scattered destinations:
-    src_cat holds the blobs back-to-back; blob i (length lens[i]) lands at
-    dest_starts[i]. Per-blob memoryview slice assignment (a C memcpy
-    each), NOT a repeat+arange index scatter: the index build costs 8
-    bytes of freshly-faulted int64 per byte copied, and first-touch page
-    throughput on this host is the bottleneck (measured: the index form
-    spent seconds in arange/repeat for a ~20 MB payload)."""
-    mv = out.data
-    src = memoryview(src_cat)
-    s = 0
-    for d, ln in zip(dest_starts.tolist(), lens.tolist()):
-        e = s + ln
-        mv[d : d + ln] = src[s:e]
-        s = e
 
 
 def _varint_array(*fields):
@@ -746,159 +749,293 @@ def _vec_varint_decode_w(arr, starts, width):
 
 def _vec_varint_decode(arr, starts):
     """Decode zigzag varints at N start positions of a padded uint8
-    array: returns (values int64, byte counts). Reads a 4-byte window
-    per varint (covers deltas/lengths up to 2^27, virtually every real
-    record field) and re-reads only the rare longer rows at the full 10
-    — the narrow window matters because memory traffic, not arithmetic,
-    bounds these kernels on this host."""
+    array: returns (values int64, byte counts). Reads each varint's first
+    4 bytes as one little-endian uint32 (covers deltas/lengths up to
+    2^27, virtually every real record field) and re-reads only the rare
+    longer rows at the full 10 — the narrow window matters because
+    memory traffic, not arithmetic, bounds these kernels on this host."""
     import numpy as np
 
-    n, nb, ok = _vec_varint_decode_w(arr, starts, 4)
-    if not ok.all():
-        rows = np.nonzero(~ok)[0]
-        n2, nb2, ok2 = _vec_varint_decode_w(arr, starts[rows], 10)
+    # the uint32 that starts at every byte position (an unaligned view)
+    words = np.ndarray((len(arr) - 3,), "<u4", arr, 0, (1,))
+    w = words[starts]
+    stops = ~w & np.uint32(0x80808080)  # 0x80 in each byte that ends
+    first = stops & (np.uint32(0) - stops)  # the lowest such byte
+    nb = (
+        1 + (first > 0x80).astype(np.int64) + (first > 0x8000) + (first > 0x800000)
+    )
+    u = (
+        (w & np.uint32(0x7F))
+        | ((w >> np.uint32(1)) & np.uint32(0x3F80))
+        | ((w >> np.uint32(2)) & np.uint32(0x1FC000))
+        | ((w >> np.uint32(3)) & np.uint32(0xFE00000))
+    ) & ((np.uint32(1) << (7 * nb).astype(np.uint32)) - np.uint32(1))
+    u = u.astype(np.int64)
+    n = (u >> 1) ^ -(u & 1)
+    wide = np.flatnonzero(stops == 0)
+    if len(wide):
+        n2, nb2, ok2 = _vec_varint_decode_w(arr, starts[wide], 10)
         if not ok2.all():
             raise ValueError("varint longer than 10 bytes")
-        n[rows] = n2
-        nb[rows] = nb2
+        n[wide] = n2
+        nb[wide] = nb2
     return n, nb
 
 
-def decode_batches_v2_columnar(bufs: list[bytes], verify_crc: bool = True):
-    """Columnar decode of many v2 batches: returns a dict of per-record
-    columns {offsets, ts_ms, keys, values, headers} plus per-batch
-    {record_counts, attributes, producer_ids, producer_epochs,
-    base_sequences}. Value-identical to :func:`decode_batch_v2` over the
-    same bufs (pinned by tests); CRC verification runs as one
-    lane-parallel pass."""
+def _binary_array(data, starts, lens, typ=None):
+    """Arrow array (``pa.binary()`` unless ``typ``) whose element i is
+    ``data[starts[i] : starts[i] + lens[i]]`` of the uint8 array ``data``,
+    null where ``lens[i]`` < 0: offsets from a cumsum, the bytes from one
+    numpy gather, no Python object per element."""
     import numpy as np
+    import pyarrow as pa
+
+    n = len(lens)
+    valid = lens >= 0
+    nbytes = np.where(valid, lens, 0)
+    offsets = np.zeros(n + 1, dtype=np.int64)
+    np.cumsum(nbytes, out=offsets[1:])
+    if offsets[-1] >= 1 << 31:
+        raise ValueError("binary column over 2 GiB")
+    body = data[np.repeat(starts - offsets[:-1], nbytes) + np.arange(offsets[-1])]
+    nulls = n - int(np.count_nonzero(valid))
+    bitmap = pa.py_buffer(np.packbits(valid, bitorder="little")) if nulls else None
+    return pa.Array.from_buffers(
+        typ or pa.binary(), n,
+        [bitmap, pa.py_buffer(offsets.astype(np.int32)), pa.py_buffer(body)],
+        null_count=nulls,
+    )
+
+
+def _binary_parts(col):
+    """(lengths, bytes) of a ``pa.binary()`` array: int64 numpy lengths,
+    -1 for null, and the non-null elements' bytes back to back as a
+    uint8 numpy array, read from the array's buffers."""
+    import numpy as np
+    import pyarrow.compute as pc
+
+    if col.null_count:
+        lens = pc.binary_length(col).fill_null(-1).to_numpy().astype(np.int64)
+        col = col.drop_null()
+    else:
+        lens = pc.binary_length(col).to_numpy().astype(np.int64)
+    if len(col) == 0:
+        return lens, np.zeros(0, dtype=np.uint8)
+    _, offs, data = col.buffers()
+    offs = np.frombuffer(offs, np.int32)[col.offset : col.offset + len(col) + 1]
+    if data is None:  # every element empty
+        return lens, np.zeros(0, dtype=np.uint8)
+    return lens, np.frombuffer(data, np.uint8)[offs[0] : offs[-1]]
+
+
+# base offset, batch length, leader epoch, magic, CRC, attributes, last
+# offset delta, base and max timestamp, producer id and epoch, base
+# sequence, record count (a format string: the module ships by value to
+# the Python workers, and a compiled ``struct.Struct`` does not pickle)
+_V2_HEADER = ">qiibIhiqqqhii"
+
+
+def _v2_header(buf) -> tuple:
+    """The 13 header fields of a v2 batch (``_V2_HEADER`` order), checked:
+    the blob holds the 61-byte header and the ``batchLength`` bytes, the
+    magic is 2 and the record count is not negative."""
+    if len(buf) < RECORD_BATCH_OVERHEAD:
+        raise ValueError("truncated v2 batch")
+    h = struct.unpack_from(_V2_HEADER, buf)
+    if h[3] != MAGIC_V2:
+        raise ValueError(f"not a v2 batch (magic={h[3]})")
+    if not RECORD_BATCH_OVERHEAD - 12 <= h[1] <= len(buf) - 12:
+        raise ValueError("batch length outside the blob")
+    if h[12] < 0:
+        raise ValueError("negative record count")
+    return h
+
+
+def _v2_records(buf, h: tuple) -> bytes:
+    """The records section of the v2 batch ``buf`` (header ``h``),
+    decompressed."""
+    rbuf = bytes(buf[RECORD_BATCH_OVERHEAD : 12 + h[1]])
+    codec = h[5] & 0x07
+    return rbuf if codec == COMPRESSION_NONE else _decompress(codec, rbuf)
+
+
+def decode_batches_v2_columnar(
+    bufs: list[bytes], verify_crc: bool = True, headers: bool = True
+):
+    """Columnar decode of many v2 batches. Returns a dict of per-record
+    columns: ``offsets`` and ``ts_ms`` (int64 numpy), ``keys`` and
+    ``values`` (``pa.binary()`` arrays, null where the length is
+    negative) and ``headers`` (one ``list<struct<key string, value
+    binary>>`` array, or ``None`` with ``headers=False``); plus per-batch
+    int64 numpy {record_counts, attributes, producer_ids,
+    producer_epochs, base_sequences}. Value-identical to
+    :func:`decode_batch_v2` over the same bufs (pinned by tests); CRC
+    verification runs as one lane-parallel pass.
+
+    Every Arrow column is gathered from the one decompressed records
+    buffer, so no Python object is built per record or header. Only the
+    record-length prefixes are walked in Python (each record's position
+    depends on the previous length); every field, headers included,
+    decodes in vectorized passes — one per header index j, over the
+    records with more than j headers. ``headers=False`` (the
+    down-converter: v0/v1 drop headers) still walks the header
+    positions for the length check but builds no header array and does
+    not check the keys' UTF-8.
+
+    The contract both decoders hold, each break a ``ValueError``: the
+    batch header as :func:`_v2_header` checks it; each batch's records
+    exactly fill its records section; every record length is not
+    negative and every record's fields end exactly at its declared
+    length; varints stay within their record and at 10 bytes; header
+    counts and header key lengths are not negative; header keys are
+    UTF-8."""
+    import numpy as np
+    import pyarrow as pa
 
     if verify_crc:
         verify_batches_v2_crc(bufs)
-    rbufs: list[bytes] = []
-    base_offs: list[int] = []
-    base_tss: list[int] = []
-    counts: list[int] = []
-    attrs: list[int] = []
-    pids: list[int] = []
-    pepochs: list[int] = []
-    bseqs: list[int] = []
-    for buf in bufs:
-        magic = struct.unpack_from(">b", buf, 16)[0]
-        if magic != MAGIC_V2:
-            raise ValueError(f"not a v2 batch (magic={magic})")
-        batch_length = struct.unpack_from(">i", buf, 8)[0]
-        covered = buf[21 : 12 + batch_length]
-        attributes = struct.unpack_from(">h", covered, 0)[0]
-        codec = attributes & 0x07
-        rbuf = covered[40:]
-        if codec != COMPRESSION_NONE:
-            rbuf = _decompress(codec, bytes(rbuf))
-        rbufs.append(bytes(rbuf))
-        base_offs.append(struct.unpack_from(">q", buf, 0)[0])
-        base_tss.append(struct.unpack_from(">q", covered, 6)[0])
-        counts.append(struct.unpack_from(">i", covered, 36)[0])
-        attrs.append(attributes)
-        pids.append(struct.unpack_from(">q", covered, 22)[0])
-        pepochs.append(struct.unpack_from(">h", covered, 30)[0])
-        bseqs.append(struct.unpack_from(">i", covered, 32)[0])
-
+    hdrs = [_v2_header(b) for b in bufs]
+    rbufs = [_v2_records(b, h) for b, h in zip(bufs, hdrs)]
+    # base offset, attributes, base ts, producer id, epoch, base sequence,
+    # record count per batch
+    batch = np.array(
+        [(h[0], h[5], h[7], h[9], h[10], h[11], h[12]) for h in hdrs], np.int64
+    ).reshape(-1, 7)
+    counts = batch[:, 6]
+    n_rec = int(counts.sum())
     big = b"".join(rbufs)
-    n_rec = sum(counts)
+    # a record takes at least 7 bytes (its length, attributes and five
+    # varints), which also bounds the walk below on a corrupt count
+    if 7 * n_rec > len(big):
+        raise ValueError("record count exceeds the records section")
+
     # sequential walk over record-length prefixes only (the one truly
     # chained read — payload bytes make record boundaries undiscoverable
-    # without it); every interior field decodes vectorized below. The
-    # 1- and 2-byte fast paths cover real record lengths up to 8 KiB.
-    starts_list: list[int] = []
-    append = starts_list.append
+    # without it); every field decodes vectorized below. The 1- and
+    # 2-byte fast paths cover real record lengths up to 8 KiB.
+    prefix_list: list[int] = []
+    append = prefix_list.append
     pos = 0
-    total = n_rec
-    while total > 0:
-        total -= 1
-        b0 = big[pos]
-        if b0 < 0x80:
-            pos += 1
-            z = b0
-        else:
-            b1 = big[pos + 1]
-            if b1 < 0x80:
-                pos += 2
-                z = (b0 & 0x7F) | (b1 << 7)
+    try:
+        for _ in range(n_rec):
+            append(pos)
+            b0 = big[pos]
+            if b0 < 0x80:
+                pos += 1
+                z = b0
             else:
-                z = (b0 & 0x7F) | ((b1 & 0x7F) << 7)
-                shift = 14
-                pos += 2
-                while True:
-                    byte = big[pos]
-                    pos += 1
-                    z |= (byte & 0x7F) << shift
-                    if not byte & 0x80:
-                        break
-                    shift += 7
-        append(pos)
-        pos += (z >> 1) ^ -(z & 1)
-    if pos != len(big):
+                b1 = big[pos + 1]
+                if b1 < 0x80:
+                    pos += 2
+                    z = (b0 & 0x7F) | (b1 << 7)
+                else:
+                    z = (b0 & 0x7F) | ((b1 & 0x7F) << 7)
+                    shift = 14
+                    pos += 2
+                    while True:
+                        byte = big[pos]
+                        pos += 1
+                        z |= (byte & 0x7F) << shift
+                        if not byte & 0x80:
+                            break
+                        shift += 7
+                        if shift > 63:
+                            raise ValueError("varint longer than 10 bytes")
+                    z &= 0xFFFFFFFFFFFFFFFF
+            pos += (z >> 1) ^ -(z & 1)
+    except IndexError:
+        raise ValueError("record read past the records section") from None
+    prefix = np.array(prefix_list, dtype=np.int64)
+    sec_len = np.array([len(r) for r in rbufs], dtype=np.int64)
+    has_recs = counts > 0
+    if (
+        pos != len(big)
+        or (sec_len[~has_recs] != 0).any()
+        or (
+            prefix[(np.cumsum(counts) - counts)[has_recs]]
+            != (np.cumsum(sec_len) - sec_len)[has_recs]
+        ).any()
+    ):
         raise ValueError("records section length mismatch")
-    body_starts = np.array(starts_list, dtype=np.int64)
 
     arr = np.frombuffer(big + b"\x00" * 10, dtype=np.uint8)
-    counts_np = np.asarray(counts, dtype=np.int64)
-    ts_delta, nb_t = _vec_varint_decode(arr, body_starts + 1)
-    off_start = body_starts + 1 + nb_t
-    off_delta, nb_o = _vec_varint_decode(arr, off_start)
-    klen_start = off_start + nb_o
-    klen, nb_k = _vec_varint_decode(arr, klen_start)
-    key_start = klen_start + nb_k
-    kbytes = np.maximum(klen, 0)
-    vlen_start = key_start + kbytes
-    vlen, nb_v = _vec_varint_decode(arr, vlen_start)
-    val_start = vlen_start + nb_v
-    vbytes = np.maximum(vlen, 0)
-    hdr_start = val_start + vbytes
-    hcount, _ = _vec_varint_decode(arr, hdr_start)
+    length, nb = _vec_varint_decode(arr, prefix)
+    if (length < 0).any():
+        raise ValueError("negative record length")
+    rec_end = prefix + nb + length
 
-    mv = memoryview(big)
-    keys = [
-        bytes(mv[s:e]) if kl >= 0 else None
-        for s, e, kl in zip(key_start.tolist(), (key_start + kbytes).tolist(), klen.tolist())
-    ]
-    values = [
-        bytes(mv[s:e]) if vl >= 0 else None
-        for s, e, vl in zip(val_start.tolist(), (val_start + vbytes).tolist(), vlen.tolist())
-    ]
-    if hcount.any():
-        headers: list = [[] for _ in range(n_rec)]
-        for i in np.nonzero(hcount > 0)[0].tolist():
-            hs = []
-            p = int(hdr_start[i])
-            cnt, p = _read_varint(big, p)
-            for _ in range(cnt):
-                hklen, p = _read_varint(big, p)
-                hk = big[p : p + hklen].decode("utf-8")
-                p += hklen
-                hvlen, p = _read_varint(big, p)
-                hv = None
-                if hvlen >= 0:
-                    hv = bytes(big[p : p + hvlen])
-                    p += hvlen
-                hs.append((hk, hv))
-            headers[i] = hs
-    else:
-        headers = [[]] * n_rec
+    # every position stays at or before its record's end, so a varint
+    # read (at most 10 bytes) stays inside the zero padding of ``arr``
+    def skip(p, n, end=rec_end):
+        n = np.maximum(n, 0)
+        if (n > end - p).any():
+            raise ValueError("record fields run past the record length")
+        return p + n
 
+    def varint(p, end=rec_end):
+        v, nb_ = _vec_varint_decode(arr, p)
+        return v, skip(p, nb_, end)
+
+    p = skip(prefix + nb, 1)  # record attributes
+    ts_delta, p = varint(p)
+    off_delta, p = varint(p)
+    klen, key_start = varint(p)
+    vlen, val_start = varint(skip(key_start, klen))
+    hcount, p = varint(skip(val_start, vlen))
+    if (hcount < 0).any():
+        raise ValueError("negative header count")
+    if (hcount > (rec_end - p) // 2).any():  # a header takes >= 2 bytes
+        raise ValueError("header count exceeds the record length")
+
+    hdr_offsets = np.zeros(n_rec + 1, dtype=np.int64)
+    np.cumsum(hcount, out=hdr_offsets[1:])
+    hk_start, hk_len, hv_start, hv_len = (
+        np.empty(int(hdr_offsets[-1]), dtype=np.int64) for _ in range(4)
+    )
+    act = np.flatnonzero(hcount)
+    q = p[act]
+    j = 0
+    while len(act):
+        end = rec_end[act]
+        slot = hdr_offsets[act] + j
+        hkl, q = varint(q, end)
+        if (hkl < 0).any():
+            raise ValueError("negative header key length")
+        hk_start[slot], hk_len[slot] = q, hkl
+        hvl, q = varint(skip(q, hkl, end), end)
+        hv_start[slot], hv_len[slot] = q, hvl
+        q = skip(q, hvl, end)
+        p[act] = q
+        j += 1
+        more = hcount[act] > j
+        act, q = act[more], q[more]
+    if (p != rec_end).any():
+        raise ValueError("record length mismatch")
+
+    header_col = None
+    if headers:
+        hk = _binary_array(arr, hk_start, hk_len, pa.string())
+        try:
+            hk.validate(full=True)
+        except pa.ArrowInvalid:
+            raise ValueError("header key is not valid UTF-8") from None
+        header_col = pa.ListArray.from_arrays(
+            pa.array(hdr_offsets.astype(np.int32)),
+            pa.StructArray.from_arrays(
+                [hk, _binary_array(arr, hv_start, hv_len)], ["key", "value"]
+            ),
+        )
     return {
-        "offsets": np.repeat(np.asarray(base_offs, dtype=np.int64), counts_np)
-        + off_delta,
-        "ts_ms": np.repeat(np.asarray(base_tss, dtype=np.int64), counts_np)
-        + ts_delta,
-        "keys": keys,
-        "values": values,
-        "headers": headers,
-        "record_counts": counts_np,
-        "attributes": np.asarray(attrs, dtype=np.int64),
-        "producer_ids": np.asarray(pids, dtype=np.int64),
-        "producer_epochs": np.asarray(pepochs, dtype=np.int64),
-        "base_sequences": np.asarray(bseqs, dtype=np.int64),
+        "offsets": np.repeat(batch[:, 0], counts) + off_delta,
+        "ts_ms": np.repeat(batch[:, 2], counts) + ts_delta,
+        "keys": _binary_array(arr, key_start, klen),
+        "values": _binary_array(arr, val_start, vlen),
+        "headers": header_col,
+        "record_counts": counts,
+        "attributes": batch[:, 1],
+        "producer_ids": batch[:, 3],
+        "producer_epochs": batch[:, 4],
+        "base_sequences": batch[:, 5],
     }
 
 
@@ -906,78 +1043,79 @@ def verify_batches_v2_crc(bufs: list[bytes]) -> None:
     """Batch CRC verification for many v2 batches (ONE lane-parallel
     :func:`crc32c_many` pass); raises on the first mismatch. Callers then
     decode with ``verify_crc=False``."""
-    covered = []
-    for buf in bufs:
-        batch_length = struct.unpack_from(">i", buf, 8)[0]
-        covered.append(bytes(buf[21 : 12 + batch_length]))
-    for buf, calc in zip(bufs, crc32c_many(covered)):
-        if struct.unpack_from(">I", buf, 17)[0] != calc:
+    hdrs = [_v2_header(b) for b in bufs]
+    covered = [bytes(b[21 : 12 + h[1]]) for b, h in zip(bufs, hdrs)]
+    for h, calc in zip(hdrs, crc32c_many(covered)):
+        if h[4] != calc:
             raise ValueError("CRC32C mismatch")
 
 
 def decode_batch_v2(buf: bytes, verify_crc: bool = True) -> dict:
     """Decode one v2 batch → {base_offset, producer_id, producer_epoch,
     base_sequence, attributes, records: [{offset, timestamp_ms, key,
-    value, headers}]}. Raises on magic/CRC mismatch."""
-    base_offset = struct.unpack_from(">q", buf, 0)[0]
-    batch_length = struct.unpack_from(">i", buf, 8)[0]
-    magic = struct.unpack_from(">b", buf, 16)[0]
-    if magic != MAGIC_V2:
-        raise ValueError(f"not a v2 batch (magic={magic})")
-    crc = struct.unpack_from(">I", buf, 17)[0]
-    covered = buf[21 : 12 + batch_length]
-    if verify_crc and crc32c(covered) != crc:
+    value, headers}]}. Raises ``ValueError`` on a magic or CRC mismatch
+    and on any break of the contract :func:`decode_batches_v2_columnar`
+    states."""
+    h = _v2_header(buf)
+    (base_offset, batch_length, _, _, crc, attributes, _, base_ts, _,
+     producer_id, producer_epoch, base_sequence, record_count) = h
+    if verify_crc and crc32c(bytes(buf[21 : 12 + batch_length])) != crc:
         raise ValueError("CRC32C mismatch")
-    attributes = struct.unpack_from(">h", covered, 0)[0]
-    base_ts = struct.unpack_from(">q", covered, 6)[0]
-    producer_id = struct.unpack_from(">q", covered, 22)[0]
-    producer_epoch = struct.unpack_from(">h", covered, 30)[0]
-    base_sequence = struct.unpack_from(">i", covered, 32)[0]
-    record_count = struct.unpack_from(">i", covered, 36)[0]
-    codec = attributes & 0x07
-    rbuf = covered[40:]
-    if codec != COMPRESSION_NONE:
-        rbuf = _decompress(codec, bytes(rbuf))
+    rbuf = _v2_records(buf, h)
     pos = 0
     records = []
-    for _ in range(record_count):
-        length, pos = _read_varint(rbuf, pos)
-        end = pos + length
-        pos += 1  # record attributes
-        ts_delta, pos = _read_varint(rbuf, pos)
-        off_delta, pos = _read_varint(rbuf, pos)
-        klen, pos = _read_varint(rbuf, pos)
-        key = None
-        if klen >= 0:
-            key = bytes(rbuf[pos : pos + klen])
-            pos += klen
-        vlen, pos = _read_varint(rbuf, pos)
-        value = None
-        if vlen >= 0:
-            value = bytes(rbuf[pos : pos + vlen])
-            pos += vlen
-        hcount, pos = _read_varint(rbuf, pos)
-        headers = []
-        for _ in range(hcount):
-            hklen, pos = _read_varint(rbuf, pos)
-            hk = rbuf[pos : pos + hklen].decode("utf-8")
-            pos += hklen
-            hvlen, pos = _read_varint(rbuf, pos)
-            hv = None
-            if hvlen >= 0:
-                hv = bytes(rbuf[pos : pos + hvlen])
-                pos += hvlen
-            headers.append((hk, hv))
-        assert pos == end, "record length mismatch"
-        records.append(
-            {
-                "offset": base_offset + off_delta,
-                "timestamp_ms": base_ts + ts_delta,
-                "key": key,
-                "value": value,
-                "headers": headers,
-            }
-        )
+    try:
+        for _ in range(record_count):
+            length, pos = _read_varint(rbuf, pos)
+            end = pos + length
+            if length < 0:
+                raise ValueError("negative record length")
+            if end > len(rbuf):
+                raise ValueError("record read past the records section")
+            pos += 1  # record attributes
+            ts_delta, pos = _read_varint(rbuf, pos)
+            off_delta, pos = _read_varint(rbuf, pos)
+            klen, pos = _read_varint(rbuf, pos)
+            key = None
+            if klen >= 0:
+                key = bytes(rbuf[pos : pos + klen])
+                pos += klen
+            vlen, pos = _read_varint(rbuf, pos)
+            value = None
+            if vlen >= 0:
+                value = bytes(rbuf[pos : pos + vlen])
+                pos += vlen
+            hcount, pos = _read_varint(rbuf, pos)
+            if hcount < 0:
+                raise ValueError("negative header count")
+            headers = []
+            for _ in range(hcount):
+                hklen, pos = _read_varint(rbuf, pos)
+                if hklen < 0:
+                    raise ValueError("negative header key length")
+                hk = rbuf[pos : pos + hklen].decode("utf-8")
+                pos += hklen
+                hvlen, pos = _read_varint(rbuf, pos)
+                hv = None
+                if hvlen >= 0:
+                    hv = bytes(rbuf[pos : pos + hvlen])
+                    pos += hvlen
+                headers.append((hk, hv))
+            if pos != end:
+                raise ValueError("record length mismatch")
+            records.append(
+                {
+                    "offset": base_offset + off_delta,
+                    "timestamp_ms": base_ts + ts_delta,
+                    "key": key,
+                    "value": value,
+                    "headers": headers,
+                }
+            )
+    except IndexError:
+        raise ValueError("record read past the records section") from None
+    if pos != len(rbuf):
+        raise ValueError("records section length mismatch")
     return {
         "base_offset": base_offset,
         "attributes": attributes,
@@ -1422,11 +1560,13 @@ def down_convert(
 
 
 def _encode_sets_v01_columnar(offsets, ts_ms, keys, values, magic, set_starts):
-    """Vectorized v0/v1 message-set encode over per-record arrays:
-    returns (all_bytes, set_byte_starts) where set i is
+    """Vectorized v0/v1 message-set encode over per-record arrays
+    (``keys`` and ``values`` are ``pa.binary()`` arrays): returns
+    (all_bytes, set_byte_starts) where set i is
     ``all_bytes[set_byte_starts[i]:set_byte_starts[i+1]]``. Byte-identical
     to concatenating :func:`_encode_message_v01` per record (pinned by
-    tests) — same numpy scatter shape as the v2 columnar encoder; the
+    tests) — same numpy scatter shape as the v2 columnar encoder, the key
+    and value bytes scattered straight from the Arrow buffers; the
     per-message CRC32 stays one C zlib call per message (bodies are tens
     of bytes, the laning setup would dominate)."""
     import numpy as np
@@ -1434,8 +1574,8 @@ def _encode_sets_v01_columnar(offsets, ts_ms, keys, values, magic, set_starts):
     offsets = np.asarray(offsets, dtype=np.int64)
     ts_ms = np.asarray(ts_ms, dtype=np.int64)
     n = len(offsets)
-    klen = np.fromiter((-1 if k is None else len(k) for k in keys), np.int64, n)
-    vlen = np.fromiter((-1 if v is None else len(v) for v in values), np.int64, n)
+    klen, key_data = _binary_parts(keys)
+    vlen, val_data = _binary_parts(values)
     kbytes = np.maximum(klen, 0)
     vbytes = np.maximum(vlen, 0)
     ts_w = 8 if magic == 1 else 0
@@ -1453,6 +1593,10 @@ def _encode_sets_v01_columnar(offsets, ts_ms, keys, values, magic, set_starts):
         b = np.ascontiguousarray(vals.astype(dt)).view(np.uint8).reshape(-1, width)
         out[starts[:, None] + np.arange(width)] = b
 
+    def put_bytes(starts, nbytes, data):  # spans back to back in ``data``
+        src = np.cumsum(nbytes) - nbytes
+        out[np.repeat(starts - src, nbytes) + np.arange(len(data))] = data
+
     put_be(rec_starts, offsets, 8)
     put_be(rec_starts + 8, msg_size, 4)
     # crc at +12 is filled once the body bytes are in place
@@ -1465,20 +1609,11 @@ def _encode_sets_v01_columnar(offsets, ts_ms, keys, values, magic, set_starts):
         p = p + 8
     put_be(p, klen, 4)
     key_start = p + 4
-    kmask = klen >= 0
-    _vec_ragged_scatter(
-        out, key_start[kmask], kbytes[kmask],
-        b"".join(k for k in keys if k is not None),
-    )
+    put_bytes(key_start, kbytes, key_data)
     vlen_start = key_start + kbytes
     put_be(vlen_start, vlen, 4)
-    val_start = vlen_start + 4
-    vmask = vlen >= 0
-    _vec_ragged_scatter(
-        out, val_start[vmask], vbytes[vmask],
-        b"".join(v for v in values if v is not None),
-    )
-    mv = memoryview(out.tobytes())
+    put_bytes(vlen_start + 4, vbytes, val_data)
+    mv = out.data
     crcs = np.fromiter(
         (
             zlib.crc32(mv[s:e])
@@ -1516,7 +1651,8 @@ def down_convert_many(
         raise ValueError("legacy magic must be 0 or 1")
     if not bufs:
         return []
-    d = decode_batches_v2_columnar(bufs, verify_crc=verify_crc)
+    # v0/v1 carry no headers: the decoder builds no header column
+    d = decode_batches_v2_columnar(bufs, verify_crc=verify_crc, headers=False)
     counts = d["record_counts"]
     n_batches = len(counts)
     set_starts = np.zeros(n_batches, dtype=np.int64)
@@ -1646,15 +1782,19 @@ def decode_message_set_v01(buf: bytes) -> list[dict]:
 
 def decode_message_sets_v01_many(bufs: list[bytes]):
     """Columnar ``[decode_message_set_v01(b) for b in bufs]`` — returns
-    (offsets, ts_ms, keys, values, set_counts) as flat per-record lists
-    plus the per-buf record count, records in the scalar decoder's
-    order (value-identical, pinned by tests). The size-chained boundary
-    walk stays scalar (each message's position depends on the previous
-    size) but touches only 12 bytes per message; every interior field,
-    the CRC verify batch, and the v1 relative-offset fixups run over
-    ALL messages at once (guide §4.2), replacing the per-message dict
-    construction that dominated the scalar ingest path."""
+    (offsets, ts_ms, keys, values, set_counts): per record an int64 numpy
+    offset, an int64 Arrow timestamp (null where the scalar decoder
+    gives ``None``) and ``pa.binary()`` keys and values gathered from
+    the message bytes, plus the per-buf record count as a list; records
+    in the scalar decoder's order (value-identical, pinned by tests). The
+    size-chained boundary walk stays scalar (each message's position
+    depends on the previous size) but touches only 12 bytes per message;
+    every interior field, the CRC verify batch, and the v1
+    relative-offset fixups run over ALL messages at once (guide §4.2),
+    replacing the per-message dict construction that dominated the
+    scalar ingest path."""
     import numpy as np
+    import pyarrow as pa
 
     segs: list[bytes] = []            # backing buffers (outer + inflated)
     # one row per plain message: (seg_idx, offset, msg_start, msg_size)
@@ -1742,7 +1882,8 @@ def decode_message_sets_v01_many(bufs: list[bytes]):
 
     n = len(rows)
     if n == 0:
-        return [], [], [], [], set_counts
+        empty = pa.array([], pa.binary())
+        return np.zeros(0, np.int64), pa.array([], pa.int64()), empty, empty, set_counts
     msg_buf, msg_off, msg_start, msg_size = zip(*rows)
 
     # concatenate the backing buffers once (a message never spans two);
@@ -1790,31 +1931,14 @@ def decode_message_sets_v01_many(bufs: list[bytes]):
     if (got != crc_field).any():
         raise ValueError("CRC32 mismatch")
 
-    keys = [
-        bytes(mv[s:e]) if kl >= 0 else None
-        for s, e, kl in zip(
-            (starts + 10 + ts_w).tolist(),
-            (starts + 10 + ts_w + kbytes).tolist(),
-            klen.tolist(),
-        )
-    ]
-    values = [
-        bytes(mv[s:e]) if vl >= 0 else None
-        for s, e, vl in zip(
-            (vlen_start + 4).tolist(),
-            (vlen_start + 4 + vbytes).tolist(),
-            vlen.tolist(),
-        )
-    ]
-    offs = (
-        np.asarray(msg_off, dtype=np.int64)
-        + np.fromiter((b or 0 for b in rel_base), np.int64, n)
-    ).tolist()
-    ts_l = ts_vals.tolist()
-    out_ts: list[int | None] = [
-        stamp_ts[i]
-        if stamp_ts[i] is not None
-        else (ts_l[i] if magic[i] == 1 else None)
-        for i in range(n)
-    ]
-    return offs, out_ts, keys, values, set_counts
+    keys = _binary_array(arr, starts + 10 + ts_w, klen)
+    values = _binary_array(arr, vlen_start + 4, vlen)
+    has_stamp = np.fromiter((t is not None for t in stamp_ts), bool, n)
+    ts = np.where(
+        has_stamp, np.fromiter((t or 0 for t in stamp_ts), np.int64, n), ts_vals
+    )
+    offs = np.asarray(msg_off, dtype=np.int64) + np.fromiter(
+        (b or 0 for b in rel_base), np.int64, n
+    )
+    ts = pa.array(ts, pa.int64(), mask=~(has_stamp | m1))
+    return offs, ts, keys, values, set_counts

@@ -18,6 +18,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 
 from starlight_for_kafka_spark.functions import offsets_wire as ow
 from starlight_for_kafka_spark.plans.kernels import kernel
@@ -934,6 +936,33 @@ def select_group_protocol(
 # ---------------------------------------------------------------------------
 
 
+_OFFSETS_RECORD_SCHEMA = T.StructType(
+    [
+        T.StructField("key", T.BinaryType()),
+        T.StructField("value", T.BinaryType()),
+        T.StructField("append_ts", T.LongType()),
+    ]
+)
+
+# what decode_offsets_topic returns, before its optional append_ts
+_OFFSETS_DECODED_FIELDS = [
+    T.StructField(name, typ)
+    for name, typ in [
+        ("kind", T.StringType()),
+        ("group", T.StringType()),
+        ("topic", T.StringType()),
+        ("partition", T.IntegerType()),
+        ("offset", T.LongType()),
+        ("metadata", T.StringType()),
+        ("commit_ts_ms", T.LongType()),
+        ("expire_ts_ms", T.LongType()),
+        ("leader_epoch", T.IntegerType()),
+        ("value_version", T.IntegerType()),
+        ("tombstone", T.BooleanType()),
+    ]
+]
+
+
 def encode_offsets_topic(
     commits: DataFrame,
     key_version: int = 1,
@@ -946,16 +975,16 @@ def encode_offsets_topic(
     at-rest binary records (versioned OffsetCommitKey/Value — reference
     GroupMetadataConstants.java:64-147, written by
     GroupMetadataManager.storeOffsets:415). Emits (key binary,
-    value binary) rows; a tombstone row carries a NULL value, exactly the
-    compaction deletion marker the broker writes on group delete / offset
-    expiry.
+    value binary, append_ts long) rows; a tombstone row carries a NULL
+    value, exactly the compaction deletion marker the broker writes on
+    group delete / offset expiry.
 
-    Arrow-batched mapInPandas (byte-codec work, no JVM builtin — the same
-    seam as the RecordBatch v2 wire layer in sources/wire.py). Map-only:
-    no shuffle; at 100 TB this parallelizes per input split.
+    mapInArrow (byte-codec work, no JVM builtin — the same seam as the
+    RecordBatch v2 wire layer in sources/wire.py): the kernel reads the
+    Arrow batch's columns, runs the per-row codec and yields a
+    ``pyarrow.RecordBatch``, with no pandas frame. Map-only: no shuffle;
+    at 100 TB this parallelizes per input split.
     """
-    import pandas as pd
-
     cols = commits.select(
         "group",
         "topic",
@@ -969,37 +998,45 @@ def encode_offsets_topic(
             else F.lit(False)
         ).alias("tomb"),
     )
+    schema = to_arrow_schema(_OFFSETS_RECORD_SCHEMA)
 
     def op(batches):
-        for pdf in batches:
+        import pyarrow as pa
+
+        for rb in batches:
             keys, values = [], []
-            for r in pdf.itertuples(index=False):
-                keys.append(
-                    ow.encode_offset_key(r.group, r.topic, int(r.partition), key_version)
-                )
-                if r.tomb:
+            # through numpy: Array.to_pylist builds a pyarrow scalar per
+            # element first, ~30x slower
+            for group, topic, partition, offset, metadata, ms, tomb in zip(
+                *(c.to_numpy(zero_copy_only=False).tolist() for c in rb.columns)
+            ):
+                keys.append(ow.encode_offset_key(group, topic, partition, key_version))
+                if tomb:
                     values.append(None)
                 elif value_version == 1:
                     values.append(
                         ow.encode_offset_value(
-                            int(r.offset), r.metadata, int(r.commit_ms), version=1,
-                            expire_timestamp_ms=int(r.commit_ms) + expire_after_ms,
+                            offset, metadata, ms, version=1,
+                            expire_timestamp_ms=ms + expire_after_ms,
                         )
                     )
                 else:
                     values.append(
                         ow.encode_offset_value(
-                            int(r.offset), r.metadata, int(r.commit_ms),
+                            offset, metadata, ms,
                             version=value_version, leader_epoch=leader_epoch,
                         )
                     )
-            yield pd.DataFrame(
-                {"key": keys, "value": values, "append_ts": pdf["commit_ms"]}
+            yield pa.RecordBatch.from_arrays(
+                [
+                    pa.array(keys, pa.binary()),
+                    pa.array(values, pa.binary()),
+                    rb.column("commit_ms"),
+                ],
+                schema=schema,
             )
 
-    return cols.mapInPandas(
-        kernel(op, ow), "key binary, value binary, append_ts long"
-    )
+    return cols.mapInArrow(kernel(op, ow), _OFFSETS_RECORD_SCHEMA)
 
 
 def decode_offsets_topic(records: DataFrame) -> DataFrame:
@@ -1010,52 +1047,49 @@ def decode_offsets_topic(records: DataFrame) -> DataFrame:
     passed through with kind='group_metadata' and a null offset so callers
     can route them like the broker does; offset keys decode fully.
 
-    Map-only Arrow-batched kernel; emits (kind, group, topic, partition,
-    offset, metadata, commit_ts, expire_ts, leader_epoch, value_version,
-    tombstone)."""
-    import pandas as pd
-
+    Map-only mapInArrow kernel (the per-row codec over the Arrow batch's
+    ``key`` and ``value`` columns, no pandas frame); emits (kind, group,
+    topic, partition, offset, metadata, commit_ts_ms, expire_ts_ms,
+    leader_epoch, value_version, tombstone), plus ``append_ts`` passed
+    through when the input has it."""
     has_append_ts = "append_ts" in records.columns
-    schema = (
-        "kind string, group string, topic string, partition int, offset long, "
-        "metadata string, commit_ts_ms long, expire_ts_ms long, "
-        "leader_epoch int, value_version int, tombstone boolean"
-    )
+    fields = list(_OFFSETS_DECODED_FIELDS)
     if has_append_ts:
-        schema += ", append_ts long"
+        fields.append(T.StructField("append_ts", T.LongType()))
+    out_schema = T.StructType(fields)
+    schema = to_arrow_schema(out_schema)
 
     def op(batches):
-        for pdf in batches:
-            rows = []
-            for r in pdf.itertuples(index=False):
-                k = ow.decode_key(bytes(r.key))
-                if k["kind"] != "offset":
-                    row = (k["kind"], k["group"], None, None, None, None,
-                           None, None, None, None, r.value is None)
-                    rows.append(row + (r.append_ts,) if has_append_ts else row)
-                    continue
-                v = ow.decode_offset_value(
-                    None if r.value is None else bytes(r.value)
-                )
-                if v is None:
-                    row = ("offset", k["group"], k["topic"], k["partition"],
-                           None, None, None, None, None, None, True)
-                else:
-                    row = ("offset", k["group"], k["topic"], k["partition"],
-                           v["offset"], v["metadata"], v["commit_timestamp_ms"],
-                           v["expire_timestamp_ms"], v["leader_epoch"],
-                           v["version"], False)
-                rows.append(row + (r.append_ts,) if has_append_ts else row)
-            cols_out = [
-                "kind", "group", "topic", "partition", "offset", "metadata",
-                "commit_ts_ms", "expire_ts_ms", "leader_epoch",
-                "value_version", "tombstone",
-            ]
-            if has_append_ts:
-                cols_out.append("append_ts")
-            yield pd.DataFrame(rows, columns=cols_out)
+        import pyarrow as pa
 
-    return records.mapInPandas(kernel(op, ow), schema)
+        for rb in batches:
+            rows = []
+            keys, values = (
+                rb.column(c).to_numpy(zero_copy_only=False).tolist()
+                for c in ("key", "value")
+            )
+            for key, value in zip(keys, values):
+                k = ow.decode_key(key)
+                if k["kind"] != "offset":
+                    rows.append((k["kind"], k["group"], None, None, None, None,
+                                 None, None, None, None, value is None))
+                    continue
+                v = ow.decode_offset_value(value)
+                if v is None:
+                    rows.append(("offset", k["group"], k["topic"], k["partition"],
+                                 None, None, None, None, None, None, True))
+                else:
+                    rows.append(("offset", k["group"], k["topic"], k["partition"],
+                                 v["offset"], v["metadata"], v["commit_timestamp_ms"],
+                                 v["expire_timestamp_ms"], v["leader_epoch"],
+                                 v["version"], False))
+            columns = list(zip(*rows)) if rows else [()] * len(_OFFSETS_DECODED_FIELDS)
+            arrays = [pa.array(c, f.type) for c, f in zip(columns, schema)]
+            if has_append_ts:
+                arrays.append(rb.column("append_ts").cast(pa.int64()))
+            yield pa.RecordBatch.from_arrays(arrays, schema=schema)
+
+    return records.mapInArrow(kernel(op, ow), out_schema)
 
 
 def recover_offsets_from_wire(records: DataFrame) -> DataFrame:

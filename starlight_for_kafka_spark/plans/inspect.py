@@ -87,6 +87,34 @@ def _node_ids(plan: str, node: str) -> set[str]:
     return pre | post
 
 
+def plan_shape(plan: str) -> dict:
+    """Node counts of a formatted plan string (:func:`plan_string`): each
+    node once by its id, as :func:`exchange_count` counts exchanges (a
+    formatted plan names every node twice, as a tree row and as the
+    header of its detail block), plus whether AQE wraps the plan."""
+
+    def count(*nodes: str) -> int:
+        return len(set().union(*(_node_ids(plan, n) for n in nodes)))
+
+    return {
+        "exchanges": count("Exchange"),
+        "broadcast_exchanges": count("BroadcastExchange"),
+        "sort_merge_joins": count("SortMergeJoin"),
+        "broadcast_hash_joins": count("BroadcastHashJoin"),
+        "shuffled_hash_joins": count("ShuffledHashJoin"),
+        "nested_loop_joins": count("BroadcastNestedLoopJoin", "CartesianProduct"),
+        "batch_eval_python": count("BatchEvalPython"),
+        "arrow_eval_python": count("ArrowEvalPython"),
+        "map_in_arrow_or_pandas": count(
+            "MapInPandas", "MapInArrow", "PythonMapInArrow",
+            "FlatMapGroupsInPandas", "FlatMapGroupsInArrow",
+        ),
+        "sorts": count("Sort"),
+        "window_nodes": count("Window"),
+        "aqe": "AdaptiveSparkPlan" in plan,
+    }
+
+
 def pushed_filters(df: DataFrame) -> list[str]:
     """Every non-empty PushedFilters entry across the plan's parquet scans."""
     out: list[str] = []

@@ -18,13 +18,16 @@ and the operators are Arrow-batched:
 - decode, transcode, down-convert and legacy ingest: mapInArrow — batches
   are self-contained blobs, so these are embarrassingly parallel, no
   shuffle; CRC32C is verified per batch. Each kernel reads the Arrow
-  batch's columns and yields a ``pyarrow.RecordBatch`` at the declared
-  types.
+  batch's blob column and yields a ``pyarrow.RecordBatch`` at the
+  declared types. The decoders build the key, value and headers columns
+  as Arrow arrays gathered straight from the decompressed records
+  buffer, which the kernels pass through: the decode side creates no
+  Python object per record or header.
 
 No kernel here builds a pandas frame: PySpark's pandas converter, whose
 pass over the ``headers`` array<struct> column alone cost more than the
-decode it carried, and a per-record Python walk over the headers on the
-encode side, both cost more than the codec work they fed.
+decode it carried, and a per-record Python walk over the headers on
+either side, both cost more than the codec work they fed.
 
 Kafka timestamps are MILLISECONDS on the wire, so a roundtrip truncates
 sub-ms precision — that is wire semantics, not a codec defect.
@@ -167,23 +170,33 @@ def encode_wire_batches(
 def _log_row_kernel(column: str, decode):
     """mapInArrow kernel: log rows (``_DECODED_SCHEMA``) of every blob in
     ``column``. ``decode(blobs)`` returns (offsets, ts_ms, keys, values,
-    headers, records per blob); each row takes its blob's ``partition``."""
+    headers, records per blob): int64 numpy or Arrow offsets and
+    timestamps, ``pa.binary()`` keys and values and a
+    ``list<struct<key, value>>`` headers array (``None``: no row has a
+    header), all passed through; each row takes its blob's
+    ``partition``."""
     schema = to_arrow_schema(_DECODED_SCHEMA)
 
     def op(batches):
         import numpy as np
         import pyarrow as pa
 
+        hdr_type = schema.field("headers").type
         for rb in batches:
             offsets, ts_ms, keys, values, headers, counts = decode(
                 rb.column(column).to_pylist()
             )
+            if headers is None:
+                entries = pa.array([], hdr_type.value_type)
+                list_offsets = np.zeros(len(offsets) + 1, np.int32)
+            else:  # same layout, relabelled to the schema's list field name
+                entries, list_offsets = headers.values, headers.offsets
             blob_of_row = np.repeat(np.arange(rb.num_rows), counts)
             yield pa.RecordBatch.from_arrays(
                 [
-                    pa.array(keys, pa.binary()),
-                    pa.array(values, pa.binary()),
-                    pa.array(headers, schema.field("headers").type),
+                    keys,
+                    values,
+                    pa.ListArray.from_arrays(list_offsets, entries, type=hdr_type),
                     pa.array(ts_ms, pa.int64()),
                     rb.column("partition").take(blob_of_row).cast(pa.int32()),
                     pa.array(offsets, pa.int64()),
@@ -236,7 +249,8 @@ def decode_wire_batches(batches: DataFrame) -> DataFrame:
 
     def decode(blobs):
         # columnar decode of the whole chunk: one lane-parallel CRC
-        # verify, varints decoded across all records at once
+        # verify, every field decoded across all records at once into
+        # Arrow arrays
         col = kr.decode_batches_v2_columnar(blobs)
         return (
             col["offsets"], col["ts_ms"], col["keys"], col["values"],
@@ -297,7 +311,7 @@ def ingest_message_sets(message_sets: DataFrame) -> DataFrame:
     def decode(blobs):
         # whole-chunk columnar decode (decode_message_sets_v01_many)
         offsets, ts_ms, keys, values, counts = kr.decode_message_sets_v01_many(blobs)
-        return offsets, ts_ms, keys, values, [[]] * len(offsets), counts
+        return offsets, ts_ms, keys, values, None, counts
 
     return _with_timestamp(
         message_sets.mapInArrow(

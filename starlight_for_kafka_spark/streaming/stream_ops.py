@@ -772,10 +772,10 @@ def offsets_wire_recovery_stream(records: DataFrame) -> DataFrame:
     """Streaming __consumer_offsets recovery over raw binary records: the
     byte-level twin of groups.recover_offsets_from_wire as a stateful
     stream. Records (key/value binary + append_ts) decode in-stream
-    (mapInPandas works identically on streaming frames), then
-    applyInPandasWithState keyed by (group, topic, partition) keeps only
-    the winning record per key under the same (append_ts, tombstone,
-    offset) ranking the batch path uses.
+    (decode_offsets_topic's mapInArrow kernel works identically on
+    streaming frames), then applyInPandasWithState keyed by (group,
+    topic, partition) keeps only the winning record per key under the
+    same (append_ts, tombstone, offset) ranking the batch path uses.
 
     The fold is a MAX over that ranking — order-independent — so arrival
     order across microbatches cannot change the converged state (no

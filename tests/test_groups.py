@@ -643,3 +643,106 @@ def test_encode_group_metadata_records_custom_group_col(spark):
     assert len(a) == len(b) == 1
     assert bytes(a[0].key) == bytes(b[0].key)
     assert bytes(a[0].value) == bytes(b[0].value)
+
+
+def test_offsets_topic_arrow_kernels_match_scalar_codec_on_edges(spark):
+    """encode_offsets_topic and decode_offsets_topic against the scalar
+    offsets codec, row for row and in order, on one task that receives
+    several Arrow batches (two rows each): value versions 1 and 3, a
+    tombstone, a NULL tombstone flag, NULL and empty metadata, a
+    non-ASCII group, a pre-1970 commit, group-metadata keys with and
+    without a value, a NULL append_ts; each schema, nullability
+    included, as the pandas kernels declared it; an empty input gives no
+    rows."""
+    from pyspark.sql import types as T
+
+    from starlight_for_kafka_spark.functions import offsets_wire as ow
+    from starlight_for_kafka_spark.plans import local_frame
+
+    rows = [
+        ("g0", "t", 0, 10, "a", 1_700_000_000_000, False),
+        ("g0", "t", 1, 11, None, 1_700_000_000_500, False),
+        ("grp-é", "topic", 7, 12, "", 1_700_000_001_000, True),
+        ("g1", "t", 2, 2**40, "m" * 300, 1_700_000_002_000, None),
+        ("g2", "u", 0, 0, "z", -5, False),
+    ]
+    commits = local_frame(
+        spark, rows,
+        "group string, topic string, partition int, offset long, metadata string, "
+        "ms long, tomb boolean",
+    ).withColumn("commit_ts", F.timestamp_millis("ms")).coalesce(1)
+    records_schema = T.StructType([
+        T.StructField("key", T.BinaryType()),
+        T.StructField("value", T.BinaryType()),
+        T.StructField("append_ts", T.LongType()),
+    ])
+    decoded_fields = [
+        T.StructField(n, t) for n, t in [
+            ("kind", T.StringType()), ("group", T.StringType()),
+            ("topic", T.StringType()), ("partition", T.IntegerType()),
+            ("offset", T.LongType()), ("metadata", T.StringType()),
+            ("commit_ts_ms", T.LongType()), ("expire_ts_ms", T.LongType()),
+            ("leader_epoch", T.IntegerType()), ("value_version", T.IntegerType()),
+            ("tombstone", T.BooleanType()),
+        ]
+    ]
+
+    def expected_decode(key, value, append_ts):
+        k = ow.decode_key(key)
+        if k["kind"] != "offset":
+            row = (k["kind"], k["group"]) + (None,) * 8 + (value is None,)
+        else:
+            v = ow.decode_offset_value(value)
+            row = ("offset", k["group"], k["topic"], k["partition"]) + (
+                (None,) * 6 + (True,) if v is None else
+                (v["offset"], v["metadata"], v["commit_timestamp_ms"],
+                 v["expire_timestamp_ms"], v["leader_epoch"], v["version"], False)
+            )
+        return row + (append_ts,)
+
+    conf = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    saved = spark.conf.get(conf)
+    spark.conf.set(conf, "2")
+    try:
+        for key_version, value_version in ((1, 3), (0, 1)):
+            recs = groups.encode_offsets_topic(
+                commits, key_version, value_version, leader_epoch=4,
+                tombstone_col="tomb", expire_after_ms=1000,
+            )
+            assert recs.schema == records_schema
+            got = [(bytes(r.key), None if r.value is None else bytes(r.value), r.append_ts)
+                   for r in recs.collect()]
+            want = [
+                (ow.encode_offset_key(g, t, p, key_version),
+                 None if tomb else
+                 ow.encode_offset_value(o, m, ms, version=1, expire_timestamp_ms=ms + 1000)
+                 if value_version == 1 else
+                 ow.encode_offset_value(o, m, ms, version=value_version, leader_epoch=4),
+                 ms)
+                for g, t, p, o, m, ms, tomb in rows
+            ]
+            assert got == want
+
+            wire_rows = want + [
+                (ow.encode_group_metadata_key("g9"), b"opaque", 7),
+                (ow.encode_group_metadata_key("g9"), None, None),
+                (ow.encode_offset_key("g3", "t", 1, key_version), None, None),
+            ]
+            wire_df = local_frame(spark, wire_rows, records_schema).coalesce(1)
+            decoded = groups.decode_offsets_topic(wire_df)
+            assert decoded.schema == T.StructType(
+                decoded_fields + [T.StructField("append_ts", T.LongType())]
+            )
+            assert [tuple(r) for r in decoded.collect()] == [
+                expected_decode(*r) for r in wire_rows
+            ]
+            bare = groups.decode_offsets_topic(wire_df.drop("append_ts"))
+            assert bare.schema == T.StructType(decoded_fields)
+            assert [tuple(r) for r in bare.collect()] == [
+                expected_decode(*r)[:-1] for r in wire_rows
+            ]
+    finally:
+        spark.conf.set(conf, saved)
+
+    assert groups.encode_offsets_topic(commits.limit(0)).collect() == []
+    assert groups.decode_offsets_topic(local_frame(spark, [], records_schema)).collect() == []

@@ -665,6 +665,9 @@ def test_columnar_codec_matches_scalar_paths():
 
     blobs = encode_columnar(chunks, compression="lz4")
     col = kr.decode_batches_v2_columnar(blobs)
+    keys, values = col["keys"].to_pylist(), col["values"].to_pylist()
+    headers = [[(h["key"], h["value"]) for h in hs]
+               for hs in col["headers"].to_pylist()]
     ri = 0
     for bi, blob in enumerate(blobs):
         d = kr.decode_batch_v2(blob)
@@ -673,9 +676,9 @@ def test_columnar_codec_matches_scalar_paths():
         for rec in d["records"]:
             assert col["offsets"][ri] == rec["offset"]
             assert col["ts_ms"][ri] == rec["timestamp_ms"]
-            assert col["keys"][ri] == rec["key"]
-            assert col["values"][ri] == rec["value"]
-            assert list(col["headers"][ri]) == rec["headers"]
+            assert keys[ri] == rec["key"]
+            assert values[ri] == rec["value"]
+            assert headers[ri] == rec["headers"]
             ri += 1
 
     # >4-byte varint (2^40 ts delta) forces the width-10 decode fallback
@@ -687,8 +690,9 @@ def test_columnar_codec_matches_scalar_paths():
     blob = encode_columnar([(5, recs)])
     assert blob[0] == kr.encode_batch_v2(5, recs)
     c = kr.decode_batches_v2_columnar(blob)
-    assert c["ts_ms"][1] == 2**40 and c["values"][1] == b"c" * 150
-    assert c["keys"][1] is None and c["values"][0] == b"b"
+    keys, values = c["keys"].to_pylist(), c["values"].to_pylist()
+    assert c["ts_ms"][1] == 2**40 and values[1] == b"c" * 150
+    assert keys[1] is None and values[0] == b"b"
 
 
 
@@ -773,10 +777,158 @@ def test_decode_message_sets_v01_many_matches_scalar():
     offs, ts, keys, values, cnts = kr.decode_message_sets_v01_many(sets)
     flat = [r for rows in want for r in rows]
     assert cnts == [len(rows) for rows in want]
-    assert offs == [r["offset"] for r in flat]
-    assert ts == [r["timestamp_ms"] for r in flat]
-    assert keys == [r["key"] for r in flat]
-    assert values == [r["value"] for r in flat]
+    assert offs.tolist() == [r["offset"] for r in flat]
+    assert ts.to_pylist() == [r["timestamp_ms"] for r in flat]
+    assert keys.to_pylist() == [r["key"] for r in flat]
+    assert values.to_pylist() == [r["value"] for r in flat]
+
+
+def _restamp(blob, fix_length=True) -> bytes:
+    """``blob`` with its CRC32C recomputed over the part its batchLength
+    covers, after setting batchLength to the blob's size (unless
+    ``fix_length`` is false)."""
+    out = bytearray(blob)
+    if fix_length:
+        out[8:12] = struct.pack(">i", len(out) - 12)
+    (batch_length,) = struct.unpack_from(">i", out, 8)
+    out[17:21] = struct.pack(">I", kr.crc32c(bytes(out[21 : 12 + batch_length])))
+    return bytes(out)
+
+
+def _columnar_rows(col):
+    """decode_batches_v2_columnar's columns as decode_batch_v2 records."""
+    return [
+        {"offset": o, "timestamp_ms": t, "key": k, "value": v,
+         "headers": [(h["key"], h["value"]) for h in hs]}
+        for o, t, k, v, hs in zip(
+            col["offsets"].tolist(), col["ts_ms"].tolist(), col["keys"].to_pylist(),
+            col["values"].to_pylist(), col["headers"].to_pylist(),
+        )
+    ]
+
+
+def test_arrow_decoders_match_scalar_on_edges():
+    """The Arrow-building decoders (decode_batches_v2_columnar,
+    down_convert_many, decode_message_sets_v01_many) equal the scalar
+    codec on every codec: a null key or value next to an empty one; 0, 1,
+    2 and 3 headers mixed in one batch; a null header value and a
+    non-ASCII header key; a zero-record batch; the empty input; the
+    >4-byte varint fallback. An invalid UTF-8 header key raises
+    ValueError in both v2 decoders."""
+    import pytest
+
+    recs = [
+        {"offset": 7, "timestamp_ms": 1_700_000_000_000, "key": None, "value": b"",
+         "headers": []},
+        {"offset": 8, "timestamp_ms": 1_700_000_000_001, "key": b"", "value": None,
+         "headers": [("ключ-é", None)]},
+        {"offset": 9, "timestamp_ms": -1, "key": b"k", "value": b"v",
+         "headers": [("a", b""), ("b", b"2")]},
+        {"offset": 11, "timestamp_ms": 1_700_000_000_000 + 2**40, "key": None,
+         "value": None, "headers": [("a", b"1"), ("", None), ("c", b"3" * 200)]},
+        {"offset": 12, "timestamp_ms": 5, "key": b"x" * 300, "value": b"",
+         "headers": []},
+    ]
+    empty = _restamp(kr._assemble_v2(
+        50, 0, 0, struct.pack(">hiqqqhii", 0, -1, -1, -1, -1, -1, -1, 0)
+    ))
+    assert kr.decode_batch_v2(empty)["records"] == []
+    for codec in _CODECS:
+        bufs = [kr.encode_batch_v2(7, recs, compression=codec), empty,
+                kr.encode_batch_v2(12, recs[4:], compression=codec)]
+        col = kr.decode_batches_v2_columnar(bufs)
+        assert _columnar_rows(col) == [
+            r for b in bufs for r in kr.decode_batch_v2(b)["records"]
+        ]
+        assert col["record_counts"].tolist() == [5, 0, 1]
+        bare = kr.decode_batches_v2_columnar(bufs, headers=False)
+        assert bare["headers"] is None
+        assert bare["keys"].equals(col["keys"]) and bare["values"].equals(col["values"])
+        for magic in (0, 1):
+            for legacy in (None, "gzip", "snappy", "lz4"):
+                sets = kr.down_convert_many(bufs, magic, compression=legacy)
+                assert sets == [kr.down_convert(b, magic, compression=legacy) for b in bufs]
+                want = [kr.decode_message_set_v01(m) for m in sets]
+                flat = [r for rows in want for r in rows]
+                offs, ts, keys, values, counts = kr.decode_message_sets_v01_many(sets)
+                assert counts == [len(rows) for rows in want]
+                assert offs.tolist() == [r["offset"] for r in flat]
+                assert ts.to_pylist() == [r["timestamp_ms"] for r in flat]
+                assert keys.to_pylist() == [r["key"] for r in flat]
+                assert values.to_pylist() == [r["value"] for r in flat]
+
+    col = kr.decode_batches_v2_columnar([])
+    assert _columnar_rows(col) == [] and col["record_counts"].tolist() == []
+    assert kr.down_convert_many([]) == []
+    offs, ts, keys, values, counts = kr.decode_message_sets_v01_many([])
+    assert (offs.tolist(), ts.to_pylist(), keys.to_pylist(), values.to_pylist(),
+            counts) == ([], [], [], [], [])
+
+    # an invalid start byte and a UTF-16 surrogate: neither is UTF-8
+    for bad in (b"\xff\xfe", b"\xed\xa0\x80"):
+        mark = b"Z" * len(bad)
+        blob = kr.encode_batch_v2(0, [{"offset": 0, "timestamp_ms": 0, "key": b"k",
+                                       "value": b"v", "headers": [(mark.decode(), b"h")]}])
+        assert blob[61:].count(mark) == 1
+        blob = _restamp(blob[:61] + blob[61:].replace(mark, bad))
+        with pytest.raises(ValueError):
+            kr.decode_batch_v2(blob)
+        with pytest.raises(ValueError, match="UTF-8"):
+            kr.decode_batches_v2_columnar([blob])
+
+
+def test_v2_decoders_agree_on_mutated_batches():
+    """Seeded mutations of v2 batches of every codec, the CRC re-stamped
+    after each so that it reaches the record parsers: a bit flip in the
+    21 batch-header bytes, in the CRC-covered part, or in the
+    uncompressed records section (then recompressed), and a truncation.
+    For every input the scalar and the columnar decoder return equal
+    rows or both raise ValueError (any other exception fails the
+    test)."""
+    import collections
+    import random
+
+    rng = random.Random(20261020)
+
+    def blob_of(n):
+        return bytearray(kr.encode_batch_v2(40, [
+            {"offset": 40 + i,
+             "timestamp_ms": 1_700_000_000_000 + rng.randrange(-9, 9000),
+             "key": rng.choice([None, b"", rng.randbytes(rng.randrange(1, 12))]),
+             "value": rng.choice([None, b"", rng.randbytes(rng.randrange(1, 150))]),
+             "headers": [(rng.choice(["h", "é", "kk"]),
+                          rng.choice([None, b"", rng.randbytes(rng.randrange(1, 9))]))
+                         for _ in range(rng.randrange(4))]}
+            for i in range(n)
+        ], compression=codec))
+
+    def outcome(decode):
+        try:
+            return decode()
+        except ValueError:
+            return ValueError
+
+    seen = collections.Counter()
+    for codec in _CODECS:
+        for trial in range(600):
+            blob = blob_of(rng.randrange(1, 8))
+            kind = trial % 4
+            if kind == 0:  # base offset, batchLength, leader epoch, magic, CRC
+                blob[rng.randrange(21)] ^= 1 << rng.randrange(8)
+            elif kind == 1:  # attributes .. records, as stored
+                blob[rng.randrange(21, len(blob))] ^= 1 << rng.randrange(8)
+            elif kind == 2:
+                del blob[rng.randrange(61, len(blob)):]
+            else:
+                section = bytearray(kr._v2_records(blob, kr._v2_header(blob)))
+                section[rng.randrange(len(section))] ^= 1 << rng.randrange(8)
+                blob[61:] = section if codec is None else kr._compress(codec, bytes(section))
+            blob = _restamp(blob, fix_length=kind != 0)
+            scalar = outcome(lambda: kr.decode_batch_v2(blob)["records"])
+            columnar = outcome(lambda: _columnar_rows(kr.decode_batches_v2_columnar([blob])))
+            assert scalar == columnar, (codec, trial)
+            seen[scalar is ValueError] += 1
+    assert seen[True] > 600 and seen[False] > 600, seen
 
 
 def _lz4_frame(blocks, flg=0x60, broken_hc=False, content=b""):
@@ -930,10 +1082,8 @@ def test_lz4_zero_offset_mid_block_fails_the_wrapper_crc():
         kr.decode_message_set_v01(msgset)
 
 
-def test_map_only_wire_kernels_import_no_pandas():
-    """No function in ``sources/wire.py`` imports pandas: the four
-    mapInArrow kernels, their factories and ``encode_wire_batches``
-    (applyInArrow) all read and return Arrow."""
+def _functions_importing_pandas(module):
+    """Names of the module's top-level functions that import pandas."""
     import ast
     import inspect
 
@@ -949,11 +1099,30 @@ def test_map_only_wire_kernels_import_no_pandas():
                 return True
         return False
 
-    tree = ast.parse(inspect.getsource(wire))
+    tree = ast.parse(inspect.getsource(module))
     functions = [f for f in tree.body if isinstance(f, ast.FunctionDef)]
-    assert {f.name for f in functions if imports_pandas(f)} == set()
+    return {f.name for f in functions}, {f.name for f in functions if imports_pandas(f)}
+
+
+def test_map_only_wire_kernels_import_no_pandas():
+    """No function in ``sources/wire.py`` imports pandas: the four
+    mapInArrow kernels, their factories and ``encode_wire_batches``
+    (applyInArrow) all read and return Arrow."""
+    names, with_pandas = _functions_importing_pandas(wire)
+    assert with_pandas == set()
     assert {"encode_wire_batches", "decode_wire_batches", "transcode_batches",
-            "down_convert_batches", "ingest_message_sets"} <= {f.name for f in functions}
+            "down_convert_batches", "ingest_message_sets"} <= names
+
+
+def test_offsets_topic_operators_import_no_pandas():
+    """Both ``__consumer_offsets`` codec operators in ``operators/groups.py``
+    are mapInArrow kernels that import no pandas."""
+    from starlight_for_kafka_spark.operators import groups
+
+    ops = {"encode_offsets_topic", "decode_offsets_topic"}
+    names, with_pandas = _functions_importing_pandas(groups)
+    assert ops <= names
+    assert ops & with_pandas == set()
 
 
 # ---------------------------------------------------------------------------

@@ -17,7 +17,6 @@ from __future__ import annotations
 
 import json
 import os
-import re
 import sys
 import time
 
@@ -32,25 +31,6 @@ ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 # this file would shadow the standard library's ``profile``, which
 # ``cProfile`` (imported by pyspark) imports
 sys.path[0] = ROOT
-
-
-def plan_shape(plan: str) -> dict:
-    return {
-        "exchanges": len(re.findall(r"\bExchange\b", plan)),
-        "sort_merge_joins": plan.count("SortMergeJoin"),
-        "broadcast_hash_joins": plan.count("BroadcastHashJoin"),
-        "shuffled_hash_joins": plan.count("ShuffledHashJoin"),
-        "nested_loop_joins": plan.count("BroadcastNestedLoopJoin")
-        + plan.count("CartesianProduct"),
-        "batch_eval_python": plan.count("BatchEvalPython"),
-        "arrow_eval_python": plan.count("ArrowEvalPython"),
-        "map_in_arrow_or_pandas": plan.count("MapInPandas")
-        + plan.count("PythonMapInArrow")
-        + plan.count("FlatMapGroupsInPandas"),
-        "sorts": plan.count("Sort "),
-        "window_nodes": plan.count("Window"),
-        "aqe": "AdaptiveSparkPlan" in plan,
-    }
 
 
 def main() -> None:
@@ -72,7 +52,7 @@ def main() -> None:
     ).save()
 
     from starlight_for_kafka_spark.plans.checkpoints import release_session_storage
-    from starlight_for_kafka_spark.plans.inspect import plan_string
+    from starlight_for_kafka_spark.plans.inspect import plan_shape, plan_string
 
     metrics = bench_scale.StageMetrics(spark)
     out: dict[str, dict] = {}
