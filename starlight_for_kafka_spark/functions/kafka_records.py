@@ -1709,6 +1709,15 @@ def down_convert_many(
     return out
 
 
+# A legacy message is at least crc, magic, attributes and the key and
+# value lengths (v1 adds an 8-byte timestamp); both v0/v1 decoders raise
+# these for a message that ends past its set or a field that ends past
+# its message.
+_V01_MIN_SIZE = 14
+_V01_SET_ERR = "legacy message ends past its message set"
+_V01_FIELD_ERR = "legacy message field ends past its message"
+
+
 def decode_message_set_v01(buf: bytes) -> list[dict]:
     """Decode a legacy v0/v1 message set → [{offset, timestamp_ms|None,
     key, value}] (verifying each per-message CRC32, wrapper and inner).
@@ -1720,12 +1729,17 @@ def decode_message_set_v01(buf: bytes) -> list[dict]:
     NOT ``- (n-1)``, which breaks on compaction-gapped inner sets); v0
     inner offsets are already absolute. A v1
     wrapper flagged LOG_APPEND_TIME (attribute bit 3) stamps its own
-    timestamp onto every inner message, per the protocol guide."""
+    timestamp onto every inner message, per the protocol guide.
+
+    Raises ``ValueError`` when a message ends past its set, or its
+    timestamp, key or value ends past the message."""
     out = []
     pos = 0
     while pos < len(buf):
+        size = int.from_bytes(buf[pos + 8 : pos + 12], "big", signed=True)
+        if not _V01_MIN_SIZE <= size <= len(buf) - pos - 12:
+            raise ValueError(_V01_SET_ERR)
         offset = struct.unpack_from(">q", buf, pos)[0]
-        size = struct.unpack_from(">i", buf, pos + 8)[0]
         msg = buf[pos + 12 : pos + 12 + size]
         crc = struct.unpack_from(">I", msg, 0)[0]
         if zlib.crc32(msg[4:]) & 0xFFFFFFFF != crc:
@@ -1735,18 +1749,24 @@ def decode_message_set_v01(buf: bytes) -> list[dict]:
         mpos = 6
         ts = None
         if magic == 1:
+            if size < _V01_MIN_SIZE + 8:
+                raise ValueError(_V01_FIELD_ERR)
             ts = struct.unpack_from(">q", msg, mpos)[0]
             mpos += 8
         klen = struct.unpack_from(">i", msg, mpos)[0]
         mpos += 4
         key = None
         if klen >= 0:
+            if mpos + klen + 4 > size:
+                raise ValueError(_V01_FIELD_ERR)
             key = bytes(msg[mpos : mpos + klen])
             mpos += klen
         vlen = struct.unpack_from(">i", msg, mpos)[0]
         mpos += 4
         value = None
         if vlen >= 0:
+            if mpos + vlen > size:
+                raise ValueError(_V01_FIELD_ERR)
             value = bytes(msg[mpos : mpos + vlen])
             mpos += vlen
         codec_id = attributes & 0x07
@@ -1792,7 +1812,10 @@ def decode_message_sets_v01_many(bufs: list[bytes]):
     every interior field, the CRC verify batch, and the v1
     relative-offset fixups run over ALL messages at once (guide §4.2),
     replacing the per-message dict construction that dominated the
-    scalar ingest path."""
+    scalar ingest path. Raises ``ValueError`` on the same malformed sets
+    as the scalar decoder: the walk bounds each message by its set, and
+    one vectorized comparison bounds every timestamp, key and value by
+    its message."""
     import numpy as np
     import pyarrow as pa
 
@@ -1813,6 +1836,8 @@ def decode_message_sets_v01_many(bufs: list[bytes]):
         blen = len(buf)
         while pos < blen:
             size = from_bytes(buf[pos + 8 : pos + 12], "big", signed=True)
+            if not _V01_MIN_SIZE <= size <= blen - pos - 12:
+                raise ValueError(_V01_SET_ERR)
             start = pos + 12
             attributes = buf[start + 5]
             codec_id = attributes & 0x07
@@ -1828,11 +1853,15 @@ def decode_message_sets_v01_many(bufs: list[bytes]):
                 mpos = 6
                 wts = None
                 if magic == 1:
+                    if size < _V01_MIN_SIZE + 8:
+                        raise ValueError(_V01_FIELD_ERR)
                     wts = from_bytes(msg[6:14], "big", signed=True)
                     mpos += 8
                 klen = from_bytes(msg[mpos : mpos + 4], "big", signed=True)
                 mpos += 4
                 if klen >= 0:
+                    if mpos + klen + 4 > size:
+                        raise ValueError(_V01_FIELD_ERR)
                     mpos += klen
                 vlen = from_bytes(msg[mpos : mpos + 4], "big", signed=True)
                 mpos += 4
@@ -1840,6 +1869,8 @@ def decode_message_sets_v01_many(bufs: list[bytes]):
                     raise ValueError(
                         "compressed wrapper message with null value"
                     )
+                if mpos + vlen > size:
+                    raise ValueError(_V01_FIELD_ERR)
                 value = bytes(msg[mpos : mpos + vlen])
                 payload = (
                     decode_kafka_lz4(value)
@@ -1893,7 +1924,9 @@ def decode_message_sets_v01_many(bufs: list[bytes]):
     for b in segs:
         seg_base.append(acc)
         acc += len(b)
-    big = b"".join(segs)
+    # 8 zero bytes of tail padding keep every length read below inside
+    # the array, even for a v1 message too short for its timestamp
+    big = b"".join(segs + [bytes(8)])
     arr = np.frombuffer(big, dtype=np.uint8)
     starts = np.fromiter(
         (seg_base[si] + st for si, st in zip(msg_buf, msg_start)), np.int64, n
@@ -1908,8 +1941,10 @@ def decode_message_sets_v01_many(bufs: list[bytes]):
     crc_field = be(starts, 4, signed=False)
     magic = arr[starts + 4].astype(np.int64)
     ts_w = np.where(magic >= 1, 8, 0)
+    room = sizes - _V01_MIN_SIZE - ts_w  # bytes left for key and value
     klen = be(starts + 6 + ts_w, 4)
-    kbytes = np.maximum(klen, 0)
+    # a key running past the message is clamped here and rejected below
+    kbytes = np.minimum(np.maximum(klen, 0), np.maximum(room, 0))
     vlen_start = starts + 10 + ts_w + kbytes
     vlen = be(vlen_start, 4)
     vbytes = np.maximum(vlen, 0)
@@ -1930,6 +1965,8 @@ def decode_message_sets_v01_many(bufs: list[bytes]):
     )
     if (got != crc_field).any():
         raise ValueError("CRC32 mismatch")
+    if (np.maximum(klen, 0) + vbytes > room).any():
+        raise ValueError(_V01_FIELD_ERR)
 
     keys = _binary_array(arr, starts + 10 + ts_w, klen)
     values = _binary_array(arr, vlen_start + 4, vlen)

@@ -33,8 +33,10 @@ accident; from /tmp it fails loudly if a kernel isn't pickled by value.
 
 Defaults to /root/testdata/sf0.01 (the driver's grading scale) and all
 entries. The last line is one JSON object: ``entries``, ``bad``,
-``seconds`` and ``bad_names``. Exit code 0 iff every entry has an oracle
-and is exact in every lane; an entry without an oracle counts as bad.
+``seconds`` and ``bad_names``. Exit code 0 iff every entry is exact in
+every lane; a name that is not a query counts as bad. Every query
+carries its oracle (``@oracle``), so ``oracle_sql()`` itself fails on a
+builder without one.
 """
 
 from __future__ import annotations
@@ -190,9 +192,9 @@ def main() -> int:
     t0 = time.time()
     bad = []
     for name in todo:
-        if name not in os_:
+        if name not in qs:
             bad.append(name)
-            print(f"{name} NO ORACLE", flush=True)
+            print(f"{name} UNKNOWN QUERY", flush=True)
             continue
         try:
             sdf = qs[name](spark, sf)

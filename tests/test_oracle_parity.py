@@ -13,6 +13,7 @@ import pytest
 
 import __spark_entry__ as entrymod
 import oracle_rows
+from sweep import _spark_family
 from tests.conftest import SF_DIR
 
 TABLES = [
@@ -73,26 +74,24 @@ def test_every_query_has_an_oracle_and_every_oracle_a_query():
 
 
 def _declared_twice(source: str) -> list[str]:
-    """Names declared twice in ``source``: a ``def q_*`` defined again (the
-    later one silently replaces the earlier in ``queries()``) or a key
-    repeated in a dict literal of ``oracle_sql()`` (the later oracle
-    silently wins)."""
+    """``def q_*`` names defined twice in ``source``: the later builder,
+    with its oracle, silently replaces the earlier in ``queries()``."""
     top = [n for n in ast.parse(source).body if isinstance(n, ast.FunctionDef)]
-    counts = [Counter(n.name for n in top if n.name.startswith("q_"))]
-    for fn in top:
-        if fn.name == "oracle_sql":
-            counts += [
-                Counter(k.value for k in d.keys if isinstance(k, ast.Constant))
-                for d in ast.walk(fn)
-                if isinstance(d, ast.Dict)
-            ]
-    return sorted(name for c in counts for name, n in c.items() if n > 1)
+    counts = Counter(n.name for n in top if n.name.startswith("q_"))
+    return sorted(name for name, n in counts.items() if n > 1)
 
 
 def test_no_query_or_oracle_is_declared_twice():
+    # a query and its oracle are one declaration: the decorated def q_*
     assert _declared_twice(pathlib.Path(entrymod.__file__).read_text()) == []
     assert _declared_twice("def q_a(): pass\ndef q_a(): pass\n") == ["q_a"]
-    assert _declared_twice('def oracle_sql():\n    return {"a": "x", "a": "y"}\n') == ["a"]
+
+
+def test_a_query_without_an_oracle_is_named(monkeypatch):
+    # oracle_sql() refuses a q_* builder that carries no @oracle(...)
+    monkeypatch.setattr(entrymod, "q_zz_bare", lambda spark, sf_dir: None, raising=False)
+    with pytest.raises(ValueError, match="zz_bare"):
+        entrymod.oracle_sql()
 
 
 def test_entry_smoke(spark):
@@ -148,34 +147,6 @@ def _duck_family(t: str) -> str:
     if t.startswith("MAP"):
         return "map"
     return t
-
-
-def _spark_family(dt) -> str:
-    s = dt.simpleString()
-    if s in ("tinyint", "smallint", "int", "bigint"):
-        return "int"
-    if s in ("float", "double"):
-        return "float"
-    if s.startswith("decimal"):
-        # width-strict, mirroring _duck_family and sweep.py (r9 leak)
-        return s.replace(" ", "")
-    if s == "boolean":
-        return "bool"
-    if s in ("string", "varchar"):
-        return "str"
-    if s == "binary":
-        return "bin"
-    if s.startswith("timestamp"):
-        return "ts"
-    if s == "date":
-        return "date"
-    if s.startswith("array"):
-        return "list"
-    if s.startswith("struct"):
-        return "struct"
-    if s.startswith("map"):
-        return "map"
-    return s
 
 
 def test_no_hugeint_or_type_divergent_oracle_columns(query_schemas, duck):

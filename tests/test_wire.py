@@ -4,6 +4,7 @@ roundtrip through Spark, magic down-conversion."""
 from __future__ import annotations
 
 import struct
+import zlib
 
 from pyspark.sql import functions as F
 
@@ -781,6 +782,66 @@ def test_decode_message_sets_v01_many_matches_scalar():
     assert ts.to_pylist() == [r["timestamp_ms"] for r in flat]
     assert keys.to_pylist() == [r["key"] for r in flat]
     assert values.to_pylist() == [r["value"] for r in flat]
+
+
+def _legacy_message(offset: int, body: bytes) -> bytes:
+    """A legacy message: offset, size, then a valid CRC32 over ``body``
+    (magic onward), whatever lengths ``body`` declares."""
+    msg = struct.pack(">I", zlib.crc32(body) & 0xFFFFFFFF) + body
+    return struct.pack(">qi", offset, len(msg)) + msg
+
+
+def test_legacy_decoders_bound_fields_and_message_sizes():
+    """Both legacy decoders raise ValueError, naming the reason, when a
+    timestamp, key or value ends past its message (CRC valid) or a
+    message ends past its set; the good message before it changes
+    nothing."""
+    import pytest
+
+    good = kr._encode_message_v01(0, 1700000000000, b"k", b"v", 1)
+    ts = struct.pack(">q", 1700000000001)
+    field_cases = {
+        # the v1 message of 30 bytes whose key length is 1000
+        "v1 key": b"\x01\x00" + ts + struct.pack(">i", 1000) + bytes(12),
+        "v0 key": b"\x00\x00" + struct.pack(">i", 9) + b"abc" + struct.pack(">i", -1),
+        "v1 value": b"\x01\x00" + ts + struct.pack(">ii", -1, 50) + b"abcd",
+        "v0 value": b"\x00\x00" + struct.pack(">ii", 1, 5) + b"k" + b"ab",
+        "v1 timestamp": b"\x01\x00" + ts + b"\x00\x00",
+        "wrapper key": (
+            b"\x01" + bytes([kr._LEGACY_CODECS["gzip"]]) + ts
+            + struct.pack(">i", 400) + bytes(8)
+        ),
+        "wrapper value": (
+            b"\x01" + bytes([kr._LEGACY_CODECS["gzip"]]) + ts
+            + struct.pack(">ii", -1, 400) + bytes(8)
+        ),
+    }
+    bad_sets = {
+        name: good + _legacy_message(1, body) for name, body in field_cases.items()
+    }
+    longer = bytearray(good)
+    longer[8:12] = struct.pack(">i", len(good) - 12 + 5)
+    shorter = bytearray(good)
+    shorter[8:12] = struct.pack(">i", -12)
+    set_cases = {
+        "size past the set": good + bytes(longer),
+        "negative size": good + bytes(shorter),
+        "size under the fixed fields": good + struct.pack(">qi", 1, 5) + bytes(5),
+        "truncated header": good + good[:7],
+    }
+    for cases, reason in (
+        (bad_sets, "field ends past its message"),
+        (set_cases, "ends past its message set"),
+    ):
+        for name, buf in cases.items():
+            with pytest.raises(ValueError, match=reason):
+                kr.decode_message_set_v01(buf)
+            with pytest.raises(ValueError, match=reason):
+                kr.decode_message_sets_v01_many([good, buf])
+    # the bounds admit a message whose value ends exactly at its size
+    exact = good + _legacy_message(1, b"\x00\x00" + struct.pack(">ii", -1, 2) + b"ab")
+    assert [r["value"] for r in kr.decode_message_set_v01(exact)] == [b"v", b"ab"]
+    assert kr.decode_message_sets_v01_many([exact])[3].to_pylist() == [b"v", b"ab"]
 
 
 def _restamp(blob, fix_length=True) -> bytes:
